@@ -43,13 +43,26 @@ def add_sequential_ids(
     ordinals. localCheckpoint pins the materialized partitioning before
     either job runs — unlike .cache() its blocks are reclaimed by the
     ContextCleaner once the DataFrame is unreferenced, so repeated
-    ingests don't accumulate pinned storage.
+    ingests don't accumulate pinned storage.  Callers that must free
+    the pin at a known point use ``sequential_ids``.
     """
-    df = df.withColumn("__pid", F.spark_partition_id()).localCheckpoint()
-    w = Window.partitionBy("__pid").orderBy(order_col if order_col else F.monotonically_increasing_id())
-    with_ord = df.withColumn("__ord", F.row_number().over(w) - 1)
+    return sequential_ids(df, id_col, order_col, start)[0]
 
-    counts = {r["__pid"]: r["cnt"] for r in df.groupBy("__pid").agg(F.count("*").alias("cnt")).collect()}
+
+def sequential_ids(
+    df: DataFrame,
+    id_col: str = "doc_id",
+    order_col: str | None = None,
+    start: int = 0,
+) -> tuple[DataFrame, DataFrame]:
+    """``add_sequential_ids`` plus the partition pin it checkpointed, so
+    a caller that materializes the result can release the pin at once
+    (the vector store does, after each committed table version)."""
+    pinned = df.withColumn("__pid", F.spark_partition_id()).localCheckpoint()
+    w = Window.partitionBy("__pid").orderBy(order_col if order_col else F.monotonically_increasing_id())
+    with_ord = pinned.withColumn("__ord", F.row_number().over(w) - 1)
+
+    counts = {r["__pid"]: r["cnt"] for r in pinned.groupBy("__pid").agg(F.count("*").alias("cnt")).collect()}
     offsets, acc = {}, start
     for pid in sorted(counts):
         offsets[pid] = acc
@@ -59,8 +72,9 @@ def add_sequential_ids(
     offsets_df = spark.createDataFrame(
         [(pid, off) for pid, off in offsets.items()] or [(0, start)], "__pid INT, __off LONG"
     )
-    return (
+    ids = (
         with_ord.join(F.broadcast(offsets_df), "__pid", "left")
         .withColumn(id_col, (F.coalesce(F.col("__off"), F.lit(start)) + F.col("__ord")).cast("long"))
         .drop("__pid", "__ord", "__off")
     )
+    return ids, pinned

@@ -24,8 +24,13 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from langchain_memvid_spark.exceptions import IndexError_
-from langchain_memvid_spark.functions.vector import cosine_sim
-from langchain_memvid_spark.operators.quantize import int8_dot, quantize_cols, query_codes
+from langchain_memvid_spark.functions.vector import cosine_sim, vector_literal
+from langchain_memvid_spark.operators.quantize import (
+    int8_dot,
+    int8_dot_lit,
+    quantize_cols,
+    query_codes,
+)
 
 
 def nlist_for_corpus(n: int, *, target_cluster: int = 250, floor: int = 8) -> int:
@@ -101,7 +106,7 @@ def _centroid_entries(
     entries = []
     if metric == "l2":
         for cid, c in sorted(centroids, key=lambda ic: ic[0]):
-            carr = F.array(*[F.lit(float(x)) for x in c])
+            carr = vector_literal(c)
             entries.append(
                 F.struct((-l2_sq(vec_col, carr)).alias("sim"), F.lit(-int(cid)).alias("nid"))
             )
@@ -112,7 +117,7 @@ def _centroid_entries(
         if cn == 0.0:
             sim = F.lit(0.0)
         else:
-            carr = F.array(*[F.lit(float(x)) for x in c])
+            carr = vector_literal(c)
             sim = F.when(vnorm > 0, dot(vec_col, carr) / (vnorm * F.lit(cn))).otherwise(
                 F.lit(0.0)
             )
@@ -338,7 +343,7 @@ class IVFIndex:
             raise IndexError_("IVF layout not written; call write_layout first")
         probes = self.probe_clusters(qvec, nprobe)
         corpus = spark.read.parquet(self.path).filter(F.col("cluster_id").isin(probes))
-        q = F.array(*[F.lit(float(x)) for x in qvec])
+        q = vector_literal(qvec)
         if self.metric == "l2":
             from langchain_memvid_spark.functions.vector import l2_sq
 
@@ -352,10 +357,9 @@ class IVFIndex:
             if "qvec" not in corpus.columns:
                 qs, qv = quantize_cols(F.col(vec_col))
                 corpus = corpus.withColumn("qscale", qs).withColumn("qvec", qv)
-            qc = F.array(*[F.lit(c) for c in query_codes(qvec)])
             cands = (
                 corpus.select(id_col, "qscale", "qvec")
-                .withColumn("__qs", int8_dot(F.col("qvec"), qc))
+                .withColumn("__qs", int8_dot_lit("qvec", query_codes(qvec)))
                 .orderBy(
                     (F.col("__qs").cast("double") * F.col("qscale")).desc(),
                     F.col(id_col).asc(),

@@ -40,6 +40,7 @@ import time
 from dataclasses import dataclass, field
 from typing import Any, Iterable
 
+from pyspark import StorageLevel
 from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -55,7 +56,7 @@ from pyspark.sql.types import (
 )
 
 from langchain_memvid_spark.config import EngineConfig
-from langchain_memvid_spark.core.ids import add_sequential_ids
+from langchain_memvid_spark.core.ids import sequential_ids
 from langchain_memvid_spark.embeddings import HashEmbeddings
 from langchain_memvid_spark.exceptions import (
     FilterError,
@@ -63,9 +64,16 @@ from langchain_memvid_spark.exceptions import (
     RetrievalError,
     StorageError,
 )
-from langchain_memvid_spark.functions.vector import dot, l2_normalize, l2_sq
+from langchain_memvid_spark.functions.vector import (
+    dot,
+    dot_lit,
+    l2_normalize,
+    l2_sq,
+    l2_sq_lit,
+)
 from langchain_memvid_spark.operators.quantize import (
     int8_dot,
+    int8_dot_lit,
     quantize4_cols,
     quantize_cols,
     query_codes,
@@ -406,6 +414,39 @@ def _canonical_meta_json(meta: dict[str, Any]) -> str:
     )
 
 
+# Table versions.  Every mutation (ingest, delete, renumber) builds the
+# next doc_index/payload from the current ones and commits it through
+# _materialize: a local checkpoint (DISK_ONLY) with an in-memory
+# columnar cache on top, both filled by the one count the mutation
+# runs anyway.  The checkpoint makes the version a lineage-free leaf,
+# so the plan every read analyses stays the same size however many
+# mutations came before; the cache keeps the columnar
+# InMemoryTableScan that lets the int8 first pass read codes only,
+# with a single in-memory copy.  The superseded version, and every
+# checkpoint the mutation took on the way, is released through
+# _release before the mutation returns, not left for GC.
+#
+# Local checkpoints live in executor block storage: losing an executor
+# loses the blocks and fails the store, as it always has.  Reliable
+# materialization (checkpoint to shared storage) is an open item.
+
+
+def _materialize(df: DataFrame) -> DataFrame:
+    """The next table version: a DISK_ONLY local checkpoint leaf with a
+    columnar cache over it, both filled by the next action."""
+    return df.localCheckpoint(eager=False, storageLevel=StorageLevel.DISK_ONLY).cache()
+
+
+def _release(df: DataFrame) -> None:
+    """Free a superseded version or a per-call checkpoint now: its cache
+    entry, and the checkpointed RDD behind it when it is a checkpoint
+    leaf (a parquet scan or a local relation holds no blocks)."""
+    df.unpersist()
+    plan = df._jdf.queryExecution().logical()
+    if plan.nodeName() == "LogicalRDD":
+        plan.rdd().unpersist(False)
+
+
 class SparkVectorStore:
     """PySpark-native vector store with the reference's API surface."""
 
@@ -586,7 +627,7 @@ class SparkVectorStore:
         )
 
         batch_ids = staged.select(F.col("__pos").alias("doc_id"), "text")
-        sig_new = minhash_signatures(batch_ids).localCheckpoint()
+        sig_new = minhash_signatures(batch_ids).localCheckpoint()  # released below
         if self.config.index.near_dedup and self._count > 0:
             # corpus rows from pre-signature files (legacy layouts) read
             # mh as NULL — they simply don't participate in the gate
@@ -618,7 +659,7 @@ class SparkVectorStore:
         # offset pattern (core/ids.py). Ids follow __pos globally with NO
         # single-reducer stage, and the embed UDF below runs across all
         # partitions instead of being funneled through coalesce(1).
-        staged = add_sequential_ids(
+        staged, id_pin = sequential_ids(
             staged.repartitionByRange(n_parts, "__pos"),
             id_col="doc_id",
             order_col="__pos",
@@ -694,10 +735,10 @@ class SparkVectorStore:
                 idx = self._backfill_derived_cols(idx)
             self._doc_index = idx
         else:
-            self._doc_index = self._doc_index.unionByName(new_index).cache()
-        self._payload = self._payload.unionByName(new_payload).cache()
+            self._doc_index = _materialize(self._doc_index.unionByName(new_index))
+        self._payload = _materialize(self._payload.unionByName(new_payload))
         self._count = self._doc_index.count()
-        # ONE job materializes the payload cache AND measures the
+        # ONE job materializes the payload version AND measures the
         # batch: new rows are exactly doc_id >= start_count (ids are
         # contiguous 0..n-1 and appends come after any renumbering)
         prow = self._payload.agg(
@@ -707,11 +748,8 @@ class SparkVectorStore:
             ).alias("batch_b"),
         ).collect()[0]
         batch_payload_bytes = int(prow["batch_b"] or 0)
-        # the new tables are materialized — release the superseded
-        # cache entries so repeated ingests don't pin storage forever
-        old_index.unpersist()
-        old_payload.unpersist()
-        self._maybe_truncate_lineage()
+        for df in (old_index, old_payload, sig_new, id_pin):
+            _release(df)
         self._maybe_build_ivf()
         from langchain_memvid_spark.types import BuildStats
 
@@ -795,7 +833,7 @@ class SparkVectorStore:
         # so any foreign (save-snapshot) origin no longer applies
         self._layout_derived = False
         self._layout_foreign = False
-        old.unpersist()
+        _release(old)
 
     _IVF_TRAIN_CAP = 100_000  # KMeans training-sample row bound
 
@@ -911,32 +949,6 @@ class SparkVectorStore:
             .orderBy("cluster_id")
         )
 
-    # Each append/delete nests the logical plan one level deeper
-    # (union/anti-join over the previous plan). Caching bounds
-    # RECOMPUTATION but not driver-side plan processing — thousands of
-    # appends in one session would bloat analysis/optimization time.
-    # localCheckpoint() every N mutations truncates the lineage to a
-    # scan of materialized blocks (same trick dedup.py's iterative
-    # connected-components uses per round).
-    _CHECKPOINT_EVERY = 16
-
-    def _maybe_truncate_lineage(self) -> None:
-        self._mutations = getattr(self, "_mutations", 0) + 1
-        if self._mutations < self._CHECKPOINT_EVERY:
-            return
-        self._mutations = 0
-        pay_cp = self._payload.localCheckpoint(eager=True)
-        self._payload.unpersist()
-        self._payload = pay_cp
-        if self._ivf is not None:
-            # doc_index is already a materialized parquet scan (the IVF
-            # layout) — checkpointing it would only copy the corpus into
-            # block storage and DROP the partition pruning
-            return
-        idx_cp = self._doc_index.localCheckpoint(eager=True)
-        self._doc_index.unpersist()
-        self._doc_index = idx_cp
-
     def add_documents(self, documents: Iterable[Any]) -> list[str]:
         texts = [d.page_content if hasattr(d, "page_content") else d["text"] for d in documents]
         metas = [d.metadata if hasattr(d, "metadata") else d.get("metadata", {}) for d in documents]
@@ -946,9 +958,9 @@ class SparkVectorStore:
         """≙ Encoder.clear (encoder.py:229-232): drop everything staged/
         stored and reset to an empty corpus. Ingest here is atomic (no
         separate staging buffer), so clearing means truncating both
-        tables (and releasing their cache entries)."""
-        self._doc_index.unpersist()
-        self._payload.unpersist()
+        tables (and releasing their versions)."""
+        _release(self._doc_index)
+        _release(self._payload)
         self._doc_index = self.spark.createDataFrame([], INDEX_SCHEMA)
         self._payload = self.spark.createDataFrame([], PAYLOAD_SCHEMA)
         self._count = 0
@@ -969,11 +981,10 @@ class SparkVectorStore:
         embedding column is never touched until the re-rank.
         FAISS SQ8+refine analog (the reference scans flat float32,
         /root/reference/src/langchain_memvid/index.py:144-148)."""
-        qc = F.array(*[F.lit(c) for c in query_codes(qvec)])
         src = base if base is not None else self._doc_index
         return (
             src.select("doc_id", "qscale", "qvec")
-            .withColumn("__qscore", int8_dot(F.col("qvec"), qc))
+            .withColumn("__qscore", int8_dot_lit("qvec", query_codes(qvec)))
             .orderBy(
                 (F.col("__qscore").cast("double") * F.col("qscale")).desc(),
                 F.col("doc_id").asc(),
@@ -1041,7 +1052,6 @@ class SparkVectorStore:
             F.col("similarity").asc() if asc else F.col("similarity").desc(),
             F.col("doc_id").asc(),
         ]
-        q = F.array(*[F.lit(float(x)) for x in qvec])
         cand = self.config.index.rerank_candidates
         if self.config.index.metric != "l2" and 0 < cand < self._count:
             why.append(
@@ -1051,17 +1061,17 @@ class SparkVectorStore:
             )
             cands = self._phase1_candidates(qvec, max(cand, k), base=base)
             scored = base.join(F.broadcast(cands), "doc_id").withColumn(
-                "similarity", dot(F.col("embedding"), q)
+                "similarity", dot_lit("embedding", qvec)
             )
         elif self.config.index.metric == "l2":
             why.append("l2 metric: direct exact scan (int8 pass is a dot surrogate)")
-            scored = base.withColumn("similarity", l2_sq(F.col("embedding"), q))
+            scored = base.withColumn("similarity", l2_sq_lit("embedding", qvec))
         else:
             why.append(
                 f"direct exact scan (corpus={self._count}, "
                 f"rerank_candidates={cand}: two passes would not pay)"
             )
-            scored = base.withColumn("similarity", dot(F.col("embedding"), q))
+            scored = base.withColumn("similarity", dot_lit("embedding", qvec))
         return scored.orderBy(*order).limit(k), strategy, "; ".join(why)
 
     def explain_search(
@@ -1120,8 +1130,13 @@ class SparkVectorStore:
         filter: dict[str, Any] | None = None,
         nprobe: int | None = None,
     ) -> list[tuple[dict[str, Any], float]]:
-        """≙ vectorstore.py:659-684. Broadcast query vector → JVM-side
-        dot product → TakeOrderedAndProject top-k (no full sort).
+        """≙ vectorstore.py:659-684. The query vector is inlined as one
+        array literal inside one SQL scoring expression (functions/
+        vector.py dot_lit), scored JVM-side over the current table
+        version → TakeOrderedAndProject top-k (no full sort). Versions
+        are lineage-free leaves (see _materialize), so planning a search
+        costs a fixed number of driver→JVM calls whatever the dimension
+        and however many mutations came before.
 
         ``filter`` (LangChain-standard, beyond the reference) restricts
         the search to rows whose metadata equals every given key/value
@@ -1709,7 +1724,10 @@ class SparkVectorStore:
         if include_full_metadata:
             df = df.join(self._payload, "doc_id", "left")
         out = []
-        for r in df.orderBy("doc_id").collect():
+        # ids are unique: sorting the collected rows here keeps the
+        # lookup one Spark job (a global orderBy would add a sampling
+        # job and a range shuffle)
+        for r in sorted(df.collect(), key=lambda r: r["doc_id"]):
             meta = json.loads(r["metadata_json"] or "{}")
             meta["metadata_type"] = "essential"
             if include_full_metadata and r["payload_json"] is not None:
@@ -1731,17 +1749,18 @@ class SparkVectorStore:
 
     # ---------------------------------------------------------------- deletes
 
-    def _renumber(self) -> None:
-        """Reassign ids 0..n-1 after delete, mirroring index.py:433-435.
-        No re-embedding (the reference only re-embeds because FAISS flat
+    def _renumber(self, index: DataFrame, payload: DataFrame) -> None:
+        """Commit the surviving rows of a delete as the next version,
+        ids reassigned 0..n-1 (mirroring index.py:433-435). No
+        re-embedding (the reference only re-embeds because FAISS flat
         lacks remove-by-id — SURVEY.md §4 defect 1).
 
         Id compaction is the two-phase offset pattern over a range
         partitioning of the surviving ids (core/ids.py) — no global
         single-reducer window; survives a 100x corpus."""
         n_parts = max(1, self.spark.sparkContext.defaultParallelism)
-        old_new = add_sequential_ids(
-            self._doc_index.select("doc_id").repartitionByRange(n_parts, "doc_id"),
+        old_new, id_pin = sequential_ids(
+            index.select("doc_id").repartitionByRange(n_parts, "doc_id"),
             id_col="__new_id",
             order_col="doc_id",
             start=0,
@@ -1755,7 +1774,7 @@ class SparkVectorStore:
         if self._ivf is not None:
             idx_cols.append("cluster_id")  # assignments survive deletes
         renumbered = (
-            self._doc_index.join(old_new, "doc_id")
+            index.join(old_new, "doc_id")
             .drop("doc_id")
             .withColumnRenamed("__new_id", "doc_id")
             .select(*idx_cols)
@@ -1766,19 +1785,17 @@ class SparkVectorStore:
             # plan reads the OLD files while writing the new ones)
             self._swap_layout(renumbered)
         else:
-            self._doc_index = renumbered.cache()
-        self._payload = (
-            self._payload.join(old_new, "doc_id")
+            self._doc_index = _materialize(renumbered)
+        self._payload = _materialize(
+            payload.join(old_new, "doc_id")
             .drop("doc_id")
             .withColumnRenamed("__new_id", "doc_id")
             .select("doc_id", "payload_json")
-            .cache()
         )
         self._count = self._doc_index.count()
         self._payload.count()
-        old_index.unpersist()
-        old_payload.unpersist()
-        self._maybe_truncate_lineage()
+        for df in (old_index, old_payload, id_pin):
+            _release(df)
 
     def delete_by_ids(self, doc_ids: list[int | str]) -> bool:
         """≙ vectorstore.py:290-352 / index.py:347-376: validate, anti-join
@@ -1793,16 +1810,10 @@ class SparkVectorStore:
         bad = [i for i in ids if i < 0 or i >= self._count]
         if bad:
             raise IndexError_(f"doc ids out of range: {bad}")
-        # hold the CACHED pre-delete tables: the reassignment below
-        # replaces them with derived (uncached) filter plans, so
-        # _renumber's own unpersist would no-op and leak one cache
-        # entry per table per delete
-        old_index, old_payload = self._doc_index, self._payload
-        self._doc_index = self._filter_ids(self._doc_index, ids, keep=False)
-        self._payload = self._filter_ids(self._payload, ids, keep=False)
-        self._renumber()
-        old_index.unpersist()
-        old_payload.unpersist()
+        self._renumber(
+            self._filter_ids(self._doc_index, ids, keep=False),
+            self._filter_ids(self._payload, ids, keep=False),
+        )
         return True
 
     # A literal isin() embeds every id in the plan — fine for a handful,
@@ -1832,17 +1843,16 @@ class SparkVectorStore:
             .withColumn("__rn", F.row_number().over(w))
             .filter(F.col("__rn") == 1)
             .select("doc_id")
-            .localCheckpoint()  # materialized once; reclaimed on GC
+            .localCheckpoint()  # materialized once; released below
         )
-        if not victims.head(1):
-            return False
-        old_index, old_payload = self._doc_index, self._payload
-        self._doc_index = self._doc_index.join(victims, "doc_id", "left_anti")
-        self._payload = self._payload.join(victims, "doc_id", "left_anti")
-        self._renumber()
-        old_index.unpersist()
-        old_payload.unpersist()
-        return True
+        found = bool(victims.head(1))
+        if found:
+            self._renumber(
+                self._doc_index.join(victims, "doc_id", "left_anti"),
+                self._payload.join(victims, "doc_id", "left_anti"),
+            )
+        _release(victims)
+        return found
 
     def delete_documents(self, documents: Iterable[Any]) -> bool:
         texts = [d.page_content if hasattr(d, "page_content") else d["text"] for d in documents]

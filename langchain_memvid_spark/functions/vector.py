@@ -12,6 +12,9 @@ results are stable and match the DuckDB oracle (which also upcasts).
 
 from __future__ import annotations
 
+import math
+from typing import Sequence
+
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
@@ -75,4 +78,59 @@ def l2_sq(a: Column, b: Column) -> Column:
         F.zip_with(_as_double(a), _as_double(b), lambda x, y: (x - y) * (x - y)),
         F.lit(0.0),
         lambda acc, x: acc + x,
+    )
+
+
+# ---------------------------------------------------------------- literals
+# A driver-side vector inlined as ``F.array(*[F.lit(x) ...])`` costs
+# several py4j round trips PER ELEMENT, and each Python lambda of the
+# Column HOFs above a few more: at dim=512 building one query plan took
+# hundreds of driver<->JVM calls.  The forms below render the vector as
+# SQL text and parse it in ONE ``F.expr`` call, so the cost of planning
+# a literal-vector expression no longer depends on the dimension.
+
+
+def _double_sql(x: float) -> str:
+    """One double as SQL text that parses to the same bits: ``repr`` is
+    the shortest round-tripping decimal and the ``D`` suffix makes it a
+    DOUBLE literal (parsed with Java's correctly rounded parseDouble).
+    Non-finite values have no literal syntax and become casts."""
+    x = float(x)
+    if math.isfinite(x):
+        return f"{x!r}D"
+    name = "NaN" if math.isnan(x) else ("Infinity" if x > 0 else "-Infinity")
+    return f"CAST('{name}' AS DOUBLE)"
+
+
+def _vector_sql(vec: Sequence[float]) -> str:
+    """SQL text of an array<double> literal; bit-identical to
+    ``F.array(*[F.lit(float(x)) for x in vec])``."""
+    return "array(" + ", ".join(_double_sql(x) for x in vec) + ")"
+
+
+def vector_literal(vec: Sequence[float]) -> Column:
+    """A Python vector as an array<double> literal column, built in a
+    single driver->JVM call."""
+    return F.expr(_vector_sql(vec))
+
+
+def col_sql(name: str) -> str:
+    """A column name as a quoted SQL identifier."""
+    return "`" + name.replace("`", "``") + "`"
+
+
+def dot_lit(col: str, vec: Sequence[float]) -> Column:
+    """``dot(F.col(col), vector_literal(vec))`` as one SQL expression:
+    same casts, same left-to-right double fold, same bits."""
+    return F.expr(
+        f"aggregate(zip_with(transform({col_sql(col)}, x -> CAST(x AS DOUBLE)), "
+        f"{_vector_sql(vec)}, (x, y) -> x * y), 0.0D, (acc, x) -> acc + x)"
+    )
+
+
+def l2_sq_lit(col: str, vec: Sequence[float]) -> Column:
+    """``l2_sq(F.col(col), vector_literal(vec))`` as one SQL expression."""
+    return F.expr(
+        f"aggregate(zip_with(transform({col_sql(col)}, x -> CAST(x AS DOUBLE)), "
+        f"{_vector_sql(vec)}, (x, y) -> (x - y) * (x - y)), 0.0D, (acc, x) -> acc + x)"
     )

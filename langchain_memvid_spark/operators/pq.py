@@ -38,6 +38,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType, ByteType
 
 from langchain_memvid_spark.exceptions import IndexError_
+from langchain_memvid_spark.functions.vector import vector_literal
 
 
 def pq_train(
@@ -146,7 +147,7 @@ def _adc_score(codes_col: Column, tables: list[list[float]]) -> Column:
     lookups over broadcast literal arrays — whole-stage codegen)."""
     terms = [
         F.element_at(
-            F.array(*[F.lit(float(v)) for v in tables[j]]),
+            vector_literal(tables[j]),
             codes_col[j].cast("int") + 1,
         )
         for j in range(len(tables))
@@ -187,7 +188,7 @@ def pq_topk(
         .limit(max(rerank, k))
         .select(id_col, "adc_score")
     )
-    qarr = F.array(*[F.lit(float(x)) for x in qvec])
+    qarr = vector_literal(qvec)
     return (
         coded.join(F.broadcast(first), id_col)
         .withColumn("sim", F.round(cosine_sim(F.col(vec_col), qarr), 4))
@@ -235,7 +236,7 @@ def pq_reconstruction_stats(
     # reconstruct[j] = codebook_j[code_j]: build as JVM expression
     parts = [
         F.element_at(
-            F.array(*[F.array(*[F.lit(float(x)) for x in c]) for c in codebooks[j]]),
+            F.array(*[vector_literal(c) for c in codebooks[j]]),
             F.col(codes_col)[j].cast("int") + 1,
         )
         for j in range(m)

@@ -18,7 +18,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from langchain_memvid_spark.functions.vector import cosine_sim
+from langchain_memvid_spark.functions.vector import col_sql, cosine_sim
 
 
 def _scale(v: Column) -> Column:
@@ -55,6 +55,17 @@ def int8_dot(qvec: Column, query_codes: Column) -> Column:
         F.zip_with(qvec, query_codes, lambda a, b: a.cast("long") * b.cast("long")),
         F.lit(0).cast("long"),
         lambda acc, x: acc + x,
+    )
+
+
+def int8_dot_lit(col: str, codes: list[int]) -> Column:
+    """``int8_dot(F.col(col), <codes as an int array literal>)`` as one
+    SQL expression (one driver->JVM call, see functions/vector.py)."""
+    arr = "array(" + ", ".join(str(int(c)) for c in codes) + ")"
+    return F.expr(
+        f"aggregate(zip_with({col_sql(col)}, {arr}, "
+        "(a, b) -> CAST(a AS BIGINT) * CAST(b AS BIGINT)), "
+        "CAST(0 AS BIGINT), (acc, x) -> acc + x)"
     )
 
 
@@ -157,7 +168,7 @@ def knn_topk_requantized(
     Persisted ``qvec``/``qscale`` columns are scanned directly when
     present (see knn_topk_quantized).
     """
-    from langchain_memvid_spark.functions.vector import cosine_sim
+    from langchain_memvid_spark.functions.vector import col_sql, cosine_sim
 
     q = _int8_codes(embeddings, id_col, vec_col)
     qrow = q.filter(F.col(id_col) == query_vec_id).select(F.col("qvec").alias("__qq"))
@@ -312,7 +323,7 @@ def knn_topk_int4(
     codes from the float column per query — the sf10 ladder measured
     the in-plan derivation at 40.6× because every search paid the
     quantization again. The derive path stays for no-ingest inputs."""
-    from langchain_memvid_spark.functions.vector import cosine_sim
+    from langchain_memvid_spark.functions.vector import col_sql, cosine_sim
 
     # same missing-query contract as topk.knn_topk / ivf_search: an
     # absent id must raise, not silently empty out both broadcast sides

@@ -20,7 +20,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from langchain_memvid_spark.functions.vector import cosine_sim, dot
+from langchain_memvid_spark.functions.vector import cosine_sim, dot, vector_literal
 
 # topk_join's exact-kernel pick: at or below this many scored pairs the
 # Catalyst broadcast-crossJoin path wins (oracle-bit-compatible, no
@@ -44,8 +44,7 @@ def knn_topk(
     qrow = embeddings.filter(F.col(id_col) == query_vec_id).select(vec_col).head()
     if qrow is None:
         raise ValueError(f"query {id_col}={query_vec_id} not found in the corpus")
-    qvec = qrow[0]
-    q = F.array(*[F.lit(float(x)) for x in qvec])
+    q = vector_literal(qrow[0])
     return (
         embeddings.withColumn("__s", cosine_sim(F.col(vec_col), q))
         .withColumn("sim", F.round(F.col("__s"), 4))
@@ -138,7 +137,7 @@ def ivf_search(
         return d / (na * nb) if na and nb else 0.0
 
     probes = [r[label_col] for r in sorted(cents, key=lambda r: (-cos(r["centroid"]), r[label_col]))[:nprobe]]
-    q = F.array(*[F.lit(x) for x in qv])
+    q = vector_literal(qv)
     pruned = embeddings.filter(F.col(label_col).isin(probes))
     return (
         pruned.withColumn("__s", cosine_sim(F.col(vec_col), q))
@@ -162,8 +161,7 @@ def knn_topk_l2(
     qrow = embeddings.filter(F.col(id_col) == query_vec_id).select(vec_col).head()
     if qrow is None:
         raise ValueError(f"query {id_col}={query_vec_id} not found in the corpus")
-    qvec = qrow[0]
-    q = F.array(*[F.lit(float(x)) for x in qvec])
+    q = vector_literal(qrow[0])
     return (
         embeddings.withColumn("__d", l2_sq(F.col(vec_col), q))
         .orderBy(F.col("__d").asc(), F.col(id_col).asc())
@@ -309,7 +307,7 @@ def mmr_topk(
     qrow = embeddings.filter(F.col(id_col) == query_vec_id).select(vec_col).head()
     if qrow is None:
         raise ValueError(f"query {id_col}={query_vec_id} not found in the corpus")
-    q = F.array(*[F.lit(float(x)) for x in qrow[0]])
+    q = vector_literal(qrow[0])
     cand = (
         embeddings.withColumn("__s", cosine_sim(F.col(vec_col), q))
         .orderBy(F.col("__s").desc(), F.col(id_col).asc())

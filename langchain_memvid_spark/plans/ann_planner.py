@@ -24,7 +24,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from langchain_memvid_spark.core.ivf import IVFIndex
-from langchain_memvid_spark.functions.vector import cosine_sim
+from langchain_memvid_spark.functions.vector import cosine_sim, vector_literal
 
 
 @dataclass
@@ -64,7 +64,7 @@ def plan_ann_search(
     else:
         reason = f"corpus={n} > {brute_force_limit}; IVF layout prunes to nprobe={nprobe}"
         return AnnPlan("ivf_pruned", reason, index.search(spark, qvec, k=k, nprobe=nprobe))
-    q = F.array(*[F.lit(float(x)) for x in qvec])
+    q = vector_literal(qvec)
     df = (
         corpus.withColumn("__s", cosine_sim(F.col(vec_col), q))
         .orderBy(F.col("__s").desc(), F.col(id_col).asc())

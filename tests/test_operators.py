@@ -175,6 +175,66 @@ def test_add_sequential_ids_empty(spark):
     assert add_sequential_ids(df, "doc_id").count() == 0
 
 
+# values whose SQL text is easy to get wrong: signed zeros, subnormals,
+# the largest doubles, an exponent-form integer, non-finites, and
+# decimals with no exact binary form
+EDGE_DOUBLES = [
+    0.0, -0.0, 5e-324, -5e-324, 1e-310, 1.7976931348623157e308,
+    -1.7976931348623157e308, 1e16, float("nan"), float("inf"),
+    float("-inf"), 0.1, 1 / 3, -2.5e-7,
+]
+
+
+def test_vector_literal_bit_identical_to_lit_array(spark):
+    import struct
+
+    from langchain_memvid_spark.functions.vector import vector_literal
+
+    row = spark.range(1).select(
+        F.array(*[F.lit(float(x)) for x in EDGE_DOUBLES]).alias("lit"),
+        vector_literal(EDGE_DOUBLES).alias("one_call"),
+    ).collect()[0]
+
+    def bits(v):
+        return [struct.pack(">d", x) for x in v]
+
+    assert bits(row["one_call"]) == bits(row["lit"])
+
+
+def test_literal_vector_forms_match_column_twins(spark):
+    """dot_lit / l2_sq_lit / int8_dot_lit return the same bits as the
+    Column HOFs fed the same vector as an F.lit array."""
+    import random
+
+    from langchain_memvid_spark.functions.vector import dot, dot_lit, l2_sq, l2_sq_lit
+    from langchain_memvid_spark.operators.quantize import int8_dot, int8_dot_lit
+
+    rng = random.Random(7)
+    rows = [
+        (
+            [rng.uniform(-1, 1) for _ in range(48)],
+            [rng.randint(-127, 127) for _ in range(48)],
+        )
+        for _ in range(20)
+    ]
+    df = spark.createDataFrame(rows, "embedding array<float>, qvec array<tinyint>")
+    q = [rng.uniform(-2, 2) for _ in range(48)]
+    codes = [rng.randint(-127, 127) for _ in range(48)]
+    q_col = F.array(*[F.lit(x) for x in q])
+    out = df.select(
+        dot(F.col("embedding"), q_col).alias("dot"),
+        dot_lit("embedding", q).alias("dot_lit"),
+        l2_sq(F.col("embedding"), q_col).alias("l2"),
+        l2_sq_lit("embedding", q).alias("l2_lit"),
+        int8_dot(F.col("qvec"), F.array(*[F.lit(c) for c in codes])).alias("i8"),
+        int8_dot_lit("qvec", codes).alias("i8_lit"),
+    ).collect()
+    for r in out:
+        assert r["dot"].hex() == r["dot_lit"].hex()
+        assert r["l2"].hex() == r["l2_lit"].hex()
+        assert r["i8"] == r["i8_lit"]
+
+
 def test_ivf_kmeans_flat_fallback_is_exact(spark, sf_dir, tmp_path):
     """Below the 30*nlist training gate the layout stays flat, so IVF
     search must equal the exact brute-force top-k."""

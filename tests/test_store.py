@@ -339,22 +339,43 @@ def test_store_async_parity(spark):
 
 
 def test_append_lineage_stays_bounded(spark):
-    """50 sequential add_texts must not nest the logical plan 50 deep:
-    localCheckpoint every _CHECKPOINT_EVERY mutations truncates lineage
-    (VERDICT r4 'What's wrong' #2), while contents stay identical."""
+    """Every mutation commits a lineage-free table version: after 14
+    appends and 4 deletes the doc_index plan is still one cached
+    checkpoint leaf, with no Union or Join of earlier versions above
+    it, while contents stay identical."""
     s = SparkVectorStore(spark)
-    s._CHECKPOINT_EVERY = 4
     for i in range(14):
         s.add_texts([f"lineage doc {i}"])
+    for _ in range(4):
+        s.delete_by_ids([0])
     plan = s._doc_index._jdf.queryExecution().optimizedPlan().toString()
-    # after a checkpoint the plan roots at a scan of materialized rows,
-    # plus at most _CHECKPOINT_EVERY-1 unions on top
-    assert plan.count("Union") <= s._CHECKPOINT_EVERY
-    assert s.get_document_count() == 14
+    assert "Union" not in plan and "Join" not in plan, plan
+    assert s.get_document_count() == 10
     texts = {d["page_content"] for d in s.get_all_documents()}
-    assert texts == {f"lineage doc {i}" for i in range(14)}
-    # search still works over the checkpointed corpus
+    assert texts == {f"lineage doc {i}" for i in range(4, 14)}
+    # search still works over the materialized version
     assert s.similarity_search("lineage doc 7", k=1)[0]["page_content"] == "lineage doc 7"
+
+
+# (rerank_candidates, round-trip ceiling): 4096 keeps the 20-doc store
+# on the direct scan, 8 forces the int8 first pass + re-rank
+@pytest.mark.parametrize("rerank_candidates,ceiling", [(4096, 100), (8, 250)])
+def test_search_round_trips_independent_of_dim(spark, py4j_calls, rerank_candidates, ceiling):
+    """Planning a search inlines the query vector in one SQL expression,
+    so its driver->JVM round trips do not grow with the dimension (the
+    per-element F.lit form cost several per dimension), on the direct
+    scan and on the two-phase path alike."""
+    calls = {}
+    for dim in (64, 512):
+        cfg = EngineConfig(index=IndexConfig(dim=dim, rerank_candidates=rerank_candidates))
+        s = SparkVectorStore.from_texts([f"trip doc {i}" for i in range(20)], spark, config=cfg)
+        s.similarity_search("trip doc 3", k=2)  # first-call class lookups
+        with py4j_calls() as n:
+            hits = s.similarity_search("trip doc 3", k=2)
+        assert hits[0]["page_content"] == "trip doc 3"
+        calls[dim] = n[0]
+    assert calls[64] == calls[512], calls
+    assert calls[64] <= ceiling, calls
 
 
 def test_langchain_standard_aliases(spark):
@@ -551,45 +572,19 @@ def test_compact_parquet_reduces_file_count(spark, tmp_path):
 
 
 def test_delete_releases_superseded_cache(spark):
-    """Each delete re-caches both tables; the PRE-delete cache entries
-    must be released (they were leaking: the delete paths overwrote
-    self._doc_index with a derived uncached plan before _renumber, so
-    _renumber's unpersist no-op'd and the cache grew by 2 entries per
-    delete forever)."""
-    import gc
-    import time
-
+    """Each delete commits a new version and must release the one it
+    replaces (cache entry and checkpoint blocks) and every checkpoint it
+    took on the way (id pin, delete_by_texts' victims) before it
+    returns: the persistent-RDD registry does not grow across deletes,
+    with no GC in between."""
     s = SparkVectorStore.from_texts([f"doc {i}" for i in range(10)], spark)
     jsc = spark.sparkContext._jsc
-
-    def storage_counts(cache_bound: int | None, timeout_s: float = 15.0):
-        """(named_cache_entries, total). Cached DataFrames carry their
-        plan string as the RDD name; lineage checkpoints are unnamed.
-        Superseded blocks are released by Spark's ASYNC ContextCleaner
-        after GC unreaches them, so poll until the named count drains
-        (a real leak never drains — the check's power is unchanged)."""
-        deadline = time.time() + timeout_s
-        while True:
-            gc.collect()
-            spark.sparkContext._jvm.System.gc()
-            rdds = dict(jsc.getPersistentRDDs())
-            named = sum(1 for r in rdds.values() if r.name())
-            if cache_bound is None or named <= cache_bound or time.time() > deadline:
-                return named, len(rdds)
-            time.sleep(0.5)
-
-    base_named, base_total = storage_counts(None)
+    before = len(jsc.getPersistentRDDs())
     for _ in range(3):
         s.delete_by_ids([0])
-    s.delete_by_texts(["doc 9"])
-    # The LEAK was +2 NAMED cache entries per delete, forever (old
-    # doc_index/payload caches never unpersisted). Post-fix, only the
-    # two live table caches stay named; each mutation may additionally
-    # pin one or two UNNAMED renumber-checkpoint RDDs in the live
-    # lineage, released in bulk by the every-16-mutations cap.
-    named, total = storage_counts(base_named)
-    assert named <= base_named, (named, base_named)
-    assert total - base_total <= 2 * 4  # <= 2 checkpoints per mutation
+    assert s.delete_by_texts(["doc 9"]) is True
+    assert s.delete_by_texts(["no such doc"]) is False
+    assert len(jsc.getPersistentRDDs()) <= before
     assert s.get_document_count() == 6
 
 
