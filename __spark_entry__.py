@@ -62,6 +62,7 @@ def entry(spark: SparkSession) -> DataFrame:
     _ship_package(spark)
     from langchain_memvid_spark.embeddings import HashEmbeddings
     from langchain_memvid_spark.functions.vector import cosine_sim
+    from langchain_memvid_spark.session import local_frame
     from langchain_memvid_spark.sources.catalog import load_table
 
     sf_dir = "/root/testdata/sf0.001"
@@ -73,7 +74,7 @@ def entry(spark: SparkSession) -> DataFrame:
 
     queries = ["table scan join order", "stream window batch", "vector hash merge"]
     qrows = [(i, q, emb.embed_query(q)) for i, q in enumerate(queries)]
-    qdf = spark.createDataFrame(qrows, "query_id INT, query STRING, qvec ARRAY<FLOAT>")
+    qdf = local_frame(spark, qrows, "query_id INT, query STRING, qvec ARRAY<FLOAT>")
 
     scored = corpus.crossJoin(F.broadcast(qdf)).withColumn(
         "score", cosine_sim(F.col("embedding"), F.col("qvec"))

@@ -198,36 +198,45 @@ def _rig_health() -> str:
     the separately-run probe proved it was the host).  Inlines the
     measurement from tools/probe_host_latency.py: loopback TCP and
     socketpair ping-pong RTTs (healthy rig ~10 us; the documented
-    degraded state shows 30-700 us) plus a CPU spin sanity check."""
+    degraded state shows 30-700 us).  Every socket times out after 5 s,
+    so a stalled echo yields "rig: probe-failed" instead of a hang."""
     import socket
     import threading
 
     def _pingpong(make_pair) -> float:
         """Mean round-trip microseconds over n one-byte echoes."""
         a, b = make_pair()
+        a.settimeout(5)
+        b.settimeout(5)
         n = 300
 
         def echo():
-            for _ in range(n):
-                b.sendall(b.recv(1))
+            try:
+                for _ in range(n):
+                    b.sendall(b.recv(1))
+            except OSError:
+                pass  # the probing side times out and reports the failure
 
         t = threading.Thread(target=echo, daemon=True)
         t.start()
-        t0 = time.perf_counter()
-        for _ in range(n):
-            a.sendall(b"x")
-            a.recv(1)
-        dt = time.perf_counter() - t0
-        t.join(timeout=5)
-        a.close()
-        b.close()
+        try:
+            t0 = time.perf_counter()
+            for _ in range(n):
+                a.sendall(b"x")
+                a.recv(1)
+            dt = time.perf_counter() - t0
+        finally:
+            t.join(timeout=5)
+            a.close()
+            b.close()
         return dt / n * 1e6
 
     def _tcp_pair():
         srv = socket.socket()
+        srv.settimeout(5)
         srv.bind(("127.0.0.1", 0))
         srv.listen(1)
-        c = socket.create_connection(srv.getsockname())
+        c = socket.create_connection(srv.getsockname(), timeout=5)
         s, _ = srv.accept()
         srv.close()
         c.setsockopt(socket.IPPROTO_TCP, socket.TCP_NODELAY, 1)

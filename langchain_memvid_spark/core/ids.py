@@ -9,7 +9,9 @@ that dies at 100 TB. Instead we use the two-phase offset pattern:
   1. within-partition ordinal (window partitioned by partition id — a
      per-partition-local operation, no global shuffle),
   2. per-partition counts → cumulative offsets (tiny driver-side
-     aggregate, O(#partitions)),
+     aggregate, O(#partitions)), handed back to the plan as a JVM
+     local relation (session.local_frame) so the broadcast join reads
+     them without a Python-worker stage,
   3. id = offset[pid] + ordinal.
 
 This preserves the DataFrame's existing partition order (or an
@@ -20,6 +22,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+
+from langchain_memvid_spark.session import local_frame
 
 
 def add_sequential_ids(
@@ -68,8 +72,8 @@ def sequential_ids(
         offsets[pid] = acc
         acc += counts[pid]
 
-    spark = df.sparkSession
-    offsets_df = spark.createDataFrame(
+    offsets_df = local_frame(
+        df.sparkSession,
         [(pid, off) for pid, off in offsets.items()] or [(0, start)], "__pid INT, __off LONG"
     )
     ids = (

@@ -31,6 +31,7 @@ from langchain_memvid_spark.operators.quantize import (
     quantize_cols,
     query_codes,
 )
+from langchain_memvid_spark.session import local_frame
 
 
 def nlist_for_corpus(n: int, *, target_cluster: int = 250, floor: int = 8) -> int:
@@ -420,7 +421,8 @@ class IVFIndex:
         ]
         # __qv/__qc, not "qvec": the persisted layout carries an int8
         # `qvec` codes column, so an unqualified name would be ambiguous.
-        qdf = spark.createDataFrame(
+        qdf = local_frame(
+            spark,
             probe_rows,
             "query_id INT, __qv ARRAY<FLOAT>, __qc ARRAY<INT>, cluster_id INT",
         )

@@ -78,6 +78,7 @@ from langchain_memvid_spark.operators.quantize import (
     quantize_cols,
     query_codes,
 )
+from langchain_memvid_spark.session import local_frame, release
 
 INGEST_SCHEMA = StructType(
     [
@@ -424,7 +425,7 @@ def _canonical_meta_json(meta: dict[str, Any]) -> str:
 # InMemoryTableScan that lets the int8 first pass read codes only,
 # with a single in-memory copy.  The superseded version, and every
 # checkpoint the mutation took on the way, is released through
-# _release before the mutation returns, not left for GC.
+# release (session.py) before the mutation returns, not left for GC.
 #
 # Local checkpoints live in executor block storage: losing an executor
 # loses the blocks and fails the store, as it always has.  Reliable
@@ -435,16 +436,6 @@ def _materialize(df: DataFrame) -> DataFrame:
     """The next table version: a DISK_ONLY local checkpoint leaf with a
     columnar cache over it, both filled by the next action."""
     return df.localCheckpoint(eager=False, storageLevel=StorageLevel.DISK_ONLY).cache()
-
-
-def _release(df: DataFrame) -> None:
-    """Free a superseded version or a per-call checkpoint now: its cache
-    entry, and the checkpointed RDD behind it when it is a checkpoint
-    leaf (a parquet scan or a local relation holds no blocks)."""
-    df.unpersist()
-    plan = df._jdf.queryExecution().logical()
-    if plan.nodeName() == "LogicalRDD":
-        plan.rdd().unpersist(False)
 
 
 class SparkVectorStore:
@@ -478,8 +469,8 @@ class SparkVectorStore:
             # the schema-validation loop)
             metadata_predicate({}, schema=metadata_schema)
         self.embeddings = embeddings or HashEmbeddings(self.config.index.dim)
-        self._doc_index: DataFrame = spark.createDataFrame([], INDEX_SCHEMA)
-        self._payload: DataFrame = spark.createDataFrame([], PAYLOAD_SCHEMA)
+        self._doc_index: DataFrame = local_frame(spark, [], INDEX_SCHEMA)
+        self._payload: DataFrame = local_frame(spark, [], PAYLOAD_SCHEMA)
         self._count = 0
         # IVF layout state (config.index.ivf): once trained, _ivf holds
         # the centroids and _doc_index IS the partitionBy(cluster_id)
@@ -561,7 +552,7 @@ class SparkVectorStore:
             (i, t, _canonical_meta_json({**m}))
             for i, (t, m) in enumerate(zip(texts, metas))
         ]
-        staged = self.spark.createDataFrame(rows, INGEST_SCHEMA)
+        staged = local_frame(self.spark, rows, INGEST_SCHEMA)
         n_parts = max(1, min(self.spark.sparkContext.defaultParallelism, len(rows) // 256 + 1))
         self._ingest(staged, n_parts)
         return [str(i) for i in range(len(texts))]
@@ -749,7 +740,7 @@ class SparkVectorStore:
         ).collect()[0]
         batch_payload_bytes = int(prow["batch_b"] or 0)
         for df in (old_index, old_payload, sig_new, id_pin):
-            _release(df)
+            release(df)
         self._maybe_build_ivf()
         from langchain_memvid_spark.types import BuildStats
 
@@ -833,7 +824,7 @@ class SparkVectorStore:
         # so any foreign (save-snapshot) origin no longer applies
         self._layout_derived = False
         self._layout_foreign = False
-        _release(old)
+        release(old)
 
     _IVF_TRAIN_CAP = 100_000  # KMeans training-sample row bound
 
@@ -959,10 +950,10 @@ class SparkVectorStore:
         stored and reset to an empty corpus. Ingest here is atomic (no
         separate staging buffer), so clearing means truncating both
         tables (and releasing their versions)."""
-        _release(self._doc_index)
-        _release(self._payload)
-        self._doc_index = self.spark.createDataFrame([], INDEX_SCHEMA)
-        self._payload = self.spark.createDataFrame([], PAYLOAD_SCHEMA)
+        release(self._doc_index)
+        release(self._payload)
+        self._doc_index = local_frame(self.spark, [], INDEX_SCHEMA)
+        self._payload = local_frame(self.spark, [], PAYLOAD_SCHEMA)
         self._count = 0
         self._ivf = None  # retrains once the corpus re-passes the gate
         self.last_build_stats = None  # stale stats describe dropped data
@@ -1276,8 +1267,10 @@ class SparkVectorStore:
         # codes) column, and an unqualified name would be AMBIGUOUS after
         # the join. Project the index down to the columns each phase
         # needs so the payload columns never enter the join at all.
-        qdf = self.spark.createDataFrame(
-            qrows, "query_id LONG, query STRING, __qv ARRAY<DOUBLE>, __qc ARRAY<INT>"
+        qdf = local_frame(
+            self.spark,
+            qrows,
+            "query_id LONG, query STRING, __qv ARRAY<DOUBLE>, __qc ARRAY<INT>",
         )
         # IVF layout: prune the scan to the UNION of every query's
         # probed clusters — the batch still reads only probed files
@@ -1795,7 +1788,7 @@ class SparkVectorStore:
         self._count = self._doc_index.count()
         self._payload.count()
         for df in (old_index, old_payload, id_pin):
-            _release(df)
+            release(df)
 
     def delete_by_ids(self, doc_ids: list[int | str]) -> bool:
         """≙ vectorstore.py:290-352 / index.py:347-376: validate, anti-join
@@ -1825,7 +1818,7 @@ class SparkVectorStore:
         if len(ids) <= self._ISIN_LIMIT:
             cond = F.col("doc_id").isin(ids)
             return df.filter(cond if keep else ~cond)
-        ids_df = self.spark.createDataFrame([(i,) for i in ids], "doc_id LONG").dropDuplicates()
+        ids_df = local_frame(self.spark, [(i,) for i in ids], "doc_id LONG").dropDuplicates()
         return df.join(F.broadcast(ids_df), "doc_id", "left_semi" if keep else "left_anti")
 
     def delete_by_texts(self, texts: list[str]) -> bool:
@@ -1836,7 +1829,7 @@ class SparkVectorStore:
         if not texts:
             # reference raises, not a silent no-op (vectorstore.py:368)
             raise ValueError("No texts provided to delete")
-        tdf = self.spark.createDataFrame([(t,) for t in texts], "text STRING").dropDuplicates()
+        tdf = local_frame(self.spark, [(t,) for t in texts], "text STRING").dropDuplicates()
         w = Window.partitionBy("text").orderBy("doc_id")
         victims = (
             self._doc_index.join(F.broadcast(tdf), "text", "left_semi")
@@ -1851,7 +1844,7 @@ class SparkVectorStore:
                 self._doc_index.join(victims, "doc_id", "left_anti"),
                 self._payload.join(victims, "doc_id", "left_anti"),
             )
-        _release(victims)
+        release(victims)
         return found
 
     def delete_documents(self, documents: Iterable[Any]) -> bool:
@@ -2021,7 +2014,8 @@ class SparkVectorStore:
             w = self._doc_index.write.mode("overwrite")
             if self._ivf is not None:
                 w = w.partitionBy("cluster_id")
-                cents = self.spark.createDataFrame(
+                cents = local_frame(
+                    self.spark,
                     [(cid, [float(x) for x in c]) for cid, c in self._ivf.centroids],
                     "cluster_id INT, centroid ARRAY<DOUBLE>",
                 )

@@ -57,6 +57,7 @@ from pyspark.sql import functions as F
 
 from langchain_memvid_spark.exceptions import ConfigError
 from langchain_memvid_spark.multimodal import binary as mm
+from langchain_memvid_spark.session import local_frame
 from langchain_memvid_spark.sources import fs as hfs
 
 _SIGNERS = {
@@ -295,7 +296,7 @@ class MediaSignatureStore:
         read, nothing more."""
         if not self._known_nonempty:
             if not hfs.list_file_paths(self.spark, self.path, ".parquet"):
-                return self.spark.createDataFrame([], self._schema)
+                return local_frame(self.spark, [], self._schema)
             self._known_nonempty = True
         if not self._columns_checked:
             actual = set(self._actual_columns())
@@ -398,8 +399,8 @@ class MediaSignatureStore:
                 F.col("media_id").cast("long").alias("media_id")
             ).distinct()
         else:
-            ids_df = self.spark.createDataFrame(
-                [(int(i),) for i in media_ids], "media_id long"
+            ids_df = local_frame(
+                self.spark, [(int(i),) for i in media_ids], "media_id long"
             ).distinct()
         sig = self.signatures()
         if not self._known_nonempty:

@@ -23,6 +23,7 @@ from langchain_memvid_spark.exceptions import ConfigError
 from langchain_memvid_spark.functions.hashing import stable_hash64
 from langchain_memvid_spark.functions.text import fingerprint, tokens, word_shingles
 from langchain_memvid_spark.functions.vector import cosine_sim
+from langchain_memvid_spark.session import local_frame
 
 # MinHash permutations h_j = (a*(h XOR m) + b) mod P over 60-bit base
 # hashes.  a ≤ 7 keeps a*h < 2^63 (no int64 overflow in numpy OR under
@@ -1347,7 +1348,7 @@ def semantic_cluster_candidates(
         n = embeddings.count()
     if n < 2:
         # no pairs to find; also keeps KMeans.fit off the empty corpus
-        return embeddings.sparkSession.createDataFrame([], "a_id long, b_id long")
+        return local_frame(embeddings.sparkSession, [], "a_id long, b_id long")
     if nlist is None:
         nlist = nlist_for_corpus(n, target_cluster=SEMANTIC_TARGET_CLUSTER, floor=16)
     cents = train_centroids(embeddings, nlist, n=n, vec_col=vec_col, id_col=id_col)

@@ -36,6 +36,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from langchain_memvid_spark.functions.text import tokens
+from langchain_memvid_spark.session import local_frame
 
 DEFAULT_QUERY_TERMS = ("dup", "spark", "join")
 
@@ -235,7 +236,8 @@ def bm25_batch(
     spark = documents.sparkSession
     # dedupe per query: a repeated term in one query's tuple would
     # otherwise join its contribution in twice
-    qmap = spark.createDataFrame(
+    qmap = local_frame(
+        spark,
         [
             (int(qid), t)
             for qid, ts in sorted(queries.items())

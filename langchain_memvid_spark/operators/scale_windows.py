@@ -30,6 +30,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from langchain_memvid_spark.session import local_frame
+
 
 def _num_range_partitions(df: DataFrame) -> int:
     return int(df.sparkSession.conf.get("spark.sql.shuffle.partitions", "200"))
@@ -59,9 +61,8 @@ def _two_phase_offsets(df: DataFrame, val_col: Column | None):
     for pid in sorted(totals):
         offsets.append((pid, acc))
         acc += totals[pid] or zero
-    spark = df.sparkSession
-    offsets_df = spark.createDataFrame(
-        offsets or [(0, zero)], f"__pid INT, __off {off_type}"
+    offsets_df = local_frame(
+        df.sparkSession, offsets or [(0, zero)], f"__pid INT, __off {off_type}"
     )
     return pinned, offsets_df, acc
 

@@ -16,6 +16,7 @@ from langchain_memvid_spark.functions.text import (
     quality_score_cols,
     token_count,
 )
+from langchain_memvid_spark.session import local_frame
 
 
 def token_counts(documents: DataFrame, text_col: str = "text") -> DataFrame:
@@ -497,8 +498,8 @@ def token_budget_select(
         offs.append((pid, t_acc, c_acc))
         t_acc += totals[pid][0]
         c_acc += totals[pid][1]
-    offsets_df = documents.sparkSession.createDataFrame(
-        offs or [(0, 0, 0)], "__pid INT, __toff LONG, __coff LONG"
+    offsets_df = local_frame(
+        documents.sparkSession, offs or [(0, 0, 0)], "__pid INT, __toff LONG, __coff LONG"
     )
     w = Window.partitionBy("__pid").orderBy(*key)
     return (

@@ -21,6 +21,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from langchain_memvid_spark.functions.vector import cosine_sim, dot, vector_literal
+from langchain_memvid_spark.session import local_frame
 
 # topk_join's exact-kernel pick: at or below this many scored pairs the
 # Catalyst broadcast-crossJoin path wins (oracle-bit-compatible, no
@@ -326,7 +327,8 @@ def mmr_topk(
     ids = [r[id_col] for r in rows]
     qsim = [r["__s"] for r in rows]  # Spark-computed, reused verbatim
     selected = greedy_mmr(vecs, qsim, ids, k, lambda_mult)
-    sel = embeddings.sparkSession.createDataFrame(
+    sel = local_frame(
+        embeddings.sparkSession,
         [(r + 1, ids[i]) for r, i in enumerate(selected)],
         f"mmr_rank INT, {id_col} LONG",
     )

@@ -21,6 +21,7 @@ from pyspark.sql import functions as F
 
 from langchain_memvid_spark.operators import dedup, ranking, relational, textops, topk
 from langchain_memvid_spark.operators.dedup import MINHASH_P, MINHASH_PERMS, SIMHASH_BITS
+from langchain_memvid_spark.session import local_frame
 from langchain_memvid_spark.functions.text import LANG_STOPWORDS, STOPWORDS_EN
 
 
@@ -3663,7 +3664,8 @@ def q_sigstore_takedown(spark, sf_dir):
     n_removed = store.remove_media_ids(removed_ids)
     batch = mm.synthesize_image_batch(docs, variant_every=7, novel_remainder=3)
     verdicts = store.dedup_batch(batch, n_new=c["n_v7"] + c["n_v73"])
-    witness = spark.createDataFrame(
+    witness = local_frame(
+        spark,
         [(-1, True, n_removed, True)],
         "media_id long, is_dup boolean, dup_of long, decoded boolean",
     )

@@ -18,6 +18,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from langchain_memvid_spark.operators.dedup import simhash
+from langchain_memvid_spark.session import local_frame
 
 DOCS_SCHEMA = "doc_id LONG, text STRING, lang STRING, source STRING, n_chars LONG"
 
@@ -252,7 +253,8 @@ def stream_similarity_join(
         # discovery appends the partition column after the data columns
         # (ADVICE r8: positional consumers must see one order on both
         # paths)
-        return spark.createDataFrame(
+        return local_frame(
+            spark,
             [],
             "query_id BIGINT, doc_id BIGINT, text STRING, "
             "similarity DOUBLE, rank INT, batch_id INT",

@@ -35,6 +35,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 from langchain_memvid_spark.exceptions import ConfigError
 from langchain_memvid_spark.multimodal import binary as mm
+from langchain_memvid_spark.session import local_frame, release
 from langchain_memvid_spark.streaming.documents import _read_table_stream
 
 if TYPE_CHECKING:  # pragma: no cover - typing only
@@ -74,9 +75,9 @@ def _persisted_corpus_bands(
     (MEMORY_AND_DISK executor blocks); the known trades: blocks are
     unreplicated (an executor loss fails the stream's current batch
     instead of recomputing from lineage — acceptable for a gate that
-    replays idempotently from its checkpoint), and the blocks are
-    freed by the ContextCleaner when the frame is GC'd rather than by
-    unpersist()."""
+    replays idempotently from its checkpoint), and ``unpersist()`` is
+    a no-op on the checkpoint leaf, so each gate frees the blocks with
+    ``session.release`` once its stream ends."""
     return mm.banded_signature_table(
         corpus_sig, sig_cols, frame_grain=frame_grain
     ).localCheckpoint(eager=True)
@@ -220,7 +221,7 @@ def stream_media_dedup_vs_corpus(
     try:
         q.awaitTermination()
     finally:
-        corpus_bands.unpersist()
+        release(corpus_bands)
     try:
         return spark.read.parquet(out_path)
     except AnalysisException as e:
@@ -230,7 +231,8 @@ def stream_media_dedup_vs_corpus(
         # zero microbatches (empty source): typed empty frame with
         # batch_id LAST, matching the partitioned read (the ADVICE r8
         # column-order rule)
-        return spark.createDataFrame(
+        return local_frame(
+            spark,
             [],
             "media_id BIGINT, is_dup BOOLEAN, dup_of BIGINT, "
             "decoded BOOLEAN, batch_id INT",
@@ -324,14 +326,15 @@ def stream_video_contains_clip(
     try:
         q.awaitTermination()
     finally:
-        corpus_bands.unpersist()
+        release(corpus_bands)
     try:
         return spark.read.parquet(out_path)
     except AnalysisException as e:
         cond = e.getCondition() if hasattr(e, "getCondition") else e.getErrorClass()
         if cond != "PATH_NOT_FOUND":
             raise
-        return spark.createDataFrame(
+        return local_frame(
+            spark,
             [],
             "video_id BIGINT, clip_id BIGINT, offset INT, "
             "clip_frames INT, max_hamming_seen INT, batch_id INT",
@@ -426,14 +429,15 @@ def stream_video_shared_runs(
     try:
         q.awaitTermination()
     finally:
-        corpus_bands.unpersist()
+        release(corpus_bands)
     try:
         return spark.read.parquet(out_path)
     except AnalysisException as e:
         cond = e.getCondition() if hasattr(e, "getCondition") else e.getErrorClass()
         if cond != "PATH_NOT_FOUND":
             raise
-        return spark.createDataFrame(
+        return local_frame(
+            spark,
             [],
             "video_id BIGINT, corpus_id BIGINT, video_start INT, "
             "corpus_start INT, run_frames INT, max_hamming_seen INT, "
@@ -539,14 +543,15 @@ def stream_video_audio_contains_clip(
     try:
         q.awaitTermination()
     finally:
-        corpus_bands.unpersist()
+        release(corpus_bands)
     try:
         return spark.read.parquet(out_path)
     except AnalysisException as e:
         cond = e.getCondition() if hasattr(e, "getCondition") else e.getErrorClass()
         if cond != "PATH_NOT_FOUND":
             raise
-        return spark.createDataFrame(
+        return local_frame(
+            spark,
             [],
             "video_id BIGINT, clip_id BIGINT, offset INT, "
             "clip_frames INT, max_hamming_seen INT, batch_id INT",
@@ -631,14 +636,15 @@ def stream_video_contains_image(
     try:
         q.awaitTermination()
     finally:
-        corpus_bands.unpersist()
+        release(corpus_bands)
     try:
         return spark.read.parquet(out_path)
     except AnalysisException as e:
         cond = e.getCondition() if hasattr(e, "getCondition") else e.getErrorClass()
         if cond != "PATH_NOT_FOUND":
             raise
-        return spark.createDataFrame(
+        return local_frame(
+            spark,
             [],
             "video_id BIGINT, frame_no INT, image_id BIGINT, "
             "hamming INT, batch_id INT",
