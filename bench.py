@@ -146,8 +146,9 @@ EXTENDED = [
 # r13 artifacts carried a documented 1.2–1.4x invocation spread on the
 # same code (SCALE.md round-13), which a regression hunt could chase as
 # a phantom.  These rows record the MIN of two in-session reps
-# (VERDICT r13 item 5); the gate-only ladder tools in tools/ remain the
-# stable basis for kernel-scaling claims.  Non-media rows stay
+# (VERDICT r13 item 5); perfbench's traced stream layers (per-batch
+# addBatch vs engine time, job counts) are the basis for kernel
+# claims.  Non-media rows stay
 # single-pass so the frozen headline basis is untouched.
 MEDIA_MIN_OF_2 = frozenset(
     n for n in EXTENDED
@@ -195,10 +196,9 @@ def _rig_health() -> str:
     """One-line scheduler-wakeup latency stamp (VERDICT r14 item 3: a
     bench without a rig-health record cannot be compared across rounds
     — the r14 driver run was 2x degraded vs its own 8-core run and only
-    the separately-run probe proved it was the host).  Inlines the
-    measurement from tools/probe_host_latency.py: loopback TCP and
-    socketpair ping-pong RTTs (healthy rig ~10 us; the documented
-    degraded state shows 30-700 us).  Every socket times out after 5 s,
+    the separately-run probe proved it was the host).  Measures
+    loopback TCP and socketpair ping-pong RTTs (healthy rig ~10 us; the
+    documented degraded state shows 30-700 us).  Every socket times out after 5 s,
     so a stalled echo yields "rig: probe-failed" instead of a hang."""
     import socket
     import threading
@@ -269,8 +269,8 @@ def _run_notes(sf_dir: str) -> str:
     return (
         f"single-pass run at {stamp} on commit {head}, "
         f"local[{os.environ.get('SPARK_GRAFT_CPUS', '32')}], {sf_dir}; "
-        f"{_rig_health()} (healthy reference ~10 us, see "
-        "tools/probe_host_latency.py); "
+        f"{_rig_health()} (healthy reference ~10 us, degraded hosts "
+        "measured 30-700 us); "
         "sf0.001 warmup removes Python-worker spin-up; single-run numbers "
         "remain load-sensitive (documented up-to-14x host-noise history -- "
         "see BENCH_r04 notes and SCALE.md; adjudicate regressions with the "

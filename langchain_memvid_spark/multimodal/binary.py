@@ -1573,12 +1573,11 @@ def widen_for_decode(media: DataFrame) -> DataFrame:
     For the probe ladder, 'wide' is judged by NON-EMPTY partitions,
     not the plan's split count — a single-row-group 157 MB file plans
     as 32 splits with 30 of them empty and the signer runs 2-3 threads
-    (the r13 measured term behind the clip gate's 17× at 100×,
-    tools/probe_sign_parallel.py).  File-backed frames use
-    metadata-only size probes; a foreachBatch frame (no files) probes
-    the batch bytes directly with one agg over length(content)
-    (ADVICE r12 — the file-byte probe was silently dead there, so
-    byte-heavy low-row microbatches never widened)."""
+    (the r13 measured term behind the clip gate's 17× at 100×).
+    File-backed frames use metadata-only size probes; a foreachBatch
+    frame (no files) probes the batch bytes directly with one agg over
+    length(content) (ADVICE r12 — the file-byte probe was silently
+    dead there, so byte-heavy low-row microbatches never widened)."""
     spark = media.sparkSession
     n = spark.sparkContext.defaultParallelism
     plan = _analyzed_plan_str(media)
@@ -1601,11 +1600,11 @@ def widen_for_decode(media: DataFrame) -> DataFrame:
         # the partition COUNT lies for low-row-group parquet: a 157 MB
         # single-file fixture plans as 32 splits but parquet cannot
         # split below a row-group boundary, so 30 of them are EMPTY
-        # and the signer still runs 2-3 threads (measured r13,
-        # tools/probe_sign_parallel.py: 25.7 s as-read vs 3.3 s
-        # repartitioned for the same 750 k frames).  Count NON-EMPTY
-        # partitions before trusting the plan — the probe reads zero
-        # data columns (row-count-only scan), so it is metadata-grade
+        # and the signer still runs 2-3 threads (measured r13: 25.7 s
+        # as-read vs 3.3 s repartitioned for the same 750 k frames).
+        # Count NON-EMPTY partitions before trusting the plan — the
+        # probe reads zero data columns (row-count-only scan), so it is
+        # metadata-grade
         try:
             cur = (
                 media.select(F.spark_partition_id().alias("__pid"))

@@ -2526,6 +2526,41 @@ def _overlap_jobs(*thunks):
         return [f.result() for f in futures]
 
 
+def _media_gate_fixture(spark, gate, sig_arg, modality, sign, arrivals, **store_kw):
+    """The streaming media gate fixtures' shared production loop: the
+    corpus ``sign`` is signed ONCE into a persisted MediaSignatureStore
+    of ``modality`` while ``arrivals`` is written as three parquet
+    files — independent writes to disjoint paths, so they run as
+    concurrent jobs (optimization r14, guide §2.6).  The arrivals then
+    stream through ``gate`` as a THREE-microbatch file stream
+    (maxFilesPerTrigger=1), with the typed store handle passed as the
+    gate's ``sig_arg`` so the sidecar pins the signing configuration.
+    Returns the accumulated output without the partition column,
+    ordered by its first column."""
+    import tempfile
+
+    from langchain_memvid_spark.multimodal.sigstore import MediaSignatureStore
+
+    base = tempfile.mkdtemp(prefix=f"{gate.__name__}_")
+    store = MediaSignatureStore(spark, f"{base}/sigs", modality, **store_kw)
+    _overlap_jobs(
+        lambda: store.sign_and_append(sign),
+        lambda: arrivals.repartition(3)
+        .write.mode("overwrite")
+        .parquet(f"{base}/arrivals"),
+    )
+    out = gate(
+        spark,
+        f"{base}/arrivals",
+        f"{base}/out",
+        f"{base}/ckpt",
+        max_files_per_trigger=1,
+        **{sig_arg: store},
+    )
+    cols = [c for c in out.columns if c != "batch_id"]
+    return out.select(*cols).orderBy(cols[0])
+
+
 def _stream_events(spark, sf_dir):
     from langchain_memvid_spark.streaming import events as _ev
 
@@ -2960,35 +2995,19 @@ def q_stream_media_ingest_gate(spark, sf_dir):
     corpus), so the union hashes against the same closed-form
     variant/novel oracle as incremental_image_dedup — streamed
     ingest returns byte-identical verdicts to a batch run."""
-    import tempfile
-
     from langchain_memvid_spark.multimodal import binary as mm
-    from langchain_memvid_spark.multimodal.sigstore import MediaSignatureStore
     from langchain_memvid_spark.streaming.media import stream_media_dedup_vs_corpus
 
     docs = _t(spark, sf_dir, "documents")
-    base = tempfile.mkdtemp(prefix="stream_media_gate_")
-    store = MediaSignatureStore(spark, f"{base}/sigs", "image")
-    # the two fixture actions are independent writes to disjoint paths
-    # — run them as concurrent jobs (optimization r14, guide §2.6)
-    _overlap_jobs(
-        lambda: store.sign_and_append(
-            mm.synthesize_image_corpus(docs, variant_every=None)
-        ),
-        lambda: mm.synthesize_image_batch(docs, variant_every=7, novel_remainder=3)
-        .repartition(3)
-        .write.mode("overwrite")
-        .parquet(f"{base}/arrivals"),
-    )
-    out = stream_media_dedup_vs_corpus(
+    # typed path: (modality, hash_bits, every_n) from the sidecar
+    return _media_gate_fixture(
         spark,
-        f"{base}/arrivals",
-        f"{base}/verdicts",
-        f"{base}/ckpt",
-        store=store,  # typed path: (modality, hash_bits, every_n) from the sidecar
-        max_files_per_trigger=1,
+        stream_media_dedup_vs_corpus,
+        "store",
+        "image",
+        mm.synthesize_image_corpus(docs, variant_every=None),
+        mm.synthesize_image_batch(docs, variant_every=7, novel_remainder=3),
     )
-    return out.select("media_id", "is_dup", "dup_of", "decoded").orderBy("media_id")
 
 
 @_reg(
@@ -3105,35 +3124,17 @@ def q_stream_video_contains_image(spark, sf_dir):
     so the accumulated union hashes against the SAME closed-form
     planted-image oracle as the batch operator — streamed arrival
     returns byte-identical matches to a batch run."""
-    import tempfile
-
     from langchain_memvid_spark.multimodal import binary as mm
-    from langchain_memvid_spark.multimodal.sigstore import MediaSignatureStore
     from langchain_memvid_spark.streaming.media import stream_video_contains_image
 
     docs = _t(spark, sf_dir, "documents")
-    base = tempfile.mkdtemp(prefix="stream_vci_")
-    store = MediaSignatureStore(spark, f"{base}/isigs", "image")
-    # independent fixture actions → concurrent jobs (r14, guide §2.6)
-    _overlap_jobs(
-        lambda: store.sign_and_append(
-            mm.synthesize_image_corpus(docs, variant_every=None)
-        ),
-        lambda: mm.synthesize_video_with_planted_images(docs, plant_every=5)
-        .repartition(3)
-        .write.mode("overwrite")
-        .parquet(f"{base}/arrivals"),
-    )
-    out = stream_video_contains_image(
+    return _media_gate_fixture(
         spark,
-        f"{base}/arrivals",
-        f"{base}/matches",
-        f"{base}/ckpt",
-        image_sig=store,
-        max_files_per_trigger=1,
-    )
-    return out.select("video_id", "frame_no", "image_id", "hamming").orderBy(
-        "video_id"
+        stream_video_contains_image,
+        "image_sig",
+        "image",
+        mm.synthesize_image_corpus(docs, variant_every=None),
+        mm.synthesize_video_with_planted_images(docs, plant_every=5),
     )
 
 
@@ -3421,57 +3422,34 @@ def q_stream_video_audio_contains_clip(spark, sf_dir):
     Batch-split-invariant ⇒ the accumulated union hashes against the
     same closed-form planted-soundtrack oracle as the batch
     operator."""
-    import tempfile
-
     from langchain_memvid_spark.multimodal import binary as mm
-    from langchain_memvid_spark.multimodal.sigstore import MediaSignatureStore
     from langchain_memvid_spark.streaming.media import (
         stream_video_audio_contains_clip,
     )
 
     docs = _t(spark, sf_dir, "documents")
-    base = tempfile.mkdtemp(prefix="stream_vac_")
-    media = mm.synthesize_video_with_soundtrack(
-        docs, clip_every=5, span_samples=256
-    )
-    # the clip corpus signed once at ingest into the TYPED span-grain
-    # store (the audio_span modality; span width pinned by sidecar).
-    # Only the KNOWN clips go in — they are emitted solely for docs
-    # with doc_id % 5 == 0, so the sign-side synth runs over 1/5 of
-    # the docs and the persisted table drops the inert video-track
-    # rows (optimization r14: a video's own track has a_nf == b_nf,
-    # excluded by the verify's strict a_nf > b_nf; other docs' tracks
-    # have distinct seeds — oracle-checked identical output, and the
+    # the clip corpus goes into the TYPED span-grain store (the
+    # audio_span modality; span width pinned by sidecar).  Only the
+    # KNOWN clips go in — they are emitted solely for docs with
+    # doc_id % 5 == 0, so the sign-side synth runs over 1/5 of the docs
+    # and the persisted table drops the inert video-track rows
+    # (optimization r14: a video's own track has a_nf == b_nf, excluded
+    # by the verify's strict a_nf > b_nf; other docs' tracks have
+    # distinct seeds — oracle-checked identical output, and the
     # per-microbatch corpus band join reads ~6x fewer rows).
-    store = MediaSignatureStore(
-        spark, f"{base}/clip_spans", "audio_span", span_samples=256
-    )
-    # the sign-side store write and the arrivals write are independent
-    # → concurrent jobs (optimization r14, guide §2.6)
-    _overlap_jobs(
-        lambda: store.sign_and_append(
-            mm.synthesize_video_with_soundtrack(
-                docs.filter(F.col("doc_id") % 5 == 0),
-                clip_every=5,
-                span_samples=256,
-            ).filter(F.col("media_type") == "audio")
-        ),
-        lambda: media.filter(F.col("media_type") == "video")
-        .repartition(3)
-        .write.mode("overwrite")
-        .parquet(f"{base}/arrivals"),
-    )
-    out = stream_video_audio_contains_clip(
+    return _media_gate_fixture(
         spark,
-        f"{base}/arrivals",
-        f"{base}/matches",
-        f"{base}/ckpt",
-        clip_sig=store,
-        max_files_per_trigger=1,
+        stream_video_audio_contains_clip,
+        "clip_sig",
+        "audio_span",
+        mm.synthesize_video_with_soundtrack(
+            docs.filter(F.col("doc_id") % 5 == 0), clip_every=5, span_samples=256
+        ).filter(F.col("media_type") == "audio"),
+        mm.synthesize_video_with_soundtrack(
+            docs, clip_every=5, span_samples=256
+        ).filter(F.col("media_type") == "video"),
+        span_samples=256,
     )
-    return out.select(
-        "video_id", "clip_id", "offset", "clip_frames", "max_hamming_seen"
-    ).orderBy("video_id")
 
 
 @_reg(
@@ -3497,16 +3475,10 @@ def q_stream_video_contains_clip(spark, sf_dir):
     per-batch-partition overwrite.  Batch-split-invariant ⇒ the
     accumulated union hashes against the same closed-form planted-clip
     oracle as the batch operator."""
-    import tempfile
-
     from langchain_memvid_spark.multimodal import binary as mm
-    from langchain_memvid_spark.multimodal.sigstore import MediaSignatureStore
     from langchain_memvid_spark.streaming.media import stream_video_contains_clip
 
     docs = _t(spark, sf_dir, "documents")
-    base = tempfile.mkdtemp(prefix="stream_vcc_")
-    corpus = mm.synthesize_video_clip_corpus(docs, clip_every=5)
-    store = MediaSignatureStore(spark, f"{base}/csigs", "video")
     # sign side = the KNOWN clips only — they are emitted solely for
     # docs with doc_id % 5 == 0 (per-row mapInPandas fixture), so the
     # sign-side synth encodes 1/5 of the docs' AVI bytes instead of
@@ -3514,31 +3486,18 @@ def q_stream_video_contains_clip(spark, sf_dir):
     # (optimization r14, guide §4.2: pass the Python boundary only the
     # rows it needs — the media_id filter cannot push below
     # mapInPandas).  Identical clip rows, oracle-checked.
-    # the sign-side store write and the arrivals write are independent
-    # (disjoint paths, disjoint synth inputs) → concurrent jobs
-    # (optimization r14, guide §2.6)
-    _overlap_jobs(
-        lambda: store.sign_and_append(
-            mm.synthesize_video_clip_corpus(
-                docs.filter(F.col("doc_id") % 5 == 0), clip_every=5
-            ).filter(F.col("media_id") >= mm.VARIANT_ID_OFFSET)
-        ),
-        lambda: corpus.filter(F.col("media_id") < mm.VARIANT_ID_OFFSET)
-        .repartition(3)
-        .write.mode("overwrite")
-        .parquet(f"{base}/arrivals"),
-    )
-    out = stream_video_contains_clip(
+    return _media_gate_fixture(
         spark,
-        f"{base}/arrivals",
-        f"{base}/matches",
-        f"{base}/ckpt",
-        clip_sig=store,
-        max_files_per_trigger=1,
+        stream_video_contains_clip,
+        "clip_sig",
+        "video",
+        mm.synthesize_video_clip_corpus(
+            docs.filter(F.col("doc_id") % 5 == 0), clip_every=5
+        ).filter(F.col("media_id") >= mm.VARIANT_ID_OFFSET),
+        mm.synthesize_video_clip_corpus(docs, clip_every=5).filter(
+            F.col("media_id") < mm.VARIANT_ID_OFFSET
+        ),
     )
-    return out.select(
-        "video_id", "clip_id", "offset", "clip_frames", "max_hamming_seen"
-    ).orderBy("video_id")
 
 
 @_reg(
@@ -3571,47 +3530,28 @@ def q_stream_video_shared_runs(spark, sf_dir):
     shares frames o..o+L−1 (o = d%2, L = 2+d%2) of base d behind
     p = 1+d%3 unique prefix frames ⇒ exactly
     {(d+OFFSET, d, p, o, L, 0)}."""
-    import tempfile
-
     from langchain_memvid_spark.multimodal import binary as mm
-    from langchain_memvid_spark.multimodal.sigstore import MediaSignatureStore
     from langchain_memvid_spark.streaming.media import stream_video_shared_runs
 
     docs = _t(spark, sf_dir, "documents")
-    base = tempfile.mkdtemp(prefix="stream_vsr_")
-    media = mm.synthesize_video_overlap_corpus(docs, overlap_every=5)
-    store = MediaSignatureStore(spark, f"{base}/csigs", "video")
     # arrival side = the VARIANT uploads only — emitted solely for docs
     # with doc_id % 5 == 0 (per-row mapInPandas fixture), so the
     # arrival-side synth encodes 1/5 of the docs instead of building
     # every base video and filtering it away afterwards (optimization
     # r14, guide §4.2: the media_id filter cannot push below
-    # mapInPandas).  Identical variant rows, oracle-checked.  The two
-    # fixture actions are independent → concurrent jobs (guide §2.6).
-    _overlap_jobs(
-        lambda: store.sign_and_append(
-            media.filter(F.col("media_id") < mm.VARIANT_ID_OFFSET)
-        ),
-        lambda: mm.synthesize_video_overlap_corpus(
-            docs.filter(F.col("doc_id") % 5 == 0), overlap_every=5
-        )
-        .filter(F.col("media_id") >= mm.VARIANT_ID_OFFSET)
-        .repartition(3)
-        .write.mode("overwrite")
-        .parquet(f"{base}/arrivals"),
-    )
-    out = stream_video_shared_runs(
+    # mapInPandas).  Identical variant rows, oracle-checked.
+    return _media_gate_fixture(
         spark,
-        f"{base}/arrivals",
-        f"{base}/matches",
-        f"{base}/ckpt",
-        corpus_sig=store,
-        max_files_per_trigger=1,
+        stream_video_shared_runs,
+        "corpus_sig",
+        "video",
+        mm.synthesize_video_overlap_corpus(docs, overlap_every=5).filter(
+            F.col("media_id") < mm.VARIANT_ID_OFFSET
+        ),
+        mm.synthesize_video_overlap_corpus(
+            docs.filter(F.col("doc_id") % 5 == 0), overlap_every=5
+        ).filter(F.col("media_id") >= mm.VARIANT_ID_OFFSET),
     )
-    return out.select(
-        "video_id", "corpus_id", "video_start", "corpus_start",
-        "run_frames", "max_hamming_seen",
-    ).orderBy("video_id")
 
 
 @_reg(

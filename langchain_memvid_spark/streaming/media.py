@@ -1,34 +1,43 @@
-"""Streaming MEDIA ingest gate — the multimodal member of the
-streaming dedup family.
+"""Streaming MEDIA gates — the multimodal members of the streaming
+dedup family.
 
 A production scrape delivers media as a file stream; every arriving
 batch must be checked against the already-kept corpus BEFORE it is
 admitted (the text analogs are near_dedup_stream_vs_corpus for
 signatures and stream_similarity_join for retrieval).  A per-arrival
-verdict requires a groupBy over the band join, which Spark's native
-streaming sinks cannot express statelessly — so this uses the same
-idempotent-foreachBatch recipe as stream_similarity_join: each
-microbatch runs the BATCH incremental kernel
-(multimodal/binary.py incremental_{image,audio,video}_near_dup —
-batch bands broadcast, ONE scan of the corpus signature table, zero
-corpus-side shuffle) and OVERWRITES its own Hive partition
-``out_path/batch_id=<id>``, so a replayed batch after a crash
-rewrites identical bytes instead of duplicating.
+verdict needs a groupBy over the band join, which Spark's native
+streaming sinks cannot express statelessly, so every gate here runs
+through one private runner, ``_run_gate``, on the
+idempotent-foreachBatch recipe:
 
-The corpus side is the PERSISTED signature table —
-MediaSignatureStore.signatures() or any signer output written at
-ingest (8–32 bytes per item): re-decoding 100 TB of corpus media per
-microbatch would be absurd, and the stream never re-signs prior
-arrivals either (each batch signs exactly its own blobs).  The gates
-band that table ONCE per stream and persist the BANDED form
-(_persisted_corpus_bands), so each microbatch's (band, val) join
-reads cached band rows — the per-microbatch corpus cost is gone
-entirely, not just the parquet scan (VERDICT r11 item 1).
+- the corpus side is the PERSISTED signature table —
+  MediaSignatureStore.signatures() or any signer output written at
+  ingest (8–32 bytes per item).  Re-decoding the corpus media per
+  microbatch would be absurd, and the stream never re-signs prior
+  arrivals either: each microbatch signs exactly its own blobs;
+- the runner bands that table ONCE per stream and keeps the BANDED
+  form, so each microbatch's (band, val) join reads stored band rows
+  instead of re-scanning and re-exploding the corpus (VERDICT r11
+  item 1);
+- each microbatch runs the gate's BATCH kernel (batch bands
+  broadcast, zero corpus-side shuffle) and OVERWRITES its own Hive
+  partition ``out_path/batch_id=<id>``, so a replayed batch after a
+  crash rewrites identical bytes instead of duplicating;
+- the result is a batch read of the accumulated output with the
+  partition-discovery column ``batch_id`` LAST, on the empty path too.
+
+Each arrival is judged against the fixed corpus only, so every gate's
+accumulated output equals its batch kernel's on the union of arrivals
+(batch-split-invariant).  A corpus given as a MediaSignatureStore
+handle pins the signing configuration from its sidecar; call-site
+kwargs that contradict the sidecar raise ConfigError (VERDICT r9
+item 3: a width/stride drift silently yields that other
+configuration's verdicts).
 """
 
 from __future__ import annotations
 
-from typing import TYPE_CHECKING
+from typing import TYPE_CHECKING, Callable
 
 from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
@@ -51,47 +60,13 @@ _INCREMENTALS = {
 
 _SIG_BASES = {"image": "dhash", "audio": "ahash", "video": "dhash"}
 
-
-def _persisted_corpus_bands(
-    corpus_sig: DataFrame, sig_cols, frame_grain: bool
-) -> DataFrame:
-    """The gates' shared corpus-side prep (VERDICT r11 item 1): band
-    the persisted signature table ONCE per stream and materialize the
-    BANDED form, so every microbatch's (band, val) join reads stored
-    band rows instead of re-scanning + re-exploding the corpus —
-    K microbatches pay the 4×-explode once, and the per-microbatch
-    gate cost drops to the batch-side work.  Only the DataFrame this
-    function derives is materialized — never the caller's
-    ``corpus_sig`` (ADVICE r11: persisting a caller-owned frame
-    clobbered its cache level).
-
-    Materialized via eager ``localCheckpoint`` rather than ``persist``
-    (optimization r15): the checkpointed frame is a LEAF plan
-    (ExistingRDD), so each microbatch's kernel construction analyzes a
-    1-node corpus subtree instead of re-traversing the whole
-    scan+explode+rename tree per DataFrame op — a measured
-    ~0.25 s/batch driver-side analysis term at sf0.1 — and execution
-    skips the cache-manager plan match.  Same storage class
-    (MEMORY_AND_DISK executor blocks); the known trades: blocks are
-    unreplicated (an executor loss fails the stream's current batch
-    instead of recomputing from lineage — acceptable for a gate that
-    replays idempotently from its checkpoint), and ``unpersist()`` is
-    a no-op on the checkpoint leaf, so each gate frees the blocks with
-    ``session.release`` once its stream ends."""
-    return mm.banded_signature_table(
-        corpus_sig, sig_cols, frame_grain=frame_grain
-    ).localCheckpoint(eager=True)
-
-
-#  Microbatch widening (the r12 `_widen_batch` wrapper) moved INTO the
-#  signer entry points (binary.widen_for_decode — VERDICT r13 item 1):
-#  every gate's per-batch signer call now probes and widens its own
-#  input with the SAME decision ladder (a foreachBatch frame is a
-#  LogicalRDD, so it takes the rows+bytes content-agg probe exactly as
-#  before), and batch callers get the identical protection for free.
-#  One probe site instead of N call sites; a second gate-level probe
-#  here would double the per-microbatch probe job (the r13 A/B showed
-#  two sequential probes cost more than one).
+#  Microbatch widening lives INSIDE the signer entry points
+#  (binary.widen_for_decode — VERDICT r13 item 1): every gate's
+#  per-batch signer call probes and widens its own input (a
+#  foreachBatch frame is a LogicalRDD, so it takes the rows+bytes
+#  content-agg probe).  A second gate-level probe here would double the
+#  per-microbatch probe job (the r13 A/B showed two sequential probes
+#  cost more than one).
 
 
 def _infer_sig_cols(sig: DataFrame, base: str, what: str) -> list:
@@ -104,6 +79,123 @@ def _infer_sig_cols(sig: DataFrame, base: str, what: str) -> list:
             "pass a signer output or a MediaSignatureStore"
         )
     return mm.sig_col_names(base, 64 * len(sig_like))
+
+
+def _pin_to_store(sig, modality: str | None, what: str, table: str, /, **given):
+    """Resolve a gate's corpus argument ``what`` to (static frame,
+    config).
+
+    A MediaSignatureStore handle must hold ``modality`` (any modality
+    when None), and each ``given`` kwarg that is not None must equal
+    the sidecar's value of the same name; the sidecar's values are
+    returned.  ``table`` names the store's table in the contradiction
+    message.  A loose frame comes back with ``given`` as passed."""
+    if hasattr(sig, "signatures"):
+        if modality is not None and sig.modality != modality:
+            raise ConfigError(
+                f"{what} store must be the {modality} modality, got "
+                f"{sig.modality!r}"
+            )
+        pinned = {name: getattr(sig, name) for name in given}
+        for name, value in given.items():
+            if value is not None and value != pinned[name]:
+                raise ConfigError(
+                    f"gate {name}={value!r} contradicts the {table}'s "
+                    f"sidecar ({name}={pinned[name]!r} at {sig.path})"
+                )
+        sig, given = sig.signatures(), pinned
+    if sig.isStreaming:  # pragma: no cover - contract guard
+        raise ValueError(f"{what} must be a static (batch) table")
+    return sig, given
+
+
+def _run_gate(
+    spark: SparkSession,
+    media_path: str,
+    out_path: str,
+    checkpoint_path: str,
+    corpus_sig: DataFrame,
+    sig_cols: list,
+    frame_grain: bool,
+    bind: Callable[[DataFrame], Callable[[DataFrame], DataFrame]],
+    empty_schema: str,
+    max_files_per_trigger: int | None,
+    name: str,
+) -> DataFrame:
+    """Run one gate to completion (``availableNow``) and return the
+    batch read of its output.
+
+    The stream is named ``<name>:<checkpoint_path>``: the gate's public
+    name for Spark's UI and listeners, made unique per run because
+    Spark refuses to start a query whose name an active query of the
+    session already holds (two runs on one checkpoint cannot be active
+    together anyway).
+
+    The corpus is banded ONCE per stream and materialized with an
+    eager ``localCheckpoint`` BEFORE microbatch 1 (VERDICT r12 item 6:
+    otherwise the first microbatch pays the banding).  The checkpoint
+    is a LEAF plan, so each microbatch's kernel construction analyzes
+    a 1-node corpus subtree instead of the scan+explode tree
+    (optimization r15: ~0.25 s/batch of driver analysis at sf0.1).
+    Its blocks are unreplicated (an executor loss fails the current
+    batch, which replays idempotently from the checkpoint) and
+    ``unpersist()`` is a no-op on the leaf, so the bands are freed with
+    ``session.release`` once the stream ends, failed or not.  Only this
+    derived frame is materialized, never the caller's ``corpus_sig``
+    (ADVICE r11).
+
+    ``bind(corpus_bands)`` is called once per stream and returns the
+    per-microbatch kernel (see ``_counted``).  Each microbatch is
+    persisted for the kernel, because the signer's widen probe and its
+    sign scan both read it."""
+    stream = _read_table_stream(
+        spark, media_path, MEDIA_STREAM_SCHEMA, max_files_per_trigger
+    )
+    corpus_bands = mm.banded_signature_table(
+        corpus_sig, sig_cols, frame_grain=frame_grain
+    ).localCheckpoint(eager=True)
+    try:
+        kernel = bind(corpus_bands)
+
+        def _process(batch_df: DataFrame, batch_id: int) -> None:
+            batch_df.persist()
+            try:
+                out = f"{out_path}/batch_id={batch_id}"
+                kernel(batch_df).write.mode("overwrite").parquet(out)
+            finally:
+                batch_df.unpersist()
+
+        (
+            stream.writeStream.queryName(f"{name}:{checkpoint_path}")
+            .foreachBatch(_process)
+            .option("checkpointLocation", checkpoint_path)
+            .trigger(availableNow=True)
+            .start()
+            .awaitTermination()
+        )
+    finally:
+        release(corpus_bands)
+    try:
+        return spark.read.parquet(out_path)
+    except AnalysisException as e:
+        cond = e.getCondition() if hasattr(e, "getCondition") else e.getErrorClass()
+        if cond != "PATH_NOT_FOUND":
+            raise
+        # zero microbatches: typed empty frame, batch_id LAST (ADVICE r8)
+        return local_frame(spark, [], empty_schema)
+
+
+def _counted(kernel: Callable, **kwargs):
+    """``bind`` for the kernels that pick their broadcast side from the
+    corpus band-row count: count once per stream, not per microbatch."""
+
+    def bind(bands: DataFrame):
+        n = bands.count()
+        return lambda batch: kernel(
+            batch, corpus_bands=bands, n_corpus_band_rows=n, **kwargs
+        )
+
+    return bind
 
 
 def stream_media_dedup_vs_corpus(
@@ -121,122 +213,65 @@ def stream_media_dedup_vs_corpus(
     store: "MediaSignatureStore | None" = None,
 ) -> DataFrame:
     """STREAMING ingest gate: arriving media files are deduped against
-    the persisted corpus signature table, one incremental-kernel run
-    per microbatch, exactly-once via idempotent per-batch-partition
-    overwrite.
+    the persisted corpus signature table by the incremental near-dup
+    kernel of their modality.
 
-    The TYPED way to construct the gate is ``store=`` — a
-    MediaSignatureStore handle, from whose sidecar the gate derives
-    (modality, hash_bits, every_n), so arrivals are guaranteed signed
-    at exactly the configuration the corpus table was (VERDICT r9
-    item 3: nothing used to tie the gate's kwargs to the table it
-    reads, and a width/stride drift silently produces that other
-    configuration's verdicts).  Call-site kwargs that CONTRADICT the
-    sidecar raise ConfigError instead of winning.
+    The TYPED form is ``store=`` — a MediaSignatureStore handle whose
+    sidecar pins (modality, hash_bits, every_n).  The loose form is
+    ``corpus_sig=`` plus explicit kwargs (defaults image/64/1) for
+    signer output that never went through a store; the caller then
+    owns config agreement.
 
-    The loose form (``corpus_sig=`` + explicit kwargs, defaults
-    image/64/1) remains for signer output that never went through a
-    store; the caller then owns config agreement.
-
-    Returns a batch read of the accumulated verdicts
-    (media_id, is_dup, dup_of, decoded, batch_id — the
-    partition-discovery column last, on the empty path too)."""
-    if store is not None:
-        if corpus_sig is not None:
-            raise ConfigError("pass corpus_sig= or store=, not both")
-        for name, given, pinned in (
-            ("modality", modality, store.modality),
-            ("hash_bits", hash_bits, store.hash_bits),
-            ("every_n", every_n, store.every_n),
-        ):
-            if given is not None and given != pinned:
-                raise ConfigError(
-                    f"gate {name}={given!r} contradicts the signature "
-                    f"table's sidecar ({name}={pinned!r} at {store.path}) — "
-                    "the store's pinned config wins; drop the kwarg"
-                )
-        modality, hash_bits, every_n = (
-            store.modality, store.hash_bits, store.every_n,
+    Returns (media_id, is_dup, dup_of, decoded, batch_id)."""
+    if store is not None and corpus_sig is not None:
+        raise ConfigError("pass corpus_sig= or store=, not both")
+    if store is None and corpus_sig is None:
+        raise ConfigError("pass corpus_sig= (loose) or store= (typed)")
+    try:
+        corpus_sig, cfg = _pin_to_store(
+            corpus_sig if store is None else store,
+            None,
+            "corpus_sig",
+            "signature table",
+            modality=modality,
+            hash_bits=hash_bits,
+            every_n=every_n,
         )
-        corpus_sig = store.signatures()
-    else:
-        if corpus_sig is None:
-            raise ConfigError("pass corpus_sig= (loose) or store= (typed)")
-        modality = "image" if modality is None else modality
-        hash_bits = 64 if hash_bits is None else hash_bits
-        every_n = 1 if every_n is None else every_n
+    except ConfigError as e:
+        raise ConfigError(
+            f"{e} — the store's pinned config wins; drop the kwarg"
+        ) from None
+    modality = "image" if cfg["modality"] is None else cfg["modality"]
+    hash_bits = 64 if cfg["hash_bits"] is None else cfg["hash_bits"]
+    every_n = 1 if cfg["every_n"] is None else cfg["every_n"]
     if modality not in _INCREMENTALS:
         raise ValueError(
             f"modality must be one of {sorted(_INCREMENTALS)}, got {modality!r}"
         )
-    if corpus_sig.isStreaming:  # pragma: no cover - contract guard
-        raise ValueError("corpus_sig must be a static (batch) table")
-    incremental = _INCREMENTALS[modality]
-    stream = _read_table_stream(
-        spark, media_path, MEDIA_STREAM_SCHEMA, max_files_per_trigger
-    )
-    # ONE corpus prep per stream (r11 persisted the signature table —
-    # one parquet scan per stream; r12 persists the BANDED form, so
-    # the per-microbatch 4×-explode rebuild goes too and each
-    # microbatch's join reads cached band rows: ~4×30 B/item, well
-    # inside a cluster's aggregate MEMORY_AND_DISK cache at 10⁹ items)
-    corpus_bands = _persisted_corpus_bands(
+    kwargs = dict(max_hamming=max_hamming, salvage=salvage, hash_bits=hash_bits)
+    if modality == "video":
+        kwargs["every_n"] = every_n
+
+    def bind(bands):
+        # the incrementals' broadcast pick is batch-side: no band count
+        return lambda batch: _INCREMENTALS[modality](
+            batch, corpus_sig=corpus_sig, corpus_bands=bands, **kwargs
+        )
+
+    return _run_gate(
+        spark,
+        media_path,
+        out_path,
+        checkpoint_path,
         corpus_sig,
         mm.sig_col_names(_SIG_BASES[modality], hash_bits),
-        frame_grain=(modality == "video"),
+        modality == "video",
+        bind,
+        "media_id BIGINT, is_dup BOOLEAN, dup_of BIGINT, decoded BOOLEAN, "
+        "batch_id INT",
+        max_files_per_trigger,
+        "stream_media_dedup_vs_corpus",
     )
-    # the banded corpus is already materialized (eager localCheckpoint
-    # inside _persisted_corpus_bands) BEFORE microbatch 1 — VERDICT r12
-    # item 6: without this the first microbatch paid the corpus banding
-    # inside its own wall time; the incrementals' broadcast pick is
-    # batch-side, so no separate count is needed here
-
-    def _process(batch_df: DataFrame, batch_id: int) -> None:
-        # one materialization of the batch instead of two source reads:
-        # the signer's widen probe aggregates the batch content, then
-        # the repartition+sign scans it again (optimization r15 —
-        # measured ~7% off the stream phase at sf0.1)
-        batch_df.persist()
-        try:
-            kwargs = dict(
-                corpus_sig=corpus_sig,
-                corpus_bands=corpus_bands,
-                max_hamming=max_hamming,
-                salvage=salvage,
-                hash_bits=hash_bits,
-            )
-            if modality == "video":
-                kwargs["every_n"] = every_n
-            out = incremental(batch_df, **kwargs)
-            out.write.mode("overwrite").parquet(f"{out_path}/batch_id={batch_id}")
-        finally:
-            batch_df.unpersist()
-
-    q = (
-        stream.writeStream.foreachBatch(_process)
-        .option("checkpointLocation", checkpoint_path)
-        .trigger(availableNow=True)
-        .start()
-    )
-    try:
-        q.awaitTermination()
-    finally:
-        release(corpus_bands)
-    try:
-        return spark.read.parquet(out_path)
-    except AnalysisException as e:
-        cond = e.getCondition() if hasattr(e, "getCondition") else e.getErrorClass()
-        if cond != "PATH_NOT_FOUND":
-            raise
-        # zero microbatches (empty source): typed empty frame with
-        # batch_id LAST, matching the partitioned read (the ADVICE r8
-        # column-order rule)
-        return local_frame(
-            spark,
-            [],
-            "media_id BIGINT, is_dup BOOLEAN, dup_of BIGINT, "
-            "decoded BOOLEAN, batch_id INT",
-        )
 
 
 def stream_video_contains_clip(
@@ -253,92 +288,38 @@ def stream_video_contains_clip(
     """STREAMING clip-containment gate: arriving full videos are
     checked for containing any KNOWN corpus clip as a contiguous frame
     run (blocked-content filters, licensed-clip detection) — the
-    streaming form of video_contains_clip_vs_corpus on the
-    idempotent-foreachBatch recipe shared by the other media gates:
-    each microbatch signs ONLY its own arrivals, band-joins the
-    clip table's PRE-BANDED form (banded once per stream, the banded
-    rows persisted across microbatches), groups candidates by
-    frame-offset delta, verifies the full clip run at each offset, and OVERWRITES
-    its own ``batch_id=<id>`` partition for exactly-once replay.
+    streaming form of video_contains_clip_vs_corpus.
 
     ``clip_sig`` is a persisted dhash_video_frames output or — the
-    typed form — a VIDEO-modality MediaSignatureStore handle (width
-    and stride pinned by the table's own sidecar; a wrong-modality
-    store raises ConfigError).  Matches are batch-split-invariant.
+    typed form — a VIDEO-modality MediaSignatureStore handle whose
+    sidecar pins width and ``every_n``.
 
-    Returns a batch read of the accumulated matches
-    (video_id, clip_id, offset, clip_frames, max_hamming_seen,
-    batch_id — the partition-discovery column last, on the empty path
-    too)."""
-    if hasattr(clip_sig, "signatures"):
-        store = clip_sig
-        if store.modality != "video":
-            raise ConfigError(
-                f"clip_sig store must be the video modality, got "
-                f"{store.modality!r}"
-            )
-        if every_n is not None and every_n != store.every_n:
-            raise ConfigError(
-                f"gate every_n={every_n!r} contradicts the clip table's "
-                f"sidecar (every_n={store.every_n!r} at {store.path})"
-            )
-        every_n = store.every_n
-        clip_sig = store.signatures()
-    if clip_sig.isStreaming:  # pragma: no cover - contract guard
-        raise ValueError("clip_sig must be a static (batch) table")
-    stream = _read_table_stream(
-        spark, media_path, MEDIA_STREAM_SCHEMA, max_files_per_trigger
+    Returns (video_id, clip_id, offset, clip_frames, max_hamming_seen,
+    batch_id)."""
+    clip_sig, cfg = _pin_to_store(
+        clip_sig, "video", "clip_sig", "clip table", every_n=every_n
     )
-    corpus_bands = _persisted_corpus_bands(
+    bind = _counted(
+        mm.video_contains_clip_vs_corpus,
+        clip_sig=clip_sig,
+        max_hamming=max_hamming,
+        every_n=cfg["every_n"],
+        salvage=salvage,
+    )
+    return _run_gate(
+        spark,
+        media_path,
+        out_path,
+        checkpoint_path,
         clip_sig,
         _infer_sig_cols(clip_sig, "dhash", "clip_sig"),
-        frame_grain=True,
+        True,
+        bind,
+        "video_id BIGINT, clip_id BIGINT, offset INT, clip_frames INT, "
+        "max_hamming_seen INT, batch_id INT",
+        max_files_per_trigger,
+        "stream_video_contains_clip",
     )
-    # count ONCE per stream (cheap: the banded corpus is an eager
-    # localCheckpoint leaf); feeds the per-batch broadcast-side pick
-    # without a per-batch corpus count
-    n_corpus_band_rows = corpus_bands.count()
-
-    def _process(batch_df: DataFrame, batch_id: int) -> None:
-        # one materialization of the batch instead of two source reads
-        # (widen probe agg + sign scan) — see stream_media_dedup_vs_corpus
-        batch_df.persist()
-        try:
-            out = mm.video_contains_clip_vs_corpus(
-                batch_df,
-                clip_sig=clip_sig,
-                corpus_bands=corpus_bands,
-                n_corpus_band_rows=n_corpus_band_rows,
-                max_hamming=max_hamming,
-                every_n=every_n,
-                salvage=salvage,
-            )
-            out.write.mode("overwrite").parquet(f"{out_path}/batch_id={batch_id}")
-        finally:
-            batch_df.unpersist()
-
-    q = (
-        stream.writeStream.foreachBatch(_process)
-        .option("checkpointLocation", checkpoint_path)
-        .trigger(availableNow=True)
-        .start()
-    )
-    try:
-        q.awaitTermination()
-    finally:
-        release(corpus_bands)
-    try:
-        return spark.read.parquet(out_path)
-    except AnalysisException as e:
-        cond = e.getCondition() if hasattr(e, "getCondition") else e.getErrorClass()
-        if cond != "PATH_NOT_FOUND":
-            raise
-        return local_frame(
-            spark,
-            [],
-            "video_id BIGINT, clip_id BIGINT, offset INT, "
-            "clip_frames INT, max_hamming_seen INT, batch_id INT",
-        )
 
 
 def stream_video_shared_runs(
@@ -354,95 +335,43 @@ def stream_video_shared_runs(
     every_n: int | None = None,
 ) -> DataFrame:
     """STREAMING shared-run gate (VERDICT r13 item 3): arriving videos
-    are checked for sharing any contiguous frame RUN with the persisted
-    corpus — licensed-segment / co-derivative-upload detection, the
-    production form of video_shared_run_pairs.  Near-dup refuses this
-    shape (equal lengths) and containment refuses it too (full clip
-    inside); the partial overlap only surfaces here.  Same
-    idempotent-foreachBatch recipe as the other media gates: each
-    microbatch signs ONLY its own arrivals, band-joins the corpus
-    table's PRE-BANDED persisted form, groups candidates by
-    frame-offset delta, collapses maximal runs with the
-    gaps-and-islands window, and OVERWRITES its own ``batch_id=<id>``
-    partition for exactly-once replay.
+    are checked for sharing any contiguous frame RUN of at least
+    ``min_run`` frames with the persisted corpus — licensed-segment /
+    co-derivative-upload detection, the streaming form of
+    video_shared_runs_vs_corpus.  Arrivals are not compared to each
+    other (that is the batch self-join operator's job).
 
     ``corpus_sig`` is a persisted dhash_video_frames output at frame
     grain or — the typed form — a VIDEO-modality MediaSignatureStore
-    handle (width and stride pinned by the table's own sidecar).
-    Arrival-vs-corpus verdicts are batch-split-invariant: each arrival
-    is judged against the fixed corpus only (arrivals are NOT compared
-    to each other — that cross-batch shape is the batch self-join
-    operator's job), so the accumulated output equals the batch
-    vs-corpus operator's on the union of arrivals.
+    handle whose sidecar pins width and ``every_n``.
 
-    Returns a batch read of the accumulated runs
-    (video_id, corpus_id, video_start, corpus_start, run_frames,
-    max_hamming_seen, batch_id — the partition-discovery column last,
-    on the empty path too)."""
-    if hasattr(corpus_sig, "signatures"):
-        store = corpus_sig
-        if store.modality != "video":
-            raise ConfigError(
-                f"corpus_sig store must be the video modality, got "
-                f"{store.modality!r}"
-            )
-        if every_n is not None and every_n != store.every_n:
-            raise ConfigError(
-                f"gate every_n={every_n!r} contradicts the corpus table's "
-                f"sidecar (every_n={store.every_n!r} at {store.path})"
-            )
-        every_n = store.every_n
-        corpus_sig = store.signatures()
-    if corpus_sig.isStreaming:  # pragma: no cover - contract guard
-        raise ValueError("corpus_sig must be a static (batch) table")
-    stream = _read_table_stream(
-        spark, media_path, MEDIA_STREAM_SCHEMA, max_files_per_trigger
+    Returns (video_id, corpus_id, video_start, corpus_start,
+    run_frames, max_hamming_seen, batch_id)."""
+    corpus_sig, cfg = _pin_to_store(
+        corpus_sig, "video", "corpus_sig", "corpus table", every_n=every_n
     )
-    corpus_bands = _persisted_corpus_bands(
+    bind = _counted(
+        mm.video_shared_runs_vs_corpus,
+        corpus_sig=corpus_sig,
+        min_run=min_run,
+        max_hamming=max_hamming,
+        every_n=cfg["every_n"],
+        salvage=salvage,
+    )
+    return _run_gate(
+        spark,
+        media_path,
+        out_path,
+        checkpoint_path,
         corpus_sig,
         _infer_sig_cols(corpus_sig, "dhash", "corpus_sig"),
-        frame_grain=True,
+        True,
+        bind,
+        "video_id BIGINT, corpus_id BIGINT, video_start INT, corpus_start INT, "
+        "run_frames INT, max_hamming_seen INT, batch_id INT",
+        max_files_per_trigger,
+        "stream_video_shared_runs",
     )
-    # once per stream: materializes the band cache + feeds the
-    # per-batch broadcast-side pick (see stream_video_contains_clip)
-    n_corpus_band_rows = corpus_bands.count()
-
-    def _process(batch_df: DataFrame, batch_id: int) -> None:
-        out = mm.video_shared_runs_vs_corpus(
-            batch_df,
-            corpus_sig=corpus_sig,
-            corpus_bands=corpus_bands,
-            n_corpus_band_rows=n_corpus_band_rows,
-            min_run=min_run,
-            max_hamming=max_hamming,
-            every_n=every_n,
-            salvage=salvage,
-        )
-        out.write.mode("overwrite").parquet(f"{out_path}/batch_id={batch_id}")
-
-    q = (
-        stream.writeStream.foreachBatch(_process)
-        .option("checkpointLocation", checkpoint_path)
-        .trigger(availableNow=True)
-        .start()
-    )
-    try:
-        q.awaitTermination()
-    finally:
-        release(corpus_bands)
-    try:
-        return spark.read.parquet(out_path)
-    except AnalysisException as e:
-        cond = e.getCondition() if hasattr(e, "getCondition") else e.getErrorClass()
-        if cond != "PATH_NOT_FOUND":
-            raise
-        return local_frame(
-            spark,
-            [],
-            "video_id BIGINT, corpus_id BIGINT, video_start INT, "
-            "corpus_start INT, run_frames INT, max_hamming_seen INT, "
-            "batch_id INT",
-        )
 
 
 def stream_video_audio_contains_clip(
@@ -457,105 +386,59 @@ def stream_video_audio_contains_clip(
     max_files_per_trigger: int | None = None,
     salvage: bool = False,
 ) -> DataFrame:
-    """STREAMING soundtrack gate (VERDICT r12 item 3's production
-    form): arriving VIDEOS' AUDIO TRACKS are checked for containing
-    any KNOWN audio clip as a contiguous span run (licensed-music
-    detection, blocked-audio filters over video uploads) — the
-    streaming form of video_audio_contains_clip_vs_corpus on the
-    idempotent-foreachBatch recipe shared by the other media gates:
-    each microbatch signs ONLY its own arrivals' audio tracks
-    (envelope spans over the '01wb' chunk walk), band-joins the clip
-    table's PRE-BANDED persisted form, groups candidates by span-offset
-    delta, verifies the full clip run, and OVERWRITES its own
-    ``batch_id=<id>`` partition for exactly-once replay.
+    """STREAMING soundtrack gate (VERDICT r12 item 3): arriving VIDEOS'
+    AUDIO TRACKS are checked for containing any KNOWN audio clip as a
+    contiguous span run (licensed-music detection, blocked-audio
+    filters) — the streaming form of
+    video_audio_contains_clip_vs_corpus.
 
-    ``clip_sig`` is the clip corpus at SPAN grain: the TYPED form is
-    an ``audio_span``-modality MediaSignatureStore handle — the
-    sidecar pins (span_samples, hop_samples, hash_bits), so every
-    microbatch signs arrivals' soundtracks at exactly the corpus
-    table's configuration and contradicting kwargs raise (the VERDICT
-    r9 item 3 rule, extended to this gate); the loose form is a
-    persisted envelope_hash_audio_spans output (the whole-clip store
-    table cannot compose under trimming, see
-    video_audio_contains_clip_vs_corpus; defaults span 1024 /
-    hop=span).  BOTH sides must sign at the same
-    (span_samples, hop_samples, hash_bits).  Offsets count in span
-    units (hop units when ``hop_samples`` is set).  Silent videos
-    vacuously match nothing.
+    ``clip_sig`` is the clip corpus at SPAN grain: the typed form is an
+    ``audio_span``-modality MediaSignatureStore handle whose sidecar
+    pins (span_samples, hop_samples, hash_bits); the loose form is a
+    persisted envelope_hash_audio_spans output (default span 1024,
+    hop = span).  A whole-clip table cannot compose under trimming.
+    Offsets count in span units (hop units when ``hop_samples`` is
+    set); silent videos match nothing.
 
-    Returns a batch read of the accumulated matches
-    (video_id, clip_id, offset, clip_frames, max_hamming_seen,
-    batch_id — the partition-discovery column last, on the empty path
-    too)."""
-    if hasattr(clip_sig, "signatures"):
-        store = clip_sig
-        if store.modality != "audio_span":
-            raise ConfigError(
-                f"clip_sig store must be the audio_span modality (got "
-                f"{store.modality!r}) — whole-clip envelope hashes cannot "
-                "compose under trimming; sign the clip corpus into an "
-                "audio_span store or pass envelope_hash_audio_spans output"
-            )
-        for name, given, pinned in (
-            ("span_samples", span_samples, store.span_samples),
-            ("hop_samples", hop_samples, store.hop_samples),
-        ):
-            if given is not None and given != pinned:
-                raise ConfigError(
-                    f"gate {name}={given!r} contradicts the clip span "
-                    f"table's sidecar ({name}={pinned!r} at {store.path})"
-                )
-        span_samples = store.span_samples
-        hop_samples = store.hop_samples
-        clip_sig = store.signatures()
-    elif span_samples is None:
-        span_samples = 1024  # the loose-form default
-    if clip_sig.isStreaming:  # pragma: no cover - contract guard
-        raise ValueError("clip_sig must be a static (batch) table")
-    sig_cols = _infer_sig_cols(clip_sig, "ahash", "clip_sig")
-    stream = _read_table_stream(
-        spark, media_path, MEDIA_STREAM_SCHEMA, max_files_per_trigger
-    )
-    corpus_bands = _persisted_corpus_bands(clip_sig, sig_cols, frame_grain=True)
-    # once per stream: materializes the band cache + feeds the
-    # per-batch broadcast-side pick (see stream_video_contains_clip)
-    n_corpus_band_rows = corpus_bands.count()
-
-    def _process(batch_df: DataFrame, batch_id: int) -> None:
-        out = mm.video_audio_contains_clip_vs_corpus(
-            batch_df,
-            clip_sig=clip_sig,
-            span_samples=span_samples,
-            hop_samples=hop_samples,
-            corpus_bands=corpus_bands,
-            n_corpus_band_rows=n_corpus_band_rows,
-            max_hamming=max_hamming,
-            salvage=salvage,
+    Returns (video_id, clip_id, offset, clip_frames, max_hamming_seen,
+    batch_id)."""
+    if hasattr(clip_sig, "signatures") and clip_sig.modality != "audio_span":
+        raise ConfigError(
+            f"clip_sig store must be the audio_span modality (got "
+            f"{clip_sig.modality!r}) — whole-clip envelope hashes cannot "
+            "compose under trimming; sign the clip corpus into an "
+            "audio_span store or pass envelope_hash_audio_spans output"
         )
-        out.write.mode("overwrite").parquet(f"{out_path}/batch_id={batch_id}")
-
-    q = (
-        stream.writeStream.foreachBatch(_process)
-        .option("checkpointLocation", checkpoint_path)
-        .trigger(availableNow=True)
-        .start()
+    clip_sig, cfg = _pin_to_store(
+        clip_sig,
+        None,
+        "clip_sig",
+        "clip span table",
+        span_samples=span_samples,
+        hop_samples=hop_samples,
     )
-    try:
-        q.awaitTermination()
-    finally:
-        release(corpus_bands)
-    try:
-        return spark.read.parquet(out_path)
-    except AnalysisException as e:
-        cond = e.getCondition() if hasattr(e, "getCondition") else e.getErrorClass()
-        if cond != "PATH_NOT_FOUND":
-            raise
-        return local_frame(
-            spark,
-            [],
-            "video_id BIGINT, clip_id BIGINT, offset INT, "
-            "clip_frames INT, max_hamming_seen INT, batch_id INT",
-        )
+    bind = _counted(
+        mm.video_audio_contains_clip_vs_corpus,
+        clip_sig=clip_sig,
+        span_samples=1024 if cfg["span_samples"] is None else cfg["span_samples"],
+        hop_samples=cfg["hop_samples"],
+        max_hamming=max_hamming,
+        salvage=salvage,
+    )
+    return _run_gate(
+        spark,
+        media_path,
+        out_path,
+        checkpoint_path,
+        clip_sig,
+        _infer_sig_cols(clip_sig, "ahash", "clip_sig"),
+        True,
+        bind,
+        "video_id BIGINT, clip_id BIGINT, offset INT, clip_frames INT, "
+        "max_hamming_seen INT, batch_id INT",
+        max_files_per_trigger,
+        "stream_video_audio_contains_clip",
+    )
 
 
 def stream_video_contains_image(
@@ -572,80 +455,33 @@ def stream_video_contains_image(
     """STREAMING cross-modality gate: arriving VIDEOS are checked for
     frames that match a known image corpus (re-encoded stills,
     slideshow scrapes, blocked-content filters) — the streaming form
-    of multimodal.binary.video_contains_image_pairs, on the same
-    idempotent-foreachBatch recipe as the ingest gate above: each
-    microbatch signs ONLY its own videos, band-joins the image
-    table's PRE-BANDED form (banded once per stream, persisted — zero
-    image-side work per microbatch beyond the cached-band read, zero
-    image-side shuffle under the batch broadcast bound), and
-    OVERWRITES its own ``batch_id=<id>`` partition for exactly-once
-    replay.
+    of video_contains_image_pairs.  ``every_n`` is the arrivals' frame
+    stride.
 
     ``image_sig`` is a persisted dhash_images output or — the typed
-    form — a MediaSignatureStore handle (width pinned by the table's
-    own sidecar).  Matches are batch-split-invariant: each arrival is
-    judged against the fixed image corpus, so the accumulated output
-    equals the batch operator's on the union of arrivals.
+    form — an IMAGE-modality MediaSignatureStore handle whose sidecar
+    pins the width.
 
-    Returns a batch read of the accumulated matches
-    (video_id, frame_no, image_id, hamming, batch_id — the
-    partition-discovery column last, on the empty path too)."""
-    if hasattr(image_sig, "signatures"):
-        store = image_sig
-        if store.modality != "image":
-            raise ConfigError(
-                f"image_sig store must be the image modality, got "
-                f"{store.modality!r}"
-            )
-        image_sig = store.signatures()
-    if image_sig.isStreaming:  # pragma: no cover - contract guard
-        raise ValueError("image_sig must be a static (batch) table")
-    stream = _read_table_stream(
-        spark, media_path, MEDIA_STREAM_SCHEMA, max_files_per_trigger
+    Returns (video_id, frame_no, image_id, hamming, batch_id)."""
+    image_sig, _ = _pin_to_store(image_sig, "image", "image_sig", "image table")
+    bind = _counted(
+        mm.video_contains_image_pairs,
+        image_sig=image_sig,
+        max_hamming=max_hamming,
+        every_n=every_n,
+        salvage=salvage,
     )
-    # ONE image-side prep for the WHOLE stream: the banded form is
-    # persisted, so each microbatch joins cached band rows (see
-    # stream_media_dedup_vs_corpus / _persisted_corpus_bands)
-    corpus_bands = _persisted_corpus_bands(
+    return _run_gate(
+        spark,
+        media_path,
+        out_path,
+        checkpoint_path,
         image_sig,
         _infer_sig_cols(image_sig, "dhash", "image_sig"),
-        frame_grain=False,
+        False,
+        bind,
+        "video_id BIGINT, frame_no INT, image_id BIGINT, hamming INT, "
+        "batch_id INT",
+        max_files_per_trigger,
+        "stream_video_contains_image",
     )
-    # once per stream: materializes the band cache + feeds the
-    # per-batch broadcast-side pick (see stream_video_contains_clip)
-    n_corpus_band_rows = corpus_bands.count()
-
-    def _process(batch_df: DataFrame, batch_id: int) -> None:
-        out = mm.video_contains_image_pairs(
-            batch_df,
-            image_sig=image_sig,
-            corpus_bands=corpus_bands,
-            n_corpus_band_rows=n_corpus_band_rows,
-            max_hamming=max_hamming,
-            every_n=every_n,
-            salvage=salvage,
-        )
-        out.write.mode("overwrite").parquet(f"{out_path}/batch_id={batch_id}")
-
-    q = (
-        stream.writeStream.foreachBatch(_process)
-        .option("checkpointLocation", checkpoint_path)
-        .trigger(availableNow=True)
-        .start()
-    )
-    try:
-        q.awaitTermination()
-    finally:
-        release(corpus_bands)
-    try:
-        return spark.read.parquet(out_path)
-    except AnalysisException as e:
-        cond = e.getCondition() if hasattr(e, "getCondition") else e.getErrorClass()
-        if cond != "PATH_NOT_FOUND":
-            raise
-        return local_frame(
-            spark,
-            [],
-            "video_id BIGINT, frame_no INT, image_id BIGINT, "
-            "hamming INT, batch_id INT",
-        )

@@ -1976,9 +1976,8 @@ def test_widen_for_decode_hollow_partitions(spark, tmp_path):
     parquet file PLANS as >= core-count splits but parquet cannot split
     below a row-group boundary, so all rows land in one partition and
     the old partition-count guard skipped widening (measured 25.7 s vs
-    3.3 s for the same 750 k-frame microbatch,
-    tools/probe_sign_parallel.py).  widen_for_decode must count
-    NON-EMPTY partitions: a hollow-but-'wide' frame past the row
+    3.3 s for the same 750 k-frame microbatch in r13).  widen_for_decode
+    must count NON-EMPTY partitions: a hollow-but-'wide' frame past the row
     threshold gets repartitioned."""
     n = spark.sparkContext.defaultParallelism
     big = spark.range(20000).selectExpr(

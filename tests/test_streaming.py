@@ -721,3 +721,171 @@ def test_stream_video_audio_contains_clip(spark, sf_dir, tmp_path):
         stream_video_audio_contains_clip(
             spark, str(tmp_path / "arrivals"), str(tmp_path / "m5"),
             str(tmp_path / "c5"), clip_sig=sstore, span_samples=512)
+
+
+def _persistent_rdd_ids(spark):
+    return set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
+
+
+def test_stream_video_contains_clip(spark, sf_dir, tmp_path):
+    """Streaming clip-containment gate: accumulated matches across
+    microbatches equal the batch vs-corpus operator's on the union of
+    arrivals (batch-split-invariant), Hive-partitioned by batch_id;
+    empty source returns the typed frame with batch_id LAST; a
+    non-video store or a contradicting every_n raises.  The five public
+    gates keep their parameter lists."""
+    import inspect
+    import os
+
+    from langchain_memvid_spark.exceptions import ConfigError
+    from langchain_memvid_spark.multimodal import binary as mm
+    from langchain_memvid_spark.multimodal.sigstore import MediaSignatureStore
+    from langchain_memvid_spark.streaming import media as sm
+
+    docs = load_table(spark, sf_dir, "documents").limit(60)
+    media = mm.synthesize_video_clip_corpus(docs, clip_every=5)
+    videos = media.filter(F.col("media_id") < mm.VARIANT_ID_OFFSET)
+    store = MediaSignatureStore(spark, str(tmp_path / "csigs"), "video")
+    store.sign_and_append(media.filter(F.col("media_id") >= mm.VARIANT_ID_OFFSET))
+    videos.repartition(3).write.parquet(str(tmp_path / "arrivals"))
+    cols = ["video_id", "clip_id", "offset", "clip_frames", "max_hamming_seen"]
+
+    out = sm.stream_video_contains_clip(
+        spark, str(tmp_path / "arrivals"), str(tmp_path / "matches"),
+        str(tmp_path / "ckpt"), clip_sig=store, max_files_per_trigger=1)
+    assert out.columns == cols + ["batch_id"]
+    batch_dirs = [d for d in os.listdir(tmp_path / "matches")
+                  if d.startswith("batch_id=")]
+    assert len(batch_dirs) == 3
+    got = sorted(tuple(r[c] for c in cols) for r in out.collect())
+    want = sorted(map(tuple, mm.video_contains_clip_vs_corpus(
+        videos, clip_sig=store.signatures()).select(*cols).collect()))
+    assert got == want and len(got) == 12  # 60 docs / 5 planted
+
+    # empty source: typed empty frame, batch_id last
+    spark.createDataFrame([], "media_id long, media_type string, content binary"
+                          ).write.parquet(str(tmp_path / "none"))
+    eout = sm.stream_video_contains_clip(
+        spark, str(tmp_path / "none"), str(tmp_path / "m2"),
+        str(tmp_path / "c2"), clip_sig=store)
+    assert eout.columns == cols + ["batch_id"]
+    assert eout.count() == 0
+
+    astore = MediaSignatureStore(spark, str(tmp_path / "asigs"), "audio")
+    with pytest.raises(ConfigError, match="video modality"):
+        sm.stream_video_contains_clip(
+            spark, str(tmp_path / "arrivals"), str(tmp_path / "m3"),
+            str(tmp_path / "c3"), clip_sig=astore)
+    with pytest.raises(ConfigError, match="contradicts the clip table's sidecar"):
+        sm.stream_video_contains_clip(
+            spark, str(tmp_path / "arrivals"), str(tmp_path / "m4"),
+            str(tmp_path / "c4"), clip_sig=store, every_n=store.every_n + 1)
+
+    head = ["spark", "media_path", "out_path", "checkpoint_path"]
+    empty = inspect.Parameter.empty
+    for gate, params in {
+        sm.stream_media_dedup_vs_corpus: dict(
+            corpus_sig=None, modality=None, max_hamming=3,
+            max_files_per_trigger=None, salvage=False, hash_bits=None,
+            every_n=None, store=None),
+        sm.stream_video_contains_clip: dict(
+            clip_sig=empty, max_hamming=3, max_files_per_trigger=None,
+            salvage=False, every_n=None),
+        sm.stream_video_shared_runs: dict(
+            corpus_sig=empty, min_run=2, max_hamming=3,
+            max_files_per_trigger=None, salvage=False, every_n=None),
+        sm.stream_video_audio_contains_clip: dict(
+            clip_sig=empty, span_samples=None, hop_samples=None,
+            max_hamming=3, max_files_per_trigger=None, salvage=False),
+        sm.stream_video_contains_image: dict(
+            image_sig=empty, max_hamming=3, max_files_per_trigger=None,
+            salvage=False, every_n=1),
+    }.items():
+        sig = inspect.signature(gate).parameters
+        assert [(p.name, p.default) for p in sig.values()] == (
+            [(n, empty) for n in head] + list(params.items())), gate.__name__
+
+
+def _tiny_image_gate_inputs(spark, tmp_path):
+    """A one-image store and two arriving rows: enough for a gate run
+    whose kernel is replaced or whose output is not inspected."""
+    from langchain_memvid_spark.multimodal import binary as mm
+    from langchain_memvid_spark.multimodal.sigstore import MediaSignatureStore
+
+    png = mm.encode_png(16, 8, mm._stretch_bytes(b"gate", 16 * 8))
+    schema = "media_id long, media_type string, content binary"
+    store = MediaSignatureStore(spark, str(tmp_path / "sigs"), "image")
+    store.sign_and_append(spark.createDataFrame([(0, "image", png)], schema))
+    spark.createDataFrame([(10, "image", png), (11, "image", png)], schema
+                          ).write.parquet(str(tmp_path / "arrivals"))
+    return store
+
+
+def test_stream_gate_releases_corpus_on_failure(spark, tmp_path, monkeypatch):
+    """The gate frees the banded corpus and every persisted microbatch
+    whether its kernel succeeds or fails on the first microbatch (the
+    failure then fails the gate): no cached RDD outlives the call.  The
+    kernel is a stand-in, because the real kernels each leave their own
+    per-batch signature checkpoint for the garbage collector."""
+    from pyspark.errors import StreamingQueryException
+
+    from langchain_memvid_spark.multimodal import binary as mm
+    from langchain_memvid_spark.streaming.media import stream_video_contains_image
+
+    store = _tiny_image_gate_inputs(spark, tmp_path)
+
+    def boom(batch, **kwargs):
+        batch.count()  # materialize the persisted microbatch first
+        raise RuntimeError("kernel failed")
+
+    cached = _persistent_rdd_ids(spark)
+    monkeypatch.setattr(mm, "video_contains_image_pairs",
+                        lambda batch, **kwargs: batch.select("media_id"))
+    out = stream_video_contains_image(
+        spark, str(tmp_path / "arrivals"), str(tmp_path / "ok"),
+        str(tmp_path / "ok_ckpt"), image_sig=store)
+    assert out.count() == 2
+    assert _persistent_rdd_ids(spark) - cached == set()
+
+    monkeypatch.setattr(mm, "video_contains_image_pairs", boom)
+    with pytest.raises(StreamingQueryException, match="kernel failed"):
+        stream_video_contains_image(
+            spark, str(tmp_path / "arrivals"), str(tmp_path / "out"),
+            str(tmp_path / "ckpt"), image_sig=store)
+    assert _persistent_rdd_ids(spark) - cached == set()
+
+
+def test_stream_gate_query_name(spark, tmp_path):
+    """Each gate's stream runs under the gate's public function name,
+    so Spark's streaming UI and listeners can tell the gates apart,
+    suffixed with the checkpoint path, so two runs of one gate can be
+    active in one session at once."""
+    from pyspark.sql.streaming.listener import StreamingQueryListener
+
+    from langchain_memvid_spark.streaming.media import stream_media_dedup_vs_corpus
+
+    store = _tiny_image_gate_inputs(spark, tmp_path)
+    names = []
+
+    class Names(StreamingQueryListener):
+        def onQueryStarted(self, event):
+            names.append(event.name)
+
+        def onQueryProgress(self, event):
+            pass
+
+        def onQueryIdle(self, event):
+            pass
+
+        def onQueryTerminated(self, event):
+            pass
+
+    listener = Names()
+    spark.streams.addListener(listener)
+    try:
+        stream_media_dedup_vs_corpus(
+            spark, str(tmp_path / "arrivals"), str(tmp_path / "out"),
+            str(tmp_path / "ckpt"), store=store)
+    finally:
+        spark.streams.removeListener(listener)
+    assert names == [f"stream_media_dedup_vs_corpus:{tmp_path / 'ckpt'}"]
