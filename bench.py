@@ -17,7 +17,7 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from langchain_memvid_spark.plans.registry import QUERIES  # noqa: E402
-from langchain_memvid_spark.session import get_spark  # noqa: E402
+from langchain_memvid_spark.session import codegen_compiles, get_spark  # noqa: E402
 
 # Headline set: one per operator family, weighted toward the
 # scale-sensitive ones (joins, window aggs, dedup pipelines, ANN).
@@ -318,13 +318,19 @@ def main() -> None:
     except Exception as e:
         print(f"# codes layout warmup failed: {e}", file=sys.stderr)
 
+    # codegen classes each row compiled (all its reps): 0 on a row
+    # whose classes a warm-up or earlier row left in the cache.  Full
+    # artifact only, never the stdout line.
+    compiles: dict[str, int] = {}
     timings: dict[str, float] = {}
     for name in HEADLINE:
         qd = QUERIES[name]
+        c0 = codegen_compiles(spark)
         t0 = time.time()
         df = qd.fn(spark, sf_dir)
         n = df.count()
         timings[name] = round(time.time() - t0, 3)
+        compiles[name] = codegen_compiles(spark) - c0
         print(f"# {name}: {timings[name]}s ({n} rows)", file=sys.stderr)
 
     grid = vector_grid(spark, sf_dir)
@@ -335,12 +341,14 @@ def main() -> None:
         qd = QUERIES[name]
         best = None
         reps = 2 if name in MEDIA_MIN_OF_2 else 1
+        c0 = codegen_compiles(spark)
         for _ in range(reps):
             t0 = time.time()
             n = qd.fn(spark, sf_dir).count()
             dt = round(time.time() - t0, 3)
             best = dt if best is None else min(best, dt)
         extended[name] = best
+        compiles[name] = codegen_compiles(spark) - c0
         tag = " (min of 2)" if reps == 2 else ""
         print(f"# {name}: {extended[name]}s ({n} rows){tag}", file=sys.stderr)
 
@@ -422,7 +430,7 @@ def main() -> None:
                 )
                 full = os.path.join(repo, f"bench_r{n}_full.{ts}.json")
         with open(full, "w") as fh:
-            json.dump(payload, fh, indent=1, sort_keys=True)
+            json.dump({**payload, "codegen_compiles": compiles}, fh, indent=1, sort_keys=True)
         print(f"# full artifact: {full}", file=sys.stderr)
     except Exception as e:  # the artifact must never fail the bench
         print(f"# full-artifact write failed: {e}", file=sys.stderr)

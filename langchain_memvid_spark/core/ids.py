@@ -22,8 +22,16 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import IntegerType, LongType, StructField, StructType
 
 from langchain_memvid_spark.session import local_frame
+
+_OFFSETS_SCHEMA = StructType(
+    [
+        StructField("__pid", IntegerType(), nullable=False),
+        StructField("__off", LongType(), nullable=False),
+    ]
+)
 
 
 def add_sequential_ids(
@@ -72,13 +80,18 @@ def sequential_ids(
         offsets[pid] = acc
         acc += counts[pid]
 
+    # Every __pid that has rows has an offset, so an inner join loses no
+    # row, and NOT NULL offsets keep the id column NOT NULL.  ``start``
+    # reaches the plan only as offset rows: a literal would be inlined
+    # into the generated Java source, and every call with a new start
+    # would compile classes of its own.
     offsets_df = local_frame(
         df.sparkSession,
-        [(pid, off) for pid, off in offsets.items()] or [(0, start)], "__pid INT, __off LONG"
+        [(pid, off) for pid, off in offsets.items()] or [(0, start)], _OFFSETS_SCHEMA
     )
     ids = (
-        with_ord.join(F.broadcast(offsets_df), "__pid", "left")
-        .withColumn(id_col, (F.coalesce(F.col("__off"), F.lit(start)) + F.col("__ord")).cast("long"))
+        with_ord.join(F.broadcast(offsets_df), "__pid")
+        .withColumn(id_col, (F.col("__off") + F.col("__ord")).cast("long"))
         .drop("__pid", "__ord", "__off")
     )
     return ids, pinned

@@ -2018,6 +2018,27 @@ def video_near_dup_pairs(
     return cross.unionByName(within)
 
 
+def _pin_batch_sigs(
+    sigs: DataFrame, n_band_rows: int | None, pinned: list | None
+) -> tuple[DataFrame, int]:
+    """Pin a batch-side signature table that feeds several plan
+    branches, so the batch is signed once.  Without a given band-row
+    count (4 per signature row) an eager localCheckpoint signs and
+    counts for the exact broadcast pick; with one, a lazy cache() pins
+    without a plan-construction job.  A ``pinned`` list receives the
+    pinned frame, for the caller to free with ``session.release`` once
+    the kernel's result is consumed (the streaming gates do, after each
+    microbatch's write)."""
+    if n_band_rows is None:
+        sigs = sigs.localCheckpoint(eager=True)
+        n_band_rows = sigs.count() * 4
+    else:
+        sigs = sigs.cache()
+    if pinned is not None:
+        pinned.append(sigs)
+    return sigs, n_band_rows
+
+
 def video_contains_image_pairs(
     videos: DataFrame,
     images: DataFrame | None = None,
@@ -2030,6 +2051,7 @@ def video_contains_image_pairs(
     hash_bits: int | None = None,
     corpus_bands: DataFrame | None = None,
     n_corpus_band_rows: int | None = None,
+    pinned: list | None = None,
 ) -> DataFrame:
     """CROSS-MODALITY near-dup: which videos contain (as a frame) a
     known image — re-encoded stills, slideshow scrapes, logo bumpers
@@ -2116,12 +2138,7 @@ def video_contains_image_pairs(
     frames = dhash_video_frames(
         videos, every_n=every_n, salvage=salvage, hash_bits=hash_bits
     )
-    if n_band_rows is None:
-        # sign the batch once (eager) and take the exact-count pick
-        frames = frames.localCheckpoint(eager=True)
-        n_band_rows = frames.count() * n_bands
-    else:
-        frames = frames.cache()
+    frames, n_band_rows = _pin_batch_sigs(frames, n_band_rows, pinned)
     f_sig = [f"__f{j}" for j in range(len(sig_cols))]
     i_sig = [f"__i{j}" for j in range(len(sig_cols))]
     fb = hamming_band_table(
@@ -2254,13 +2271,9 @@ def video_contains_clip_pairs(
         media, every_n=every_n, salvage=salvage, hash_bits=hash_bits,
         with_seq_key=True,
     )
-    if n_band_rows is None:
-        sigs = sigs.localCheckpoint(eager=True)
-        n_band_rows = sigs.count() * n_bands
-    else:
-        # signing feeds the band table, both verify sides, and the
-        # member expansion — materialize once, never re-walk containers
-        sigs = sigs.cache()
+    # signing feeds the band table, both verify sides, and the member
+    # expansion — materialize once, never re-walk containers
+    sigs, n_band_rows = _pin_batch_sigs(sigs, n_band_rows, None)
     return _contains_clip_pairs_from_sigs(
         sigs, sig_cols, max_hamming, every_n, n_band_rows, max_bucket,
         band_bits,
@@ -2429,6 +2442,7 @@ def video_contains_clip_vs_corpus(
     hash_bits: int | None = None,
     corpus_bands: DataFrame | None = None,
     n_corpus_band_rows: int | None = None,
+    pinned: list | None = None,
 ) -> DataFrame:
     """Clip containment in the BATCH-VS-CORPUS shape — the
     blocked-content-filter / licensed-clip-detection production form:
@@ -2468,14 +2482,14 @@ def video_contains_clip_vs_corpus(
                 f"clip_sig store must be the video modality, got "
                 f"{store.modality!r}"
             )
-        for name, given, pinned in (
+        for name, given, sidecar in (
             ("hash_bits", hash_bits, store.hash_bits),
             ("every_n", every_n, store.every_n),
         ):
-            if given is not None and given != pinned:
+            if given is not None and given != sidecar:
                 raise ConfigError(
                     f"{name}={given!r} contradicts the clip signature "
-                    f"table's sidecar ({name}={pinned!r} at {store.path})"
+                    f"table's sidecar ({name}={sidecar!r} at {store.path})"
                 )
         hash_bits, every_n = store.hash_bits, store.every_n
         clip_sig = store.signatures()
@@ -2498,17 +2512,12 @@ def video_contains_clip_vs_corpus(
         hash_bits = inferred
     if every_n is None:
         every_n = 1
-    n_bands = 4
     band_bits = 16 if hash_bits == 64 else 64
     sig_cols = sig_col_names("dhash", hash_bits)
     frames = dhash_video_frames(
         new_videos, every_n=every_n, salvage=salvage, hash_bits=hash_bits
     )
-    if n_band_rows is None:
-        frames = frames.localCheckpoint(eager=True)
-        n_band_rows = frames.count() * n_bands
-    else:
-        frames = frames.cache()
+    frames, n_band_rows = _pin_batch_sigs(frames, n_band_rows, pinned)
     return _contains_clip_vs_corpus_verify(
         frames, clip_sig, sig_cols, band_bits, max_hamming, every_n,
         n_band_rows, corpus_bands, n_corpus_band_rows,
@@ -2668,14 +2677,10 @@ def video_shared_run_pairs(
     band_bits = 16 if hash_bits == 64 else 64
     sig_cols = sig_col_names("dhash", hash_bits)
     sigs = dhash_video_frames(media, salvage=salvage, hash_bits=hash_bits)
-    if n_band_rows is None:
-        sigs = sigs.localCheckpoint(eager=True)
-        n_band_rows = sigs.count() * n_bands
-    else:
-        # the (band, val) SELF-join references the signed table on both
-        # sides — uncached, the decode+hash signer subtree evaluates
-        # twice per run (ADVICE r13; mirrors the containment ops)
-        sigs = sigs.cache()
+    # the (band, val) SELF-join references the signed table on both
+    # sides — unpinned, the decode+hash signer subtree evaluates twice
+    # per run (ADVICE r13; mirrors the containment ops)
+    sigs, n_band_rows = _pin_batch_sigs(sigs, n_band_rows, None)
     return _shared_run_pairs_from_sigs(
         sigs, sig_cols, min_run, max_hamming, n_band_rows, band_bits
     )
@@ -2808,13 +2813,9 @@ def audio_shared_run_pairs(
             media, span_samples=span_samples, salvage=salvage,
             hash_bits=hash_bits, hop_samples=hop_samples,
         )
-        if n_band_rows is None:
-            sigs = sigs.localCheckpoint(eager=True)
-            n_band_rows = sigs.count() * 4
-        else:
-            # self-join: cache or the signer subtree runs twice
-            # (ADVICE r13; mirrors the containment ops)
-            sigs = sigs.cache()
+        # self-join: pin or the signer subtree runs twice (ADVICE r13;
+        # mirrors the containment ops)
+        sigs, n_band_rows = _pin_batch_sigs(sigs, n_band_rows, None)
     return _shared_run_pairs_from_sigs(
         sigs, sig_cols, min_run, max_hamming, n_band_rows, band_bits
     )
@@ -2832,6 +2833,7 @@ def video_shared_runs_vs_corpus(
     hash_bits: int | None = None,
     corpus_bands: DataFrame | None = None,
     n_corpus_band_rows: int | None = None,
+    pinned: list | None = None,
 ) -> DataFrame:
     """PARTIAL-OVERLAP detection in the BATCH-VS-CORPUS shape (VERDICT
     r13 item 3): arriving videos are checked for sharing any contiguous
@@ -2880,14 +2882,14 @@ def video_shared_runs_vs_corpus(
                 f"corpus_sig store must be the video modality, got "
                 f"{store.modality!r}"
             )
-        for name, given, pinned in (
+        for name, given, sidecar in (
             ("hash_bits", hash_bits, store.hash_bits),
             ("every_n", every_n, store.every_n),
         ):
-            if given is not None and given != pinned:
+            if given is not None and given != sidecar:
                 raise ConfigError(
                     f"{name}={given!r} contradicts the corpus signature "
-                    f"table's sidecar ({name}={pinned!r} at {store.path})"
+                    f"table's sidecar ({name}={sidecar!r} at {store.path})"
                 )
         hash_bits, every_n = store.hash_bits, store.every_n
         corpus_sig = store.signatures()
@@ -2915,11 +2917,7 @@ def video_shared_runs_vs_corpus(
     frames = dhash_video_frames(
         new_videos, every_n=every_n, salvage=salvage, hash_bits=hash_bits
     )
-    if n_band_rows is None:
-        frames = frames.localCheckpoint(eager=True)
-        n_band_rows = frames.count() * 4
-    else:
-        frames = frames.cache()
+    frames, n_band_rows = _pin_batch_sigs(frames, n_band_rows, pinned)
     return _shared_runs_vs_corpus_from_sigs(
         frames, corpus_sig, sig_cols, band_bits, min_run, max_hamming,
         every_n, n_band_rows, corpus_bands, n_corpus_band_rows,
@@ -3141,6 +3139,7 @@ def video_audio_contains_clip_vs_corpus(
     hash_bits: int | None = None,
     corpus_bands: DataFrame | None = None,
     n_corpus_band_rows: int | None = None,
+    pinned: list | None = None,
 ) -> DataFrame:
     """SOUNDTRACK containment — audio-track-in-video (VERDICT r12
     item 3, the one real containment shape the matrix was missing): an
@@ -3201,15 +3200,15 @@ def video_audio_contains_clip_vs_corpus(
         # and width, so arrivals are guaranteed signed at exactly the
         # configuration the corpus was (the VERDICT r9 item 3 rule,
         # extended to the soundtrack gate); contradicting kwargs raise
-        for name, given, pinned in (
+        for name, given, sidecar in (
             ("span_samples", span_samples, store.span_samples),
             ("hop_samples", hop_samples, store.hop_samples),
             ("hash_bits", hash_bits, store.hash_bits),
         ):
-            if given is not None and given != pinned:
+            if given is not None and given != sidecar:
                 raise ConfigError(
                     f"{name}={given!r} contradicts the clip span table's "
-                    f"sidecar ({name}={pinned!r} at {store.path})"
+                    f"sidecar ({name}={sidecar!r} at {store.path})"
                 )
         span_samples = store.span_samples
         hop_samples = store.hop_samples
@@ -3239,11 +3238,7 @@ def video_audio_contains_clip_vs_corpus(
         new_videos, span_samples=span_samples, salvage=salvage,
         hash_bits=hash_bits, hop_samples=hop_samples,
     )
-    if n_band_rows is None:
-        spans = spans.localCheckpoint(eager=True)
-        n_band_rows = spans.count() * 4
-    else:
-        spans = spans.cache()
+    spans, n_band_rows = _pin_batch_sigs(spans, n_band_rows, pinned)
     return _contains_clip_vs_corpus_verify(
         spans, clip_sig, sig_cols, band_bits, max_hamming, 1,
         n_band_rows, corpus_bands, n_corpus_band_rows,
@@ -3838,11 +3833,7 @@ def audio_contains_clip_pairs(
             media, span_samples=span_samples, salvage=salvage,
             hash_bits=hash_bits, with_seq_key=True, hop_samples=hop_samples,
         )
-        if n_band_rows is None:
-            sigs = sigs.localCheckpoint(eager=True)
-            n_band_rows = sigs.count() * 4
-        else:
-            sigs = sigs.cache()
+        sigs, n_band_rows = _pin_batch_sigs(sigs, n_band_rows, None)
     return _contains_clip_pairs_from_sigs(
         sigs, sig_cols, max_hamming, 1, n_band_rows, max_bucket, band_bits
     )
@@ -4027,6 +4018,7 @@ def incremental_image_near_dup(
     salvage: bool = False,
     hash_bits: int = 64,
     corpus_bands: DataFrame | None = None,
+    pinned: list | None = None,
 ) -> DataFrame:
     """Dedup a NEW batch of images against an EXISTING corpus — the
     production ingest shape (every scrape batch vs billions of
@@ -4065,6 +4057,7 @@ def incremental_image_near_dup(
         max_hamming=max_hamming,
         band_bits=16 if hash_bits == 64 else 64,
         corpus_bands=corpus_bands,
+        pinned=pinned,
     )
 
 
@@ -4078,6 +4071,7 @@ def incremental_audio_near_dup(
     salvage: bool = False,
     hash_bits: int = 64,
     corpus_bands: DataFrame | None = None,
+    pinned: list | None = None,
 ) -> DataFrame:
     """incremental_image_near_dup on the audio modality: a new batch of
     clips checks against the persisted corpus ENVELOPE signature table
@@ -4100,6 +4094,7 @@ def incremental_audio_near_dup(
         max_hamming=max_hamming,
         band_bits=16 if hash_bits == 64 else 64,
         corpus_bands=corpus_bands,
+        pinned=pinned,
     )
 
 
@@ -4113,6 +4108,7 @@ def _incremental_hamming_verdicts(
     max_hamming: int,
     band_bits: int = 16,
     corpus_bands: DataFrame | None = None,
+    pinned: list | None = None,
 ) -> DataFrame:
     """Shared batch-vs-corpus kernel for every hamming signature space
     (image dHash, audio envelope hash, 64-bit or wide): band the
@@ -4151,6 +4147,8 @@ def _incremental_hamming_verdicts(
     # running once per plan branch without triggering a job at plan
     # construction time (localCheckpoint does, even eager=False)
     new_sig = new_sig.cache()
+    if pinned is not None:
+        pinned.append(new_sig)
 
     def bandify(sig: DataFrame, prefix: str) -> DataFrame:
         banded = hamming_band_table(
@@ -4306,6 +4304,7 @@ def incremental_video_near_dup(
     salvage: bool = False,
     hash_bits: int = 64,
     corpus_bands: DataFrame | None = None,
+    pinned: list | None = None,
 ) -> DataFrame:
     """Incremental dedup on the VIDEO modality — video_near_dup_pairs'
     temporally-aligned full-depth verify in the batch-vs-corpus shape:
@@ -4350,15 +4349,8 @@ def incremental_video_near_dup(
     new_sig = dhash_video_frames(
         new_media, every_n=every_n, salvage=salvage, hash_bits=hash_bits
     )
-    if n_band_rows is None:
-        # band rows = 4 per sampled frame; the checkpoint also means
-        # signing runs once, not once per use below
-        new_sig = new_sig.localCheckpoint(eager=True)
-        n_band_rows = new_sig.count() * 4
-    else:
-        # signing still feeds both the band join and the decoded-ids
-        # flag — reuse without a plan-construction job
-        new_sig = new_sig.cache()
+    # signing feeds both the band join and the decoded-ids flag
+    new_sig, n_band_rows = _pin_batch_sigs(new_sig, n_band_rows, pinned)
 
     n_bands = 4
     band_bits = 16 if hash_bits == 64 else 64

@@ -117,7 +117,7 @@ def _run_gate(
     corpus_sig: DataFrame,
     sig_cols: list,
     frame_grain: bool,
-    bind: Callable[[DataFrame], Callable[[DataFrame], DataFrame]],
+    bind: Callable[[DataFrame], Callable[[DataFrame, list], DataFrame]],
     empty_schema: str,
     max_files_per_trigger: int | None,
     name: str,
@@ -145,9 +145,13 @@ def _run_gate(
     (ADVICE r11).
 
     ``bind(corpus_bands)`` is called once per stream and returns the
-    per-microbatch kernel (see ``_counted``).  Each microbatch is
-    persisted for the kernel, because the signer's widen probe and its
-    sign scan both read it."""
+    per-microbatch kernel ``kernel(batch, pinned)`` (see ``_counted``).
+    Each microbatch is persisted for the kernel, because the signer's
+    widen probe and its sign scan both read it.  The kernel appends to
+    ``pinned`` the batch signature table it checkpointed or cached;
+    the runner frees those with ``session.release`` once the batch's
+    write is done, failed or not, so no microbatch leaves a persistent
+    RDD behind for the garbage collector."""
     stream = _read_table_stream(
         spark, media_path, MEDIA_STREAM_SCHEMA, max_files_per_trigger
     )
@@ -159,10 +163,13 @@ def _run_gate(
 
         def _process(batch_df: DataFrame, batch_id: int) -> None:
             batch_df.persist()
+            pinned: list[DataFrame] = []
             try:
                 out = f"{out_path}/batch_id={batch_id}"
-                kernel(batch_df).write.mode("overwrite").parquet(out)
+                kernel(batch_df, pinned).write.mode("overwrite").parquet(out)
             finally:
+                for df in pinned:
+                    release(df)
                 batch_df.unpersist()
 
         (
@@ -191,8 +198,8 @@ def _counted(kernel: Callable, **kwargs):
 
     def bind(bands: DataFrame):
         n = bands.count()
-        return lambda batch: kernel(
-            batch, corpus_bands=bands, n_corpus_band_rows=n, **kwargs
+        return lambda batch, pinned: kernel(
+            batch, corpus_bands=bands, n_corpus_band_rows=n, pinned=pinned, **kwargs
         )
 
     return bind
@@ -254,8 +261,8 @@ def stream_media_dedup_vs_corpus(
 
     def bind(bands):
         # the incrementals' broadcast pick is batch-side: no band count
-        return lambda batch: _INCREMENTALS[modality](
-            batch, corpus_sig=corpus_sig, corpus_bands=bands, **kwargs
+        return lambda batch, pinned: _INCREMENTALS[modality](
+            batch, corpus_sig=corpus_sig, corpus_bands=bands, pinned=pinned, **kwargs
         )
 
     return _run_gate(

@@ -1,5 +1,6 @@
 """local_frame: driver rows as a JVM local relation, equal in schema
-and values to ``createDataFrame(list, schema)``."""
+and values to ``createDataFrame(list, schema)``; the session's codegen
+cache outlives a burst of unrelated plan shapes."""
 
 import json
 import math
@@ -16,7 +17,8 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from langchain_memvid_spark.session import local_frame
+from langchain_memvid_spark.plans.registry import QUERIES
+from langchain_memvid_spark.session import codegen_compiles, local_frame
 
 EDGE_SCHEMA = StructType(
     [
@@ -85,3 +87,18 @@ def test_local_frame_rejects_bad_rows(spark, rows):
     schema = StructType([StructField("a", IntegerType(), nullable=False)])
     with pytest.raises((TypeError, ValueError)):
         local_frame(spark, rows, schema)
+
+
+def test_codegen_cache_survives_unrelated_shapes(spark, sf_dir):
+    """A registry query compiles nothing on its second run, even after
+    more distinct plan shapes than Spark's default cache of 100 holds:
+    each of the 150 flood queries inlines its own literal, so each is a
+    class of its own."""
+    query = QUERIES["q1_pricing_summary"].fn
+    first = query(spark, sf_dir).collect()
+    for i in range(150):
+        spark.range(3).selectExpr(f"id + {i} AS x").collect()
+    before = codegen_compiles(spark)
+    again = query(spark, sf_dir).collect()
+    assert codegen_compiles(spark) == before
+    assert again == first

@@ -3,10 +3,13 @@
 round-trip, dedup, delete-by-ids/texts incl. first-occurrence and
 invalid-id cases, id renumbering, stats."""
 
+import numpy as np
 import pytest
 
 from langchain_memvid_spark import SparkVectorStore, IndexError_
 from langchain_memvid_spark.config import EngineConfig, IndexConfig
+from langchain_memvid_spark.embeddings import HashEmbeddings
+from langchain_memvid_spark.session import codegen_compiles
 
 TEXTS = [
     "The quick brown fox jumps over the lazy dog",
@@ -1592,3 +1595,40 @@ def test_store_session_reads_no_python_rdd(spark):
     plans = [e.physicalPlanDescription() for e in executions() if e.executionId() > last]
     assert len(plans) >= 5
     assert not [p for p in plans if "applySchemaToPythonRDD" in p]
+
+
+def test_warm_store_calls_compile_nothing(spark):
+    """After one call of each kind, calls with new ids, new texts and a
+    new query text reuse the session's codegen classes, also an add to
+    a store whose size has changed: per-call values reach the generated
+    code as array literals or rows, never as Java source.  Answers
+    match a plain-Python model of the store."""
+    model = [f"warm doc {i} on subject {i % 5}" for i in range(40)]
+    s = SparkVectorStore.from_texts(model, spark)
+
+    def top3(text):
+        vecs = np.array(HashEmbeddings().embed_documents(model))
+        sims = vecs @ np.array(HashEmbeddings().embed_query(text))
+        return [model[i] for i in np.argsort(-sims, kind="stable")[:3]]
+
+    def calls(lookup_ids, added, delete_ids, text):
+        got = s.get_documents_by_ids(lookup_ids)
+        s.add_texts(added)
+        model.extend(added)
+        assert s.delete_by_ids(delete_ids) is True
+        for i in sorted(delete_ids, reverse=True):
+            del model[i]
+        hits = s.similarity_search(text, k=3)
+        return got, hits
+
+    calls([1, 2, 3, 4, 5], ["first note", "second note", "third note"], [7, 11], model[3])
+    text = model[9]
+    expected = [(i, model[i]) for i in (6, 13, 20, 27, 30)]
+    before = codegen_compiles(spark)
+    got, hits = calls(
+        [6, 13, 20, 27, 30], ["fourth remark", "fifth one"], [0, 19, 25], text
+    )
+    assert codegen_compiles(spark) == before
+    assert [(d["doc_id"], d["page_content"]) for d in got] == expected
+    assert [d["page_content"] for d in hits] == top3(text)
+    assert [d["page_content"] for d in s.get_all_documents()] == model

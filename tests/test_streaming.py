@@ -731,6 +731,8 @@ def test_stream_video_contains_clip(spark, sf_dir, tmp_path):
     """Streaming clip-containment gate: accumulated matches across
     microbatches equal the batch vs-corpus operator's on the union of
     arrivals (batch-split-invariant), Hive-partitioned by batch_id;
+    the run leaves no new persistent RDD (the kernel hands back each
+    microbatch's signature checkpoint for the runner to free);
     empty source returns the typed frame with batch_id LAST; a
     non-video store or a contradicting every_n raises.  The five public
     gates keep their parameter lists."""
@@ -750,9 +752,11 @@ def test_stream_video_contains_clip(spark, sf_dir, tmp_path):
     videos.repartition(3).write.parquet(str(tmp_path / "arrivals"))
     cols = ["video_id", "clip_id", "offset", "clip_frames", "max_hamming_seen"]
 
+    cached = _persistent_rdd_ids(spark)
     out = sm.stream_video_contains_clip(
         spark, str(tmp_path / "arrivals"), str(tmp_path / "matches"),
         str(tmp_path / "ckpt"), clip_sig=store, max_files_per_trigger=1)
+    assert _persistent_rdd_ids(spark) - cached == set()
     assert out.columns == cols + ["batch_id"]
     batch_dirs = [d for d in os.listdir(tmp_path / "matches")
                   if d.startswith("batch_id=")]
@@ -825,8 +829,8 @@ def test_stream_gate_releases_corpus_on_failure(spark, tmp_path, monkeypatch):
     """The gate frees the banded corpus and every persisted microbatch
     whether its kernel succeeds or fails on the first microbatch (the
     failure then fails the gate): no cached RDD outlives the call.  The
-    kernel is a stand-in, because the real kernels each leave their own
-    per-batch signature checkpoint for the garbage collector."""
+    kernel is a stand-in, so that it fails for certain;
+    test_stream_video_contains_clip checks a real kernel's run."""
     from pyspark.errors import StreamingQueryException
 
     from langchain_memvid_spark.multimodal import binary as mm

@@ -3,7 +3,9 @@
 Runs every registry query on Spark and its oracle on DuckDB at the
 given sf dir, then compares row count, column names, and exact values
 (columns sorted by name, rows sorted) — a stricter stand-in for the
-driver's order-insensitive value hash.
+driver's order-insensitive value hash.  Each line also gives the codegen
+classes its Spark side compiled (``session.codegen_compiles``), and the
+last line the sweep's total.
 
 Usage: python tools/check_queries.py [sf_dir] [query ...]
 """
@@ -22,7 +24,7 @@ import pandas as pd
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from langchain_memvid_spark.plans.registry import QUERIES  # noqa: E402
-from langchain_memvid_spark.session import get_spark  # noqa: E402
+from langchain_memvid_spark.session import codegen_compiles, get_spark  # noqa: E402
 from langchain_memvid_spark.sources.catalog import TABLES  # noqa: E402
 
 
@@ -73,18 +75,21 @@ def main() -> int:
     spark = get_spark("check-queries")
     con = duck_con(sf_dir)
     failures = []
+    compiles_at_start = codegen_compiles(spark)
     for name, qd in QUERIES.items():
         if only and name not in only:
             continue
         t0 = time.time()
+        c0 = codegen_compiles(spark)
         try:
             sdf = qd.fn(spark, sf_dir).toPandas()
         except Exception:
             failures.append(name)
             print(f"FAIL  {name}: spark error\n{traceback.format_exc()}")
             continue
+        compiles = codegen_compiles(spark) - c0
         if qd.oracle is None:
-            print(f"SKIP  {name}: no oracle ({len(sdf)} rows, {time.time()-t0:.1f}s)")
+            print(f"SKIP  {name}: no oracle ({len(sdf)} rows, {time.time()-t0:.1f}s, {compiles} compiles)")
             continue
         try:
             ddf = con.sql(qd.oracle).df()
@@ -96,14 +101,15 @@ def main() -> int:
         status = "PASS " if ok else "FAIL "
         if not ok:
             failures.append(name)
-        print(f"{status} {name}: {msg} ({len(sdf)} rows, {time.time()-t0:.1f}s)")
+        print(f"{status} {name}: {msg} ({len(sdf)} rows, {time.time()-t0:.1f}s, {compiles} compiles)")
     unknown = sorted(only - set(QUERIES))
     for name in unknown:
         print(f"FAIL  {name}: no such query in the registry")
     failures.extend(unknown)
     n_run = len(only & set(QUERIES)) if only else len(QUERIES)
     print(f"\n{n_run - (len(failures) - len(unknown))}/{n_run} pass"
-          + (f" ({len(unknown)} unknown name(s))" if unknown else ""))
+          + (f" ({len(unknown)} unknown name(s))" if unknown else "")
+          + f"; {codegen_compiles(spark) - compiles_at_start} codegen compiles")
     return 1 if failures else 0
 
 
