@@ -23,7 +23,7 @@ from langchain_memvid_spark.exceptions import ConfigError
 from langchain_memvid_spark.functions.hashing import stable_hash64
 from langchain_memvid_spark.functions.text import fingerprint, tokens, word_shingles
 from langchain_memvid_spark.functions.vector import cosine_sim
-from langchain_memvid_spark.session import local_frame
+from langchain_memvid_spark.session import local_frame, release
 
 # MinHash permutations h_j = (a*(h XOR m) + b) mod P over 60-bit base
 # hashes.  a ≤ 7 keeps a*h < 2^63 (no int64 overflow in numpy OR under
@@ -1491,92 +1491,53 @@ def simhash_near_pairs(
     )
 
 
+# Edge count at or below which connected components finish in one
+# task.  Above it one task may not hold the graph, so only the
+# distributed star rounds can run; at or below it a round (two
+# checkpoints and a checksum, three jobs or more) costs more than the
+# whole local solve.  At 2^20 edges (16 MB of id pairs) `_solve_locally`
+# took 0.5-0.6 s on a random graph and 1.0 s on one shuffled path, and
+# raised its process's peak RSS by about 100 MB, to 280 MB (one core of
+# a 4-vCPU host); 4x the edges took 3.3-5.6 s and 730 MB.
+_LOCAL_EDGES = 1 << 20
+
+
 def dedup_clusters(
     documents: DataFrame,
     pairs: DataFrame | None = None,
     text_col: str = "text",
     max_iter: int = 50,
-    shuffle_partitions: int | None = None,
-    algorithm: str = "propagate",
 ) -> DataFrame:
     """Connected components over near-dup candidate pairs: every doc is
     labeled with the smallest doc_id reachable through the candidate
     graph — the canonical-group assignment step of a dedup pipeline
     (keep cluster_id == doc_id, drop the rest).
 
-    Two algorithms, same output:
-
-    - ``propagate`` (default): min-label propagation with pointer
-      jumping — labels start as doc_id; each round every node takes
-      min(own, neighbors) then follows one label indirection. One
-      equi-join + one groupBy per round, O(log diameter) rounds.
-      Right default when LSH buckets form cliques (tiny diameters).
-    - ``star``: alternating large-star/small-star contraction
-      (Kiveris et al. 2014) — rewrites the EDGE set each round so
-      every component collapses toward its minimum; converges in
-      O(log n) rounds independent of diameter, the scale path for
-      high-diameter graphs (transitive chains of near-dups).
-
-    localCheckpoint() truncates the growing lineage each round —
-    without it the plan doubles per iteration."""
-    # shuffle_partitions sizes EVERY shuffle in this routine (candidate
-    # band join + per-round label joins) — the working set is candidate
-    # pairs and labels, orders of magnitude smaller than the corpus.
-    # At toy SF 8 partitions trims scheduler overhead (~15% here; the
-    # same lesson as streaming state stores, where the gap was 3x);
-    # at cluster scale pass a value sized to the candidate volume, or
-    # None to inherit the session conf. Restored in the finally, so a
-    # failure cannot leak the setting.
-    spark = documents.sparkSession
-    old_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    if shuffle_partitions:
-        spark.conf.set("spark.sql.shuffle.partitions", str(shuffle_partitions))
-    try:
-        edges_ab = (
-            pairs if pairs is not None else minhash_band_pairs(documents, text_col=text_col)
-        )
-        if algorithm == "star":
-            labels, _ = _star_contract(documents, edges_ab, max_iter)
-            return labels
-        if algorithm != "propagate":
-            raise ValueError(f"unknown algorithm {algorithm!r}: use 'propagate' or 'star'")
-        # symmetrize with ONE explode instead of a two-branch union:
-        # the union referenced `edges_ab` on both branches, so the
-        # candidate band join + dropDuplicates ran twice during the
-        # cache fill (the band table below it is cached, but the pair
-        # join above it was not shared); explode emits both directions
-        # from a single evaluation of the pair subtree
-        edges = (
-            edges_ab.select(
-                F.explode(
-                    F.array(
-                        F.struct(
-                            F.col("a_id").alias("src"), F.col("b_id").alias("dst")
-                        ),
-                        F.struct(
-                            F.col("b_id").alias("src"), F.col("a_id").alias("dst")
-                        ),
-                    )
-                ).alias("__e")
-            )
-            .select("__e.src", "__e.dst")
-            .cache()
-        )
-        labels = _propagate(documents, edges, max_iter)
-        edges.unpersist()
-        return labels
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old_parts)
+    One algorithm, contract while large, then solve locally (Kiveris
+    et al. 2014; Łącki et al. 2018): while the edge set is above
+    ``_LOCAL_EDGES`` (more than one task should hold), distributed
+    large-star/small-star rounds shrink it in O(log n) rounds whatever
+    the graph's diameter; once at or below it, one grouped task labels
+    the rest. Raises ConfigError when ``max_iter`` rounds leave the
+    graph above the threshold, instead of returning unconverged
+    labels."""
+    edges_ab = (
+        pairs if pairs is not None else minhash_band_pairs(documents, text_col=text_col)
+    )
+    return (
+        documents.select("doc_id")
+        .join(_component_centers(edges_ab, max_iter), "doc_id", "left")
+        .select("doc_id", F.coalesce("__center", F.col("doc_id")).alias("cluster_id"))
+    )
 
 
-def _star_contract(
-    documents: DataFrame, edges_ab: DataFrame, max_iter: int
-) -> tuple[DataFrame, int]:
-    """Alternating large-star / small-star contraction (Kiveris et al.
-    2014, 'Connected Components in MapReduce and Beyond').
+def _component_centers(edges_ab: DataFrame, max_iter: int) -> DataFrame:
+    """(doc_id, __center) for the graph's nodes that are not their
+    component's minimum; the others label themselves.
 
-    Each round REWRITES the undirected edge set — no per-node label
-    state:
+    Each star round REWRITES the canonical (src < dst) edge set, with
+    no per-node label state (Kiveris et al. 2014, 'Connected
+    Components in MapReduce and Beyond'):
 
       large-star: for every node u, attach each strictly-larger
         neighbor to m(u) = min(Γ(u) ∪ {u});
@@ -1584,14 +1545,18 @@ def _star_contract(
 
     Both are one groupBy (per-node min) + one equi-join (re-target the
     edges) — no collect_list, so a hot node never materializes its
-    neighborhood in one task. Edges stay canonical (src < dst, the min
-    side first by construction since m(u) ≤ u). Converged when a full
-    round leaves the edge set unchanged (count + order-insensitive
-    xxhash64 checksum); the final graph is a star per component, so
-    cluster_id = min(Γ⁺(v)).
+    neighborhood in one task. Each round's checksum (count +
+    order-insensitive xxhash64 sum) gives the edge count that picks
+    the next step. Three endings:
 
-    Returns (labels, rounds) — rounds counted for the convergence test.
-    """
+      - a round leaves the edges unchanged while still large: the
+        graph is a star per component, cluster_id = min(Γ⁺(v));
+      - the edges fit ``_LOCAL_EDGES``: one grouped applyInPandas task
+        runs `_solve_locally` (the grouped-map pattern);
+      - ``max_iter`` rounds end still large: ConfigError.
+
+    Only the newest edge checkpoint stays pinned: each round releases
+    the one it replaced and its large-star step."""
     edges = (
         edges_ab.select(
             F.least("a_id", "b_id").alias("src"), F.greatest("a_id", "b_id").alias("dst")
@@ -1624,16 +1589,15 @@ def _star_contract(
         return int(r["n"]), int(r["h"])
 
     sig = _checksum(edges)
-    rounds = 0
     for _ in range(max_iter):
-        rounds += 1
+        if sig[0] <= _LOCAL_EDGES:
+            break
         dir_e = _directed(edges)
-        mins = _mins(dir_e)
         # large-star: every undirected edge, seen from its smaller
         # endpoint u (dst > src), re-targets the larger endpoint at m(u)
         large = (
             dir_e.filter(F.col("dst") > F.col("src"))
-            .join(mins, "src")
+            .join(_mins(dir_e), "src")
             .select(F.col("m").alias("src"), F.col("dst").alias("dst"))
             .filter(F.col("src") != F.col("dst"))
             .distinct()
@@ -1653,56 +1617,55 @@ def _star_contract(
             .localCheckpoint()
         )
         new_sig = _checksum(small)
+        release(large)
+        release(edges)
         edges = small
         if new_sig == sig:
-            break
-        sig = new_sig
-    # converged graph is a star per component (one center per member);
-    # the min-agg also keeps labels well-defined if max_iter was hit
-    centers = (
-        edges.groupBy(F.col("dst").alias("doc_id"))
-        .agg(F.min("src").alias("__center"))
-    )
-    labels = (
-        documents.select("doc_id")
-        .join(centers, "doc_id", "left")
-        .select("doc_id", F.coalesce("__center", F.col("doc_id")).alias("cluster_id"))
-    )
-    return labels, rounds
-
-
-def _propagate(documents: DataFrame, edges: DataFrame, max_iter: int) -> DataFrame:
-    """Min-label propagation with POINTER JUMPING: each round takes the
-    neighbor minimum, then additionally follows one label indirection
-    (label[label[v]] — valid because labels only decrease and
-    label[x] <= x, so the indirection is monotone). The jump halves
-    the remaining chain depth, so convergence is O(log diameter)
-    rounds instead of O(diameter): 11 -> 8 rounds measured on the
-    testdata's longest chains (the last round is the no-change check)."""
-    labels = documents.select("doc_id", F.col("doc_id").alias("cluster_id")).localCheckpoint()
-    for _ in range(max_iter):
-        neigh = (
-            edges.join(labels, edges["dst"] == labels["doc_id"])
-            .groupBy("src")
-            .agg(F.min("cluster_id").alias("nmin"))
-        )
-        l1 = labels.join(neigh, labels["doc_id"] == neigh["src"], "left").select(
-            "doc_id",
-            F.least(F.col("cluster_id"), F.coalesce("nmin", F.col("cluster_id"))).alias("l1"),
-            F.col("cluster_id").alias("old"),
-        )
-        parent = l1.select(F.col("doc_id").alias("__p"), F.col("l1").alias("__pl"))
-        new_labels = (
-            l1.join(parent, l1["l1"] == parent["__p"], "left")
-            .select(
-                "doc_id",
-                F.coalesce("__pl", F.col("l1")).alias("new_cluster_id"),
-                "old",
+            return edges.groupBy(F.col("dst").alias("doc_id")).agg(
+                F.min("src").alias("__center")
             )
-            .localCheckpoint()
+        sig = new_sig
+    if sig[0] > _LOCAL_EDGES:
+        raise ConfigError(
+            f"connected components: {max_iter} star rounds left {sig[0]} edges, "
+            f"above the {_LOCAL_EDGES}-edge local solve; raise max_iter"
         )
-        changed = new_labels.filter(F.col("new_cluster_id") != F.col("old")).count()
-        labels = new_labels.select("doc_id", F.col("new_cluster_id").alias("cluster_id"))
-        if changed == 0:
+    # a named literal key: groupBy(F.lit(0)) fails inside Spark
+    id_type = edges.schema["src"].dataType.simpleString()
+    return (
+        edges.withColumn("__g", F.lit(0))
+        .groupBy("__g")
+        .applyInPandas(_solve_locally, f"doc_id {id_type}, __center {id_type}")
+    )
+
+
+def _solve_locally(pdf):
+    """applyInPandas body: the whole (small) edge set in one frame ->
+    (doc_id, __center) for every node that is not its component's
+    minimum. Vectorized hook and shortcut over dense indices (np.unique
+    sorts, so the smallest index is the smallest id): each pass hooks
+    every edge's larger root under its smaller one (a scatter-min),
+    then jumps pointers until every node points at a root. parent[x]
+    <= x throughout, so the roots are the component minima; O(log n)
+    passes."""
+    import numpy as np
+    import pandas as pd
+
+    src, dst = pdf["src"].to_numpy(), pdf["dst"].to_numpy()
+    ids, inv = np.unique(np.concatenate([src, dst]), return_inverse=True)
+    u, v = inv[: len(src)], inv[len(src) :]
+    parent = np.arange(len(ids))
+    while True:
+        pu, pv = parent[u], parent[v]
+        hi, lo = np.maximum(pu, pv), np.minimum(pu, pv)
+        live = hi != lo
+        if not live.any():
             break
-    return labels
+        np.minimum.at(parent, hi[live], lo[live])
+        while True:
+            jumped = parent[parent]
+            if np.array_equal(jumped, parent):
+                break
+            parent = jumped
+    moved = parent != np.arange(len(ids))
+    return pd.DataFrame({"doc_id": ids[moved], "__center": ids[parent[moved]]})

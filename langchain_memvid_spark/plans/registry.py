@@ -4076,9 +4076,10 @@ def q_vocab(spark, sf_dir):
     )
 
 
-@_reg(
-    "dedup_clusters",
-    f"""
+# Min-reachable-id labels over the MinHash-band candidate graph: a
+# recursive walk from every doc, the oracle of all three clustering
+# queries.
+_DEDUP_CLUSTERS_SQL = f"""
 WITH RECURSIVE base AS ({_minhash_band_sql()}),
 edges AS (SELECT a_id AS src, b_id AS dst FROM base
           UNION SELECT b_id AS src, a_id AS dst FROM base),
@@ -4088,37 +4089,23 @@ walk(id, lbl) AS (
   SELECT e.dst, w.lbl FROM walk w JOIN edges e ON e.src = w.id WHERE w.lbl < e.dst
 )
 SELECT id AS doc_id, min(lbl) AS cluster_id FROM walk GROUP BY id
-""",
-)
+"""
+
+
+@_reg("dedup_clusters", _DEDUP_CLUSTERS_SQL)
 def q_dedup_clusters(spark, sf_dir):
-    """Connected components over MinHash-band candidate pairs (iterative
-    min-label propagation; oracle is a recursive CTE computing the same
-    min-reachable-id labels)."""
-    return dedup.dedup_clusters(_t(spark, sf_dir, "documents"), shuffle_partitions=8)
+    """Connected components over MinHash-band candidate pairs (star
+    contraction while the graph is large, then one local solve; the
+    oracle is a recursive CTE computing the same min-reachable-id
+    labels)."""
+    return dedup.dedup_clusters(_t(spark, sf_dir, "documents"))
 
 
-@_reg(
-    "dedup_clusters_star",
-    f"""
-WITH RECURSIVE base AS ({_minhash_band_sql()}),
-edges AS (SELECT a_id AS src, b_id AS dst FROM base
-          UNION SELECT b_id AS src, a_id AS dst FROM base),
-walk(id, lbl) AS (
-  SELECT doc_id, doc_id FROM documents
-  UNION
-  SELECT e.dst, w.lbl FROM walk w JOIN edges e ON e.src = w.id WHERE w.lbl < e.dst
-)
-SELECT id AS doc_id, min(lbl) AS cluster_id FROM walk GROUP BY id
-""",
-)
+@_reg("dedup_clusters_star", _DEDUP_CLUSTERS_SQL)
 def q_dedup_clusters_star(spark, sf_dir):
-    """Same labels via large-star/small-star contraction (O(log n)
-    rounds independent of graph diameter — the 100 TB path for
-    transitive near-dup chains); oracle identical to dedup_clusters
-    because the output contract is identical."""
-    return dedup.dedup_clusters(
-        _t(spark, sf_dir, "documents"), shuffle_partitions=8, algorithm="star"
-    )
+    """The same operator and labels as dedup_clusters; the name stays
+    so this entry's timing and oracle history carry on."""
+    return dedup.dedup_clusters(_t(spark, sf_dir, "documents"))
 
 
 @_reg(
@@ -5463,15 +5450,7 @@ def q_filtered_agg(spark, sf_dir):
 @_reg(
     "canonical_docs",
     f"""
-WITH RECURSIVE base AS ({_minhash_band_sql()}),
-edges AS (SELECT a_id AS src, b_id AS dst FROM base
-          UNION SELECT b_id AS src, a_id AS dst FROM base),
-walk(id, lbl) AS (
-  SELECT doc_id, doc_id FROM documents
-  UNION
-  SELECT e.dst, w.lbl FROM walk w JOIN edges e ON e.src = w.id WHERE w.lbl < e.dst
-),
-clusters AS (SELECT id AS doc_id, min(lbl) AS cluster_id FROM walk GROUP BY id),
+WITH clusters AS ({_DEDUP_CLUSTERS_SQL}),
 quality AS ({_quality_sql()})
 SELECT cluster_id, count(*) AS cluster_size, min(keep) AS keep_doc_id FROM (
   SELECT c.cluster_id, q.doc_id,
@@ -5487,7 +5466,7 @@ def q_canonical(spark, sf_dir):
     quality scoring + one per-cluster arg-max window — the final
     'which copy survives' step of the dedup pipeline."""
     docs = _t(spark, sf_dir, "documents")
-    clusters = dedup.dedup_clusters(docs, shuffle_partitions=8)
+    clusters = dedup.dedup_clusters(docs)
     quality = textops.quality_scores(docs).select("doc_id", "quality_score")
     joined = clusters.join(quality, "doc_id")
     w = Window.partitionBy("cluster_id").orderBy(
@@ -6639,22 +6618,14 @@ _DRIVER_GREEN = {
 # inside the driver's ~50-query budget.  ONLY names whose change has
 # actually landed belongs here.
 _CHANGED_THIS_ROUND = (
-    # round 14: (a) widen_for_decode moved INSIDE the five signer entry
-    # points (VERDICT r13 item 1 — the protection was streaming-only),
-    # with a plan-count-only guard for COMPUTED frames (ADVICE r13:
-    # probing a mapInPandas frame executes its upstream), so every
-    # batch media operator's plan gained the auto-widen; (b) the
-    # shared-run ops cache their signed table in the n_band_rows branch
-    # (ADVICE r13: the self-join evaluated the signer subtree twice).
-    # Outputs are partition-invariant and unchanged everywhere; the
-    # REPRESENTATIVE changed subset fronted here is the two cache-fix
-    # queries plus one batch-containment widen representative — the
-    # rest of the media family re-greens via the r15 rotation (the
-    # VERDICT r13 item 2 budget rule: 46 rotation + 3 changed + 1
-    # pending = exactly 50, zero headroom — r15 must trim first).
-    "video_shared_runs",
-    "audio_shared_runs",
-    "video_contains_clip",
+    # connected components became one algorithm (star rounds only while
+    # the graph is large, then one local solve) without the per-call
+    # shuffle-partitions override: labels are unchanged, but every
+    # query built on dedup_clusters has a new plan (46 rotation + 3
+    # changed + 1 pending = exactly the 50 budget)
+    "dedup_clusters",
+    "dedup_clusters_star",
+    "canonical_docs",
 )
 
 

@@ -475,12 +475,30 @@ def test_bucketed_join_has_no_exchange(spark, sf_dir, tmp_path):
 
 
 def test_dedup_clusters_chain_and_singleton(spark):
-    """Label propagation must traverse chains (diameter > 1) and leave
+    """Connected components must traverse chains (diameter > 1) and leave
     singletons self-labeled."""
     docs = spark.createDataFrame([(i, f"d{i}") for i in range(6)], "doc_id long, text string")
     pairs = spark.createDataFrame([(0, 1), (1, 2), (3, 4)], "a_id long, b_id long")
     got = {r["doc_id"]: r["cluster_id"] for r in dedup.dedup_clusters(docs, pairs=pairs).collect()}
     assert got == {0: 0, 1: 0, 2: 0, 3: 3, 4: 3, 5: 5}
+
+
+def test_dedup_clusters_query_runs_few_jobs(spark, sf_dir):
+    """A warm dedup_clusters query runs at most 12 Spark jobs: a graph
+    this small skips the star rounds and is solved in one task (min-label
+    propagation paid a checkpoint and a count per round: 32 jobs)."""
+    from langchain_memvid_spark.plans.registry import QUERIES
+
+    query = QUERIES["dedup_clusters"].fn
+    query(spark, sf_dir).collect()
+    sc = spark.sparkContext
+    sc.setJobGroup("dedup-clusters-jobs", "count the query's jobs")
+    try:
+        query(spark, sf_dir).collect()
+        jobs = sc.statusTracker().getJobIdsForGroup("dedup-clusters-jobs")
+    finally:
+        sc.setJobGroup(None, None)
+    assert 0 < len(jobs) <= 12
 
 
 def test_lsh_search_recall_vs_exact(spark, sf_dir):

@@ -5,10 +5,12 @@ are derandomized so runs are reproducible."""
 
 import bisect
 
+import pytest
 from hypothesis import given, settings, strategies as st
 
 from pyspark.sql import functions as F
 
+from langchain_memvid_spark.exceptions import ConfigError
 from langchain_memvid_spark.operators.asof import asof_join
 from langchain_memvid_spark.operators import dedup
 
@@ -85,29 +87,16 @@ def test_exact_dedup_keeps_min_id_per_fingerprint(spark_handle, texts):
     assert by_keep == {min(v): len(v) for v in groups.values()}
 
 
-@given(
-    pairs=st.lists(
-        st.tuples(st.integers(0, 14), st.integers(0, 14)).filter(lambda p: p[0] != p[1]),
-        min_size=0,
-        max_size=20,
-    )
-)
-@SET
-def test_dedup_clusters_match_union_find(spark_handle, pairs):
-    """Connected-component labels == a plain union-find reference on
-    random edge sets (self-loops excluded by construction)."""
-    spark = spark_handle
-    n = 15
+def _check_components(spark, n, pairs):
+    """dedup_clusters labels == a plain union-find reference, with
+    ``_LOCAL_EDGES`` at its shipped value, at 0 (every round
+    distributed) and at half the edge count (contract, then solve
+    locally)."""
     docs = spark.createDataFrame([(i, f"d{i}") for i in range(n)], "doc_id long, text string")
     norm_pairs = [(min(a, b), max(a, b)) for a, b in pairs]
     edges = spark.createDataFrame(norm_pairs or [(0, 0)], "a_id long, b_id long")
     if not norm_pairs:
         edges = edges.filter(F.col("a_id") != F.col("b_id"))
-    got = {r["doc_id"]: r["cluster_id"] for r in dedup.dedup_clusters(docs, pairs=edges).collect()}
-    got_star = {
-        r["doc_id"]: r["cluster_id"]
-        for r in dedup.dedup_clusters(docs, pairs=edges, algorithm="star").collect()
-    }
 
     parent = list(range(n))
 
@@ -122,20 +111,75 @@ def test_dedup_clusters_match_union_find(spark_handle, pairs):
         if ra != rb:
             parent[max(ra, rb)] = min(ra, rb)
     want = {i: min(j for j in range(n) if find(j) == find(i)) for i in range(n)}
-    assert got == want
-    assert got_star == want
+
+    for local_edges in (dedup._LOCAL_EDGES, 0, len(set(norm_pairs)) // 2):
+        with pytest.MonkeyPatch.context() as mp:
+            mp.setattr(dedup, "_LOCAL_EDGES", local_edges)
+            labels = dedup.dedup_clusters(docs, pairs=edges)
+            got = {r["doc_id"]: r["cluster_id"] for r in labels.collect()}
+        assert got == want, local_edges
 
 
-def test_star_contraction_chain_round_count(spark):
-    """A 64-node path graph has diameter 63; star contraction must
-    converge in O(log n) rounds, far under the diameter."""
-    n = 64
+@given(
+    pairs=st.lists(
+        st.tuples(st.integers(0, 14), st.integers(0, 14)).filter(lambda p: p[0] != p[1]),
+        min_size=0,
+        max_size=20,
+    )
+)
+@SET
+def test_dedup_clusters_match_union_find(spark_handle, pairs):
+    """Connected-component labels == a plain union-find reference on
+    random edge sets (self-loops excluded by construction)."""
+    _check_components(spark_handle, 15, pairs)
+
+
+@given(order=st.permutations(range(24)), hub=st.integers(0, 23))
+@settings(max_examples=3, deadline=None, derandomize=True)
+def test_dedup_clusters_path_and_hub_match_union_find(spark_handle, order, hub):
+    """The two extreme shapes: one long path over shuffled ids
+    (diameter 23) and one hub joined to every other node."""
+    _check_components(spark_handle, 24, list(zip(order, order[1:])))
+    _check_components(spark_handle, 24, [(hub, j) for j in range(24) if j != hub])
+
+
+def _chain(spark, n):
     docs = spark.createDataFrame([(i, f"d{i}") for i in range(n)], "doc_id long, text string")
     edges = spark.createDataFrame([(i, i + 1) for i in range(n - 1)], "a_id long, b_id long")
-    labels, rounds = dedup._star_contract(docs, edges, max_iter=50)
+    return docs, edges
+
+
+def test_star_contraction_chain_round_count(spark, monkeypatch):
+    """A 64-node path graph has diameter 63; forced through the star
+    rounds (``_LOCAL_EDGES = 0``) it must converge in O(log n) rounds,
+    far under the diameter: with max_iter=10 more rounds would raise."""
+    monkeypatch.setattr(dedup, "_LOCAL_EDGES", 0)
+    docs, edges = _chain(spark, 64)
+    labels = dedup.dedup_clusters(docs, pairs=edges, max_iter=10)
     got = {r["doc_id"]: r["cluster_id"] for r in labels.collect()}
-    assert got == {i: 0 for i in range(n)}
-    assert rounds <= 10  # log2(64)=6 contraction rounds + convergence check slack
+    assert got == {i: 0 for i in range(64)}  # log2(64)=6 rounds + convergence slack
+
+
+def test_dedup_clusters_raises_when_rounds_run_out(spark, monkeypatch):
+    """max_iter rounds that leave the graph above ``_LOCAL_EDGES``
+    raise instead of returning unconverged labels."""
+    monkeypatch.setattr(dedup, "_LOCAL_EDGES", 0)
+    docs, edges = _chain(spark, 64)
+    with pytest.raises(ConfigError, match="max_iter"):
+        dedup.dedup_clusters(docs, pairs=edges, max_iter=1)
+
+
+def test_star_rounds_pin_one_checkpoint(spark, monkeypatch):
+    """Each star round releases the edge checkpoint it replaced and its
+    large-star step, so a run of several rounds leaves at most one
+    persistent RDD: the edge set the lazy labels plan reads."""
+    monkeypatch.setattr(dedup, "_LOCAL_EDGES", 0)
+    docs, edges = _chain(spark, 64)
+    pinned = spark.sparkContext._jsc.getPersistentRDDs
+    before = set(pinned().keySet())
+    labels = dedup.dedup_clusters(docs, pairs=edges)
+    assert len(set(pinned().keySet()) - before) <= 1
+    assert {r["cluster_id"] for r in labels.collect()} == {0}
 
 
 @given(
