@@ -306,8 +306,8 @@ def main() -> None:
             except Exception as e:  # warmup must never fail the bench
                 print(f"# warmup {name} failed: {e}", file=sys.stderr)
     # Materialize the persisted int8+int4 codes layout at the TARGET SF
-    # before timing: the codes are an INGEST artifact (the store writes
-    # qvec/qscale/pvec/pscale at add time), so the one-time write is
+    # before timing: the codes are an INGEST artifact (like the qvec/qscale
+    # the store writes at add time), so the one-time write is
     # amortized cost — the bench measures steady-state search, same
     # rationale that keeps bucketed_colocated_join's layout write out
     # of the headline.

@@ -74,7 +74,6 @@ from langchain_memvid_spark.functions.vector import (
 from langchain_memvid_spark.operators.quantize import (
     int8_dot,
     int8_dot_lit,
-    quantize4_cols,
     quantize_cols,
     query_codes,
 )
@@ -105,12 +104,6 @@ INDEX_SCHEMA = StructType(
         # touches float32 only for the re-rank candidates.
         StructField("qscale", DoubleType()),
         StructField("qvec", ArrayType(ByteType())),
-        # packed int4 codes + scale (2 vectors/byte): the sub-byte tier
-        # of the quantization ladder, persisted at ingest so int4
-        # search scans stored codes instead of re-deriving them per
-        # query (VERDICT r6 item 6).
-        StructField("pscale", DoubleType()),
-        StructField("pvec", ArrayType(ByteType())),
         # MinHash signature (8 longs/doc), persisted at ingest like the
         # quantized codes: the near-dup ingest gate
         # (IndexConfig.near_dedup) anti-joins arriving batches against
@@ -699,17 +692,11 @@ class SparkVectorStore:
         if self.config.index.metric == "cosine":
             enriched = enriched.withColumn("embedding", l2_normalize(F.col("embedding")))
         qscale, qvec = quantize_cols(F.col("embedding"))
-        pscale, pvec = quantize4_cols(F.col("embedding"))
-        enriched = (
-            enriched.withColumn("qscale", qscale)
-            .withColumn("qvec", qvec)
-            .withColumn("pscale", pscale)
-            .withColumn("pvec", pvec)
-        )
+        enriched = enriched.withColumn("qscale", qscale).withColumn("qvec", qvec)
 
         new_index = enriched.select(
             "doc_id", "text", "source", "category", "metadata_json", "metadata_hash",
-            "embedding", "qscale", "qvec", "pscale", "pvec", *_MH_COLS,
+            "embedding", "qscale", "qvec", *_MH_COLS,
         )
         new_payload = enriched.select(
             "doc_id",
@@ -803,7 +790,7 @@ class SparkVectorStore:
 
     # engine columns attach()/load() may derive in-plan when the
     # underlying files don't carry them physically
-    _DERIVABLE_COLS = ("category", "qscale", "qvec", "pscale", "pvec")
+    _DERIVABLE_COLS = ("category", "qscale", "qvec")
 
     def _backfill_derived_cols(self, idx: DataFrame) -> DataFrame:
         """Re-derive the derivable engine columns wherever the stored
@@ -811,13 +798,10 @@ class SparkVectorStore:
         NULL under the explicit layout schema); rows from files that
         carry the columns keep their stored values."""
         qscale, qvec = quantize_cols(F.col("embedding"))
-        pscale, pvec = quantize4_cols(F.col("embedding"))
         derived = {
             "category": F.from_json(F.col("metadata_json"), "category STRING")["category"],
             "qscale": qscale,
             "qvec": qvec,
-            "pscale": pscale,
-            "pvec": pvec,
         }
         for name, expr in derived.items():
             idx = idx.withColumn(name, F.coalesce(F.col(name), expr))
@@ -1796,8 +1780,7 @@ class SparkVectorStore:
         old_index, old_payload = self._doc_index, self._payload
         idx_cols = [
             "doc_id", "text", "source", "category", "metadata_json",
-            "metadata_hash", "embedding", "qscale", "qvec", "pscale", "pvec",
-            *_MH_COLS,
+            "metadata_hash", "embedding", "qscale", "qvec", *_MH_COLS,
         ]
         if self._ivf is not None:
             idx_cols.append("cluster_id")  # assignments survive deletes
@@ -2094,10 +2077,6 @@ class SparkVectorStore:
                 # (unionByName) and the compressed first pass keep working
                 qscale, qvec = quantize_cols(F.col("embedding"))
                 idx = idx.withColumn("qscale", qscale).withColumn("qvec", qvec)
-            if "pvec" not in idx.columns:
-                # pre-r7 save: backfill the packed int4 tier the same way
-                pscale, pvec = quantize4_cols(F.col("embedding"))
-                idx = idx.withColumn("pscale", pscale).withColumn("pvec", pvec)
             if "mh0" not in idx.columns:
                 # pre-signature save: sign the corpus ONCE at load (a
                 # mapInPandas + join, not a column expression — the one
@@ -2182,7 +2161,7 @@ class SparkVectorStore:
         relevance / batch / hybrid) on top of them in place.
 
         Missing engine columns are derived in-plan (category from the
-        metadata JSON, int8/int4 codes from the floats). When the table
+        metadata JSON, int8 codes from the floats). When the table
         carries a ``cluster_id`` partition column AND ``centroids`` are
         supplied (the same list the streaming assignment used), the
         partition-pruned IVF search path is live immediately — streamed
@@ -2205,9 +2184,6 @@ class SparkVectorStore:
         if "qvec" not in idx.columns:
             qscale, qvec = quantize_cols(F.col("embedding"))
             idx = idx.withColumn("qscale", qscale).withColumn("qvec", qvec)
-        if "pvec" not in idx.columns:
-            pscale, pvec = quantize4_cols(F.col("embedding"))
-            idx = idx.withColumn("pscale", pscale).withColumn("pvec", pvec)
         if "mh0" not in idx.columns:
             # attached tables carry no signatures: sign once (see load)
             from langchain_memvid_spark.operators.dedup import minhash_signatures

@@ -6618,29 +6618,47 @@ _DRIVER_GREEN = {
 # inside the driver's ~50-query budget.  ONLY names whose change has
 # actually landed belongs here.
 _CHANGED_THIS_ROUND = (
-    # connected components became one algorithm (star rounds only while
-    # the graph is large, then one local solve) without the per-call
-    # shuffle-partitions override: labels are unchanged, but every
-    # query built on dedup_clusters has a new plan (46 rotation + 3
-    # changed + 1 pending = exactly the 50 budget)
-    "dedup_clusters",
-    "dedup_clusters_star",
-    "canonical_docs",
+    # the media kernels' nine inline band joins became one banded-Hamming
+    # join (multimodal/binary.py _band_join) and the containment,
+    # shared-run and incremental verdict steps one body each: outputs
+    # are unchanged, but every query built on them has a re-shaped plan
+    # (22 changed + 0 pending + 28 rotation = exactly the 50 budget)
+    "image_near_dup",
+    "image_near_dup_wide",
+    "audio_near_dup",
+    "audio_near_dup_wide",
+    "video_near_dup",
+    "incremental_image_dedup",
+    "incremental_audio_dedup",
+    "incremental_video_dedup",
+    "media_signature_store_dedup",
+    "sigstore_takedown",
+    "stream_media_ingest_gate",
+    "video_contains_image",
+    "stream_video_contains_image",
+    "video_contains_clip",
+    "audio_contains_clip",
+    "audio_contains_clip_hop",
+    "video_audio_contains_clip",
+    "stream_video_contains_clip",
+    "stream_video_audio_contains_clip",
+    "video_shared_runs",
+    "audio_shared_runs",
+    "stream_video_shared_runs",
 )
 
 
 # Stale-green rotation: greens whose newest driver row is oldest come
 # first.  After round 13 the newest-signal distribution is 46 queries
 # at r10, then 46 at r11, 47 at r12, 50 at r13 — zero failures as
-# latest state anywhere.  Round 14 re-greens the ENTIRE r10 block —
-# 3 changed + 1 pending (stream_video_shared_runs) + 46 rotation
-# = exactly 50 = the budget (checked by _reorder_for_driver), after
-# which nothing's newest driver row is older than r11.  ZERO headroom:
-# the next added query must trim the rotation tail first.
+# latest state anywhere.  The media queries this round's join change
+# re-greens lead _CHANGED_THIS_ROUND, so the rotation keeps its 28
+# oldest non-media names: 22 changed + 0 pending + 28 rotation =
+# exactly 50 = the budget (checked by _reorder_for_driver).  ZERO
+# headroom: the next added query must trim the rotation tail first.
 _STALE_ROTATION = (
     # newest signal is r10 — media/vs/stream surface first,
     # relational queries last
-    "image_near_dup", "video_near_dup", "audio_near_dup",
     "video_exact_dup_groups", "mmr_search",
     "vs_relevance_scores", "vs_metadata_filter_typed",
     "vs_storage_stats", "knn_topk", "ivf_search",
@@ -6652,12 +6670,6 @@ _STALE_ROTATION = (
     "stream_dedup_within_watermark", "udtf_bigram_counts",
     "decontaminate", "pretrain_pipeline_v2", "pretrain_pipeline_stats",
     "events_hourly", "events_json_stats", "events_sessionize",
-    "dense_hourly_counts", "cohort_retention", "filtered_aggregates",
-    "per_user_zscore", "order_age_buckets", "part_name_string_ops",
-    "orders_rollup", "orders_unpivot", "running_revenue",
-    "rolling_30d_revenue", "scalar_showcase", "sql_interface_demo",
-    "customer_quartiles", "customers_without_orders",
-    "q21_sole_late_supplier",
 )
 
 

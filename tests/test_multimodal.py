@@ -2062,6 +2062,43 @@ def test_signer_auto_widens_narrow_input(spark, tmp_path, monkeypatch):
     ]
 
 
+def test_widen_for_decode_leaves_session_conf_alone(spark):
+    """widen_for_decode on a computed frame reads its static partition
+    count without writing the shared session's conf: a thread planning
+    work on the same session at the same moment (a signer overlapped
+    with a write) must never see AQE switched off."""
+    import threading
+    import time
+
+    docs = spark.range(30).coalesce(1).selectExpr(
+        "id AS doc_id", "CAST(id AS STRING) AS text"
+    )
+    synth = mm.synthesize_image_corpus(docs, variant_every=None)
+    key = "spark.sql.adaptive.enabled"
+    assert spark.conf.get(key) == "true"
+    seen: set[str] = set()
+    errors: list[Exception] = []
+    done = threading.Event()
+
+    def widen() -> None:
+        try:
+            for _ in range(5):
+                mm.widen_for_decode(synth)
+        except Exception as e:  # surfaced by the assert below
+            errors.append(e)
+        finally:
+            done.set()
+
+    t = threading.Thread(target=widen)
+    t.start()
+    deadline = time.monotonic() + 120
+    while not done.is_set() and time.monotonic() < deadline:
+        seen.add(spark.conf.get(key))
+    t.join(timeout=10)
+    assert not t.is_alive() and not errors
+    assert seen == {"true"}
+
+
 def test_vs_corpus_broadcasts_small_corpus_when_batch_too_big(spark, tmp_path):
     """Big-arrivals-vs-small-blocklist pick: when the batch band table
     exceeds the broadcast limit but the corpus side fits, the corpus

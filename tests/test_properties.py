@@ -1060,3 +1060,97 @@ def test_hamming_band_table_pigeonhole_property(spark_handle, sigs, wide):
                 continue
             if ham(py_bands[ai], py_bands[bi]) <= 3:
                 assert any(got[ai][b] == got[bi][b] for b in range(4)), (ai, bi)
+
+
+def _signed_longs(v: int, n_longs: int) -> list[int]:
+    out = []
+    for j in range(n_longs):
+        x = (v >> (64 * j)) & (2**64 - 1)
+        out.append(x - 2**64 if x >= 2**63 else x)
+    return out
+
+
+@given(
+    bases=st.lists(st.integers(0, 2**256 - 1), min_size=2, max_size=8, unique=True),
+    planted=st.lists(
+        st.tuples(st.integers(0, 7), st.sets(st.integers(0, 255), max_size=5)),
+        min_size=1,
+        max_size=8,
+    ),
+    wide=st.booleans(),
+    vs_corpus=st.booleans(),
+    framed=st.booleans(),
+)
+@SET
+def test_band_join_matches_brute_force_hamming(
+    spark_handle, bases, planted, wide, vs_corpus, framed
+):
+    """multimodal.binary._band_join — the one media candidate join —
+    returns, after its exact-Hamming verify, exactly the brute-force
+    all-pairs set with Hamming ≤ 3, for 64-bit (4×16-bit slices) and
+    256-bit (4 longs) signatures, in the self-join and batch-vs-corpus
+    forms, with and without the frame_no key, on every side pick: A
+    side broadcast, B side broadcast (a lazy count), sort-merge."""
+    from langchain_memvid_spark.multimodal import binary as mm
+
+    spark = spark_handle
+    bits = 256 if wide else 64
+    n_longs = bits // 64
+    sig_cols = [f"s{j}" for j in range(n_longs)]
+    # planted near copies: a base with up to 5 bits flipped (some
+    # within max_hamming, some beyond it)
+    vals = [b % 2**bits for b in bases]
+    near = []
+    for i, flips in planted:
+        v = vals[i % len(vals)]
+        for f in flips:
+            v ^= 1 << (f % bits)
+        near.append(v)
+    rows = [
+        (k, k % 2 if framed else 0, v)
+        for k, v in enumerate(vals + near)
+    ]
+    if vs_corpus:
+        a_rows, b_rows = rows[len(vals):], rows[: len(vals)]
+    else:
+        a_rows = b_rows = rows
+    schema = "media_id long, frame_no int, n_frames int, " + ", ".join(
+        f"{c} long" for c in sig_cols
+    )
+
+    def bands(rs):
+        df = spark.createDataFrame(
+            [(k, f, 1, *_signed_longs(v, n_longs)) for k, f, v in rs], schema
+        )
+        return mm.banded_signature_table(df, sig_cols, frame_grain=True)
+
+    want = {
+        (ka, kb): bin(va ^ vb).count("1")
+        for ka, fa, va in a_rows
+        for kb, fb, vb in b_rows
+        if (vs_corpus or ka < kb)
+        and fa == fb
+        and bin(va ^ vb).count("1") <= 3
+    }
+    keys = ("frame_no", "band", "val") if framed else ("band", "val")
+    big = dedup._PAIR_BROADCAST_ROW_LIMIT + 1
+    picks = [
+        (4 * len(a_rows), None, "BroadcastHashJoin"),
+        (big, lambda: 4 * len(b_rows), "BroadcastHashJoin"),
+        (big, big, "SortMergeJoin"),
+    ]
+    for n_a, n_b, strategy in picks:
+        joined, ham = mm._band_join(
+            bands(a_rows), bands(b_rows),
+            {"a_id": "media_id", "a_fno": "frame_no"},
+            {"b_id": "media_id", "b_fno": "frame_no"},
+            sig_cols, n_a, n_b, keys=keys,
+        )
+        out = joined.where(ham <= 3)
+        if not vs_corpus:
+            out = out.where(F.col("a_id") < F.col("b_id"))
+        out = out.select("a_id", "b_id", ham.alias("h")).distinct()
+        plan = out._jdf.queryExecution().executedPlan().toString()
+        assert strategy in plan, (n_a, n_b)
+        got = {(r["a_id"], r["b_id"]): r["h"] for r in out.collect()}
+        assert got == want, (n_a, n_b)
