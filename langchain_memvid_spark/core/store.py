@@ -77,6 +77,11 @@ from langchain_memvid_spark.operators.quantize import (
     quantize_cols,
     query_codes,
 )
+from langchain_memvid_spark.operators.joinopt import (
+    _PAIR_BROADCAST_ROW_LIMIT,
+    fits_broadcast,
+    pair_join,
+)
 from langchain_memvid_spark.session import local_frame, release
 
 INGEST_SCHEMA = StructType(
@@ -121,6 +126,16 @@ PAYLOAD_SCHEMA = StructType(
         StructField("payload_json", StringType()),
     ]
 )
+
+
+@dataclass
+class AnnPlan:
+    """A search's dispatch explanation: the strategy picked, why, and
+    the live plan."""
+
+    strategy: str  # "brute_force" | "ivf_pruned"
+    reason: str
+    df: DataFrame
 
 
 @dataclass
@@ -1104,8 +1119,6 @@ class SparkVectorStore:
 
         Pass a text ``query`` (embedded with the store's model) or a
         raw ``qvec`` (normalized under the store's metric)."""
-        from langchain_memvid_spark.plans.ann_planner import AnnPlan
-
         if (query is None) == (qvec is None):
             raise ValueError("pass exactly one of query= or qvec=")
         v = self._query_vec(query) if query is not None else self._normalize_query(qvec)
@@ -1266,8 +1279,6 @@ class SparkVectorStore:
         reason, df) for exactly the physical plan batch_search would
         run — how many clusters the probe UNION pruned to, and whether
         the int8 first pass engaged."""
-        from langchain_memvid_spark.plans.ann_planner import AnnPlan
-
         df, strategy, reason = self._plan_batch_search(queries, k)
         return AnnPlan(strategy, reason, df)
 
@@ -1418,10 +1429,8 @@ class SparkVectorStore:
         """similarity_join's dispatch EXPLAINER (VERDICT r8 item 6):
         returns the AnnPlan (strategy, reason, df) for exactly the
         physical plan similarity_join would run — the probed cluster
-        count and the query-side kernel pick (broadcast vs sort-merge,
-        from the exact query count)."""
-        from langchain_memvid_spark.plans.ann_planner import AnnPlan
-
+        count and the query-side join pick (operators/joinopt.py
+        pair_join, from the exact query count)."""
         df, strategy, reason = self._plan_similarity_join(
             queries, k, query_id_col, query_vec_col, n_queries
         )
@@ -1437,8 +1446,6 @@ class SparkVectorStore:
     ) -> tuple[DataFrame, str, str]:
         """similarity_join's body, returning (df, strategy, reason) —
         one decision site shared with the explainer."""
-        from langchain_memvid_spark.operators.dedup import _PAIR_BROADCAST_ROW_LIMIT
-
         strategy, why = "brute_force", []
         metric = self.config.index.metric
         qv = F.col(query_vec_col).cast("array<double>")
@@ -1472,23 +1479,20 @@ class SparkVectorStore:
                 f"nlist={len(self._ivf.centroids)} prunes the scan at the file level"
             )
             qx = qdf.select("query_id", "__qv", F.explode("__probes").alias("cluster_id"))
-            if n_queries * nprobe <= _PAIR_BROADCAST_ROW_LIMIT:
-                right = F.broadcast(qx)
-                why.append(
-                    f"query side broadcast ({n_queries}×{nprobe} probe rows "
-                    f"≤ {_PAIR_BROADCAST_ROW_LIMIT})"
-                )
-            else:
-                right = qx.hint("merge")
-                why.append(
-                    f"query side sort-merge ({n_queries}×{nprobe} probe rows "
-                    f"> {_PAIR_BROADCAST_ROW_LIMIT}: too big to broadcast)"
-                )
-            joined = corpus.select("doc_id", "embedding", "cluster_id").join(
-                right, "cluster_id"
+            n_probes = n_queries * nprobe
+            why.append(
+                f"query side broadcast ({n_queries}×{nprobe} probe rows "
+                f"≤ {_PAIR_BROADCAST_ROW_LIMIT})"
+                if fits_broadcast(n_probes)
+                else f"query side shuffled ({n_queries}×{nprobe} probe rows "
+                f"> {_PAIR_BROADCAST_ROW_LIMIT}: too big to broadcast)"
+            )
+            joined = pair_join(
+                qx, corpus.select("doc_id", "embedding", "cluster_id"),
+                "cluster_id", n_probes,
             )
         else:
-            if n_queries > _PAIR_BROADCAST_ROW_LIMIT:
+            if not fits_broadcast(n_queries):
                 raise ValueError(
                     f"similarity_join: {n_queries} query rows against an "
                     "unclustered corpus would be an unpruned cross join. "
@@ -1523,10 +1527,7 @@ class SparkVectorStore:
         # full doc_index here would silently re-scan every file's
         # doc_id/text columns, defeating the probe pruning
         texts = corpus.select("doc_id", "text")
-        top_side = (
-            F.broadcast(top) if n_queries * k <= _PAIR_BROADCAST_ROW_LIMIT else top
-        )
-        df = texts.join(top_side, "doc_id").select(
+        df = pair_join(top, texts, "doc_id", n_queries * k).select(
             "query_id", "doc_id", "text", "similarity", "rank"
         )
         return df, strategy, "; ".join(why)

@@ -53,10 +53,6 @@ def char_ngrams(text: Column, n: int = 5) -> Column:
     )
 
 
-def punct_count(text: Column) -> Column:
-    return F.length(text) - F.length(F.regexp_replace(text, r"[^\w\s]", ""))
-
-
 def alpha_ratio(text: Column) -> Column:
     alpha = F.length(F.regexp_replace(text, r"[^A-Za-z]", ""))
     return alpha.cast("double") / F.greatest(F.length(text), F.lit(1)).cast("double")

@@ -23,9 +23,10 @@ Every image/audio/video near-dup, containment, shared-run and
 incremental kernel finds candidates with one banded-Hamming join,
 ``_band_join`` (band the signatures, equi-join on (band, val), verify
 the exact Hamming distance — pigeonhole-complete at max_hamming < 4
-bands).  It is the one place the media join pick lives: broadcast the
-batch side from its exact band-row count, else the corpus side, else
-sort-merge.  The post-join steps the kernels share have one body each:
+bands).  Its join is picked by operators/joinopt.py pair_join, the
+one join-side policy: broadcast the batch side from its exact band-row
+count, else the corpus side, else a shuffled hash or sort-merge join.
+The post-join steps the kernels share have one body each:
 ``_clip_verdicts`` (containment), ``_shared_runs`` (gaps-and-islands
 runs) and ``_incremental_verdict_tail`` (incremental dedup verdicts).
 """
@@ -51,6 +52,8 @@ from pyspark.sql.types import (
     StructField,
     StructType,
 )
+
+from langchain_memvid_spark.operators.joinopt import pair_join
 
 MEDIA_SCHEMA = StructType(
     [
@@ -1033,19 +1036,16 @@ def _band_join(
 
     ``a_cols`` / ``b_cols`` map output alias → source column name (or
     a Column expression over the band table); the signature longs
-    become ``__a{j}`` / ``__b{j}``.  The join side is picked from EXACT
-    band-row counts (dedup.py _PAIR_BROADCAST_ROW_LIMIT): broadcast the
-    A side (the batch, or either side of a self-join) when it fits;
-    else broadcast the B side (the corpus) when ``n_b_rows`` — an int,
-    or a callable counted only when this tier is reached — fits; else
-    sort-merge.  ``n_b_rows=None`` skips the middle tier (self-joins,
-    the incremental dedups).
+    become ``__a{j}`` / ``__b{j}``.  The join is picked from EXACT
+    band-row counts by operators/joinopt.py pair_join: broadcast the A
+    side (the batch, or either side of a self-join) when it fits; else
+    broadcast the B side (the corpus) when ``n_b_rows`` — an int, or a
+    callable counted only when this tier is reached — fits; else a
+    shuffled hash or sort-merge join.  ``n_b_rows=None`` skips the B
+    tier (self-joins, the incremental dedups).
 
     Returns (joined, hamming Column)."""
-    from langchain_memvid_spark.operators.dedup import (
-        _PAIR_BROADCAST_ROW_LIMIT,
-        hamming_distance_col,
-    )
+    from langchain_memvid_spark.operators.dedup import hamming_distance_col
 
     a_sig = [f"__a{j}" for j in range(len(sig_cols))]
     b_sig = [f"__b{j}" for j in range(len(sig_cols))]
@@ -1057,16 +1057,8 @@ def _band_join(
             *keys,
         )
 
-    a, b, on = side(a_bands, a_cols, a_sig), side(b_bands, b_cols, b_sig), list(keys)
-    if n_a_rows <= _PAIR_BROADCAST_ROW_LIMIT:
-        joined = b.join(F.broadcast(a), on)
-    else:
-        if callable(n_b_rows):
-            n_b_rows = n_b_rows()
-        if n_b_rows is not None and n_b_rows <= _PAIR_BROADCAST_ROW_LIMIT:
-            joined = a.join(F.broadcast(b), on)
-        else:
-            joined = b.hint("merge").join(a, on)
+    a, b = side(a_bands, a_cols, a_sig), side(b_bands, b_cols, b_sig)
+    joined = pair_join(a, b, list(keys), n_a_rows, n_b_rows)
     return joined, hamming_distance_col(a_sig, b_sig)
 
 
@@ -1075,13 +1067,14 @@ def _expand_rep_pairs(
     members: DataFrame,
     carry: list[str],
     ham: str,
-    broadcast: bool,
+    n_members: int,
 ) -> DataFrame:
     """Expand representative pairs (a_id < b_id) back to the member
     pair listing: cross-group member pairs inherit the representative
     pair's verdict, within-group pairs are exact signature duplicates
     (``ham`` = 0).  ``members`` is (media_id, rep_id, n_members,
-    carry…); both halves are output-proportional."""
+    carry…), at most ``n_members`` rows; both halves are
+    output-proportional."""
     ma = members.select(F.col("rep_id").alias("a_id"), F.col("media_id").alias("__ma"))
     mb = members.select(F.col("rep_id").alias("b_id"), F.col("media_id").alias("__mb"))
     cross = (
@@ -1097,9 +1090,8 @@ def _expand_rep_pairs(
     multi = members.filter(F.col("n_members") > 1)
     w1 = multi.select("rep_id", *carry, F.col("media_id").alias("__ma"))
     w2 = multi.select("rep_id", F.col("media_id").alias("__mb"))
-    w1 = F.broadcast(w1) if broadcast else w1.hint("merge")
     within = (
-        w1.join(w2, "rep_id")
+        pair_join(w1, w2, "rep_id", n_members)
         .filter(F.col("__ma") < F.col("__mb"))
         .select(
             F.col("__ma").alias("a_id"),
@@ -1150,10 +1142,7 @@ def _collapsed_near_dup_pairs(
     Output pair set is EXACTLY the hamming-≤max_hamming pair listing
     the pre-collapse plan produced: within-group pairs carry hamming
     0, cross-group pairs the verified signature distance."""
-    from langchain_memvid_spark.operators.dedup import (
-        _PAIR_BROADCAST_ROW_LIMIT,
-        check_pigeonhole,
-    )
+    from langchain_memvid_spark.operators.dedup import check_pigeonhole
 
     n_bands = 4
     check_pigeonhole(max_hamming, n_bands)
@@ -1166,15 +1155,13 @@ def _collapsed_near_dup_pairs(
     rep_pairs = _rep_hamming_pairs(
         groups, sig_cols, max_hamming, n_media, band_bits, max_bucket
     )
-    small = n_media <= _PAIR_BROADCAST_ROW_LIMIT
     g = groups.select(*sig_cols, "rep_id", "n_members")
     members = (
-        sig.select("media_id", *sig_cols)
-        .join(F.broadcast(g) if small else g, sig_cols)
+        pair_join(g, sig.select("media_id", *sig_cols), sig_cols, n_media)
         .select("media_id", "rep_id", "n_members")
         .cache()
     )
-    return _expand_rep_pairs(rep_pairs, members, [], "hamming", small)
+    return _expand_rep_pairs(rep_pairs, members, [], "hamming", n_media)
 
 
 def _rep_hamming_pairs(
@@ -1236,9 +1223,8 @@ def image_near_dup_pairs(
     band each — same pigeonhole, 2⁴⁸ lower iid candidate rate: the
     billion-image knob); ``hash_bits=None`` derives the width from the
     exact corpus count (hash_bits_for_corpus — 256 above ~10⁷ images).
-    Join strategy is the exact-count pick (dedup.py
-    _PAIR_BROADCAST_ROW_LIMIT) — pass ``n_media`` to skip the eager
-    count.
+    Join strategy is the exact-count pick (operators/joinopt.py
+    pair_join) — pass ``n_media`` to skip the eager count.
 
     Zero false negatives when no (band, val) bucket exceeds
     ``max_bucket`` DISTINCT signatures (exact duplicates collapse
@@ -1889,18 +1875,14 @@ def video_near_dup_pairs(
     header-only container walk, count_sampled_video_frames — one
     blob scan, no pixel decodes; pass n_band_rows or hash_bits at
     real scale to skip it).  Join strategy is the
-    exact-count pick (dedup.py _PAIR_BROADCAST_ROW_LIMIT) over the
+    exact-count pick (operators/joinopt.py pair_join) over the
     band-table size (4 rows per sampled frame); pass ``n_band_rows``
     to skip the eager count (the default localCheckpoints the
     signature table so signing runs ONCE, not once per join side).
 
     Returns (a_id, b_id, n_frames, max_hamming_seen) with
     a_id < b_id."""
-    from langchain_memvid_spark.operators.dedup import (
-        _PAIR_BROADCAST_ROW_LIMIT,
-        check_pigeonhole,
-        hamming_distance_col,
-    )
+    from langchain_memvid_spark.operators.dedup import check_pigeonhole, hamming_distance_col
 
     n_bands = 4
     check_pigeonhole(max_hamming, n_bands)
@@ -1936,7 +1918,6 @@ def video_near_dup_pairs(
         bands, n_band_rows // n_bands, max_bucket,
         keys=("frame_no", "band", "val"), return_dropped=True,
     )
-    small = n_band_rows <= _PAIR_BROADCAST_ROW_LIMIT
     joined, hamming = _band_join(
         bands, bands,
         {
@@ -2001,7 +1982,7 @@ def video_near_dup_pairs(
             *[F.col(c).alias(al) for c, al in zip(sig_cols, b_sig)],
         )
         rep_pairs = (
-            (F.broadcast(cand) if small else cand).join(fa, "a_id")
+            pair_join(cand, fa, "a_id", n_band_rows)
             .join(fb, ["b_id", "frame_no"])
             .groupBy("a_id", "b_id", "a_nf")
             .agg(F.max(hamming_distance_col(a_sig, b_sig)).alias("max_hamming_seen"))
@@ -2013,7 +1994,7 @@ def video_near_dup_pairs(
     # expansion back to media grain (within-group pairs are exact
     # sequence duplicates, max hamming 0)
     return _expand_rep_pairs(
-        rep_pairs, members, ["n_frames"], "max_hamming_seen", small
+        rep_pairs, members, ["n_frames"], "max_hamming_seen", n_band_rows
     )
 
 
@@ -2063,8 +2044,8 @@ def video_contains_image_pairs(
     bands) covers every true frame↔image pair.
 
     The 100 TB shape mirrors the incremental dedups: the VIDEO side
-    is the batch (its band table broadcasts under
-    _PAIR_BROADCAST_ROW_LIMIT — 4 band rows per sampled frame), the
+    is the batch (its band table broadcasts under the joinopt.py
+    pair_join bound — 4 band rows per sampled frame), the
     IMAGE side is the persisted corpus signature table, scanned ONCE
     with zero image-side shuffle; pass ``image_sig`` (a
     MediaSignatureStore.signatures() read or any dhash_images output
@@ -2084,43 +2065,20 @@ def video_contains_image_pairs(
     ``image_sig`` also accepts a MediaSignatureStore handle (the typed
     lifecycle: width comes from the table's own sidecar, drift
     impossible by construction)."""
+    from langchain_memvid_spark.multimodal import sigstore as ss
     from langchain_memvid_spark.operators.dedup import check_pigeonhole
 
-    if image_sig is not None and hasattr(image_sig, "signatures"):
-        store = image_sig
-        if store.modality != "image":
-            # ConfigError, not ValueError: callers catch the
-            # config-drift family uniformly across the batch operator,
-            # the streaming gate, and the sigstore itself (ADVICE r10)
-            from langchain_memvid_spark.exceptions import ConfigError
-
-            raise ConfigError(
-                f"image_sig store must be the image modality, got "
-                f"{store.modality!r}"
-            )
-        image_sig = store.signatures()
+    if image_sig is not None:
+        image_sig, _ = ss.pin_to_store(image_sig, "image", "image_sig", "image table")
     if (images is None) == (image_sig is None):
         raise ValueError("pass exactly one of images / image_sig")
     n_bands = 4
     check_pigeonhole(max_hamming, n_bands)
     if image_sig is not None:
-        sig_like = [c for c in image_sig.columns if c.startswith("dhash")]
-        if not sig_like:
-            raise ValueError(
-                f"image_sig has no dhash columns (got {image_sig.columns}) — "
-                "pass dhash_images output or an image MediaSignatureStore"
-            )
-        inferred = 64 * len(sig_like)
-        if hash_bits is not None and hash_bits != inferred:
-            # same ConfigError family as the streaming gate's
-            # contradicts-the-sidecar refusal (ADVICE r10)
-            from langchain_memvid_spark.exceptions import ConfigError
-
-            raise ConfigError(
-                f"hash_bits={hash_bits} contradicts image_sig's "
-                f"{len(sig_like)}-long layout ({inferred}-bit)"
-            )
-        hash_bits = inferred
+        hash_bits = ss.layout_hash_bits(
+            image_sig, "dhash", "image_sig", hash_bits,
+            "pass dhash_images output or an image MediaSignatureStore",
+        )
     elif hash_bits is None:
         hash_bits = hash_bits_for_corpus(
             images.filter(F.col("media_type") == "image").count()
@@ -2253,11 +2211,7 @@ def _contains_clip_pairs_from_sigs(
     audio_contains_clip_pairs share: seq_key collapse, (band, val)
     self-join grouped by frame-offset delta, df-cap-gated inline vs
     direct verify, asymmetric member expansion."""
-    from langchain_memvid_spark.operators.dedup import (
-        _PAIR_BROADCAST_ROW_LIMIT,
-        check_pigeonhole,
-        hamming_distance_col,
-    )
+    from langchain_memvid_spark.operators.dedup import check_pigeonhole, hamming_distance_col
 
     check_pigeonhole(max_hamming, 4)
     members, rep_sigs = _collapse_video_groups(sigs, sig_cols)
@@ -2308,10 +2262,8 @@ def _contains_clip_pairs_from_sigs(
             F.col("frame_no").alias("a_fno"),
             *[F.col(c).alias(al) for c, al in zip(sig_cols, a_sig)],
         )
-        if n_band_rows <= _PAIR_BROADCAST_ROW_LIMIT:
-            cand = F.broadcast(cand)
         rep_pairs = (
-            cand.join(fb, "b_id")
+            pair_join(cand, fb, "b_id", n_band_rows)
             .withColumn("a_fno", F.col("b_fno") + F.col("offset"))
             .join(fa, ["a_id", "a_fno"])
             .groupBy("a_id", "b_id", "offset", "b_nf")
@@ -2441,50 +2393,21 @@ def video_contains_clip_vs_corpus(
     Returns (video_id, clip_id, offset, clip_frames,
     max_hamming_seen) — one row per (arrival, corpus clip, matching
     offset)."""
+    from langchain_memvid_spark.multimodal import sigstore as ss
     from langchain_memvid_spark.operators.dedup import check_pigeonhole
 
     check_pigeonhole(max_hamming, n_bands=4)
     if clip_sig is None:
         raise ValueError("pass clip_sig (a signature table or store handle)")
-    if hasattr(clip_sig, "signatures"):
-        store = clip_sig
-        from langchain_memvid_spark.exceptions import ConfigError
-
-        if store.modality != "video":
-            raise ConfigError(
-                f"clip_sig store must be the video modality, got "
-                f"{store.modality!r}"
-            )
-        for name, given, sidecar in (
-            ("hash_bits", hash_bits, store.hash_bits),
-            ("every_n", every_n, store.every_n),
-        ):
-            if given is not None and given != sidecar:
-                raise ConfigError(
-                    f"{name}={given!r} contradicts the clip signature "
-                    f"table's sidecar ({name}={sidecar!r} at {store.path})"
-                )
-        hash_bits, every_n = store.hash_bits, store.every_n
-        clip_sig = store.signatures()
-    else:
-        sig_like = [c for c in clip_sig.columns if c.startswith("dhash")]
-        if not sig_like:
-            raise ValueError(
-                f"clip_sig has no dhash columns (got {clip_sig.columns}) — "
-                "pass dhash_video_frames output or a video "
-                "MediaSignatureStore"
-            )
-        inferred = 64 * len(sig_like)
-        if hash_bits is not None and hash_bits != inferred:
-            from langchain_memvid_spark.exceptions import ConfigError
-
-            raise ConfigError(
-                f"hash_bits={hash_bits} contradicts clip_sig's "
-                f"{len(sig_like)}-long layout ({inferred}-bit)"
-            )
-        hash_bits = inferred
-    if every_n is None:
-        every_n = 1
+    clip_sig, cfg = ss.pin_to_store(
+        clip_sig, "video", "clip_sig", "clip signature table",
+        hash_bits=hash_bits, every_n=every_n,
+    )
+    hash_bits = ss.layout_hash_bits(
+        clip_sig, "dhash", "clip_sig", cfg["hash_bits"],
+        "pass dhash_video_frames output or a video MediaSignatureStore",
+    )
+    every_n = 1 if cfg["every_n"] is None else cfg["every_n"]
     sig_cols = sig_col_names("dhash", hash_bits)
     frames = dhash_video_frames(
         new_videos, every_n=every_n, salvage=salvage, hash_bits=hash_bits
@@ -2762,11 +2685,12 @@ def video_shared_runs_vs_corpus(
     MediaSignatureStore handle whose sidecar pins hash_bits/every_n;
     contradicting kwargs raise ConfigError).  The 100 TB shape mirrors
     the other vs-corpus kernels: the arrival batch signs once, the
-    broadcast side is picked from EXACT counts (batch first, then
-    corpus, else sort-merge), candidates come from the (band, val)
-    equi-join grouped by the frame-offset delta — never all-pairs —
-    and runs fall out DECLARATIVELY with the gaps-and-islands window
-    (one output-proportional shuffle on (video, corpus, delta)).
+    broadcast side is picked from EXACT counts by joinopt.py pair_join
+    (batch first, then corpus, else hashed or sort-merge), candidates
+    come from the (band, val) equi-join grouped by the frame-offset
+    delta — never all-pairs — and runs fall out DECLARATIVELY with the
+    gaps-and-islands window (one output-proportional shuffle on
+    (video, corpus, delta)).
 
     With a strided corpus (``every_n`` > 1) both sides sign the same
     stride; runs count SAMPLED frames at stride spacing and only
@@ -2779,6 +2703,7 @@ def video_shared_runs_vs_corpus(
     run_frames, max_hamming_seen) — one row per maximal shared run of
     ≥ ``min_run`` aligned frames (starts are each side's first
     frame_no of the run)."""
+    from langchain_memvid_spark.multimodal import sigstore as ss
     from langchain_memvid_spark.operators.dedup import check_pigeonhole
 
     check_pigeonhole(max_hamming, n_bands=4)
@@ -2786,45 +2711,16 @@ def video_shared_runs_vs_corpus(
         raise ValueError(f"min_run must be >= 1, got {min_run}")
     if corpus_sig is None:
         raise ValueError("pass corpus_sig (a signature table or store handle)")
-    if hasattr(corpus_sig, "signatures"):
-        store = corpus_sig
-        from langchain_memvid_spark.exceptions import ConfigError
-
-        if store.modality != "video":
-            raise ConfigError(
-                f"corpus_sig store must be the video modality, got "
-                f"{store.modality!r}"
-            )
-        for name, given, sidecar in (
-            ("hash_bits", hash_bits, store.hash_bits),
-            ("every_n", every_n, store.every_n),
-        ):
-            if given is not None and given != sidecar:
-                raise ConfigError(
-                    f"{name}={given!r} contradicts the corpus signature "
-                    f"table's sidecar ({name}={sidecar!r} at {store.path})"
-                )
-        hash_bits, every_n = store.hash_bits, store.every_n
-        corpus_sig = store.signatures()
-    else:
-        sig_like = [c for c in corpus_sig.columns if c.startswith("dhash")]
-        if not sig_like or "frame_no" not in corpus_sig.columns:
-            raise ValueError(
-                f"corpus_sig must be a frame-grain table with dhash columns "
-                f"and frame_no (got {corpus_sig.columns}) — pass "
-                "dhash_video_frames output or a video MediaSignatureStore"
-            )
-        inferred = 64 * len(sig_like)
-        if hash_bits is not None and hash_bits != inferred:
-            from langchain_memvid_spark.exceptions import ConfigError
-
-            raise ConfigError(
-                f"hash_bits={hash_bits} contradicts corpus_sig's "
-                f"{len(sig_like)}-long layout ({inferred}-bit)"
-            )
-        hash_bits = inferred
-    if every_n is None:
-        every_n = 1
+    corpus_sig, cfg = ss.pin_to_store(
+        corpus_sig, "video", "corpus_sig", "corpus signature table",
+        hash_bits=hash_bits, every_n=every_n,
+    )
+    hash_bits = ss.layout_hash_bits(
+        corpus_sig, "dhash", "corpus_sig", cfg["hash_bits"],
+        "pass dhash_video_frames output or a video MediaSignatureStore",
+        grain="frame-grain",
+    )
+    every_n = 1 if cfg["every_n"] is None else cfg["every_n"]
     sig_cols = sig_col_names("dhash", hash_bits)
     frames = dhash_video_frames(
         new_videos, every_n=every_n, salvage=salvage, hash_bits=hash_bits
@@ -3025,6 +2921,7 @@ def video_audio_contains_clip_vs_corpus(
 
     Returns (video_id, clip_id, offset, clip_frames,
     max_hamming_seen)."""
+    from langchain_memvid_spark.multimodal import sigstore as ss
     from langchain_memvid_spark.operators.dedup import check_pigeonhole
 
     check_pigeonhole(max_hamming, n_bands=4)
@@ -3033,54 +2930,30 @@ def video_audio_contains_clip_vs_corpus(
             "pass clip_sig (an envelope_hash_audio_spans output at the "
             "same span/hop/hash_bits)"
         )
-    if hasattr(clip_sig, "signatures"):
-        from langchain_memvid_spark.exceptions import ConfigError
-
-        store = clip_sig
-        if store.modality != "audio_span":
-            raise ConfigError(
-                f"clip_sig store must be the audio_span modality (got "
-                f"{store.modality!r}) — whole-clip envelope hashes are "
-                "duration-normalized and cannot compose under trimming; "
-                "sign the clip corpus into an audio_span store or pass "
-                "envelope_hash_audio_spans(clips, ...) output"
-            )
-        # the TYPED form: the table's own sidecar pins the span layout
-        # and width, so arrivals are guaranteed signed at exactly the
-        # configuration the corpus was (the VERDICT r9 item 3 rule,
-        # extended to the soundtrack gate); contradicting kwargs raise
-        for name, given, sidecar in (
-            ("span_samples", span_samples, store.span_samples),
-            ("hop_samples", hop_samples, store.hop_samples),
-            ("hash_bits", hash_bits, store.hash_bits),
-        ):
-            if given is not None and given != sidecar:
-                raise ConfigError(
-                    f"{name}={given!r} contradicts the clip span table's "
-                    f"sidecar ({name}={sidecar!r} at {store.path})"
-                )
-        span_samples = store.span_samples
-        hop_samples = store.hop_samples
-        hash_bits = store.hash_bits
-        clip_sig = store.signatures()
-    sig_like = [c for c in clip_sig.columns if c.startswith("ahash")]
-    if not sig_like or "frame_no" not in clip_sig.columns:
-        raise ValueError(
-            f"clip_sig must be a span-grain envelope table with ahash "
-            f"columns and frame_no (got {clip_sig.columns}) — pass "
-            "envelope_hash_audio_spans output"
-        )
-    inferred = 64 * len(sig_like)
-    if hash_bits is not None and hash_bits != inferred:
+    if hasattr(clip_sig, "signatures") and clip_sig.modality != "audio_span":
         from langchain_memvid_spark.exceptions import ConfigError
 
         raise ConfigError(
-            f"hash_bits={hash_bits} contradicts clip_sig's "
-            f"{len(sig_like)}-long layout ({inferred}-bit)"
+            f"clip_sig store must be the audio_span modality (got "
+            f"{clip_sig.modality!r}) — whole-clip envelope hashes are "
+            "duration-normalized and cannot compose under trimming; "
+            "sign the clip corpus into an audio_span store or pass "
+            "envelope_hash_audio_spans(clips, ...) output"
         )
-    hash_bits = inferred
-    if span_samples is None:
-        span_samples = 1024  # the loose-form default (store form pins it)
+    # the TYPED form: the table's own sidecar pins the span layout and
+    # width, so arrivals are signed at exactly the corpus's
+    # configuration (VERDICT r9 item 3); contradicting kwargs raise
+    clip_sig, cfg = ss.pin_to_store(
+        clip_sig, None, "clip_sig", "clip span table",
+        span_samples=span_samples, hop_samples=hop_samples, hash_bits=hash_bits,
+    )
+    hash_bits = ss.layout_hash_bits(
+        clip_sig, "ahash", "clip_sig", cfg["hash_bits"],
+        "pass envelope_hash_audio_spans output", grain="span-grain envelope",
+    )
+    hop_samples = cfg["hop_samples"]
+    # 1024: the loose-form default (the store form pins it)
+    span_samples = 1024 if cfg["span_samples"] is None else cfg["span_samples"]
     sig_cols = sig_col_names("ahash", hash_bits)
     spans = envelope_hash_video_audio_spans(
         new_videos, span_samples=span_samples, salvage=salvage,
@@ -3871,7 +3744,7 @@ def incremental_image_near_dup(
     production ingest shape (every scrape batch vs billions of
     already-kept images), dedup.incremental_near_dup's plan on the
     dHash signature space: the batch's 4-rows-per-image band table
-    CARRIES its dhash, so under `_PAIR_BROADCAST_ROW_LIMIT` band rows
+    CARRIES its dhash, so under the joinopt.py pair_join bound in band rows
     (exact count of the BATCH — cheap by construction; pass ``n_new``
     to skip it) the band join AND the hamming scoring run map-side
     against the broadcast batch — the corpus is ONE scan with ZERO
@@ -3880,8 +3753,8 @@ def incremental_image_near_dup(
     Pass ``corpus_sig`` (persisted dhash_images output, signed once at
     ingest — 8 bytes per image) to skip re-decoding corpus pixels
     every batch; it must be signed at the SAME ``hash_bits`` the batch
-    signs with here.  Oversized batches fall back to a sort-merge band
-    join.
+    signs with here.  Oversized batches fall back to a shuffled-hash or
+    sort-merge band join.
 
     Returns one row per new image: (media_id, is_dup, dup_of,
     decoded) — dup_of the smallest corpus image within ``max_hamming``
@@ -4125,8 +3998,8 @@ def incremental_video_near_dup(
     at ingest; BOTH sides must be signed at the same ``every_n``).
 
     The 100 TB plan mirrors the other incrementals: the batch's
-    per-frame band table broadcasts under `_PAIR_BROADCAST_ROW_LIMIT`
-    band rows, so the (frame_no, band, val) join AND the per-frame
+    per-frame band table broadcasts under the joinopt.py pair_join
+    bound in band rows, so the (frame_no, band, val) join AND the per-frame
     bit_count verify run map-side against ONE corpus scan; partial
     aggregation reduces band hits to candidate pairs before the only
     (batch-sized) exchange.  The bound counts BAND rows = 4 × the

@@ -442,20 +442,62 @@ class MediaSignatureStore:
         )
 
 
-def sign_media(
-    spark: SparkSession,
-    media: DataFrame,
-    path: str,
-    modality: str,
-    hash_bits: int | None = None,
-    every_n: int | None = None,
-    salvage: bool = False,
-) -> MediaSignatureStore:
-    """One-call producer (VERDICT r8 item 3): sign a media batch into
-    the persisted signature table at ``path`` (created on first use,
-    appended thereafter) and return the store handle."""
-    store = MediaSignatureStore(
-        spark, path, modality, hash_bits=hash_bits, every_n=every_n
-    )
-    store.sign_and_append(media, salvage=salvage)
-    return store
+
+def pin_to_store(
+    sig, modality: str | None, what: str, table: str, prefix: str = "", /, **given
+) -> tuple[DataFrame, dict]:
+    """Resolve a kernel's or gate's signature argument ``what`` to
+    (static frame, config).
+
+    A MediaSignatureStore handle must hold ``modality`` (any modality
+    when None), and each ``given`` kwarg that is not None must equal
+    the sidecar's value of the same name; the sidecar's values are
+    returned.  ``table`` names the store's table and ``prefix`` starts
+    the contradiction message ("gate " for the streaming gates).  A
+    loose frame comes back with ``given`` as passed."""
+    if hasattr(sig, "signatures"):
+        if modality is not None and sig.modality != modality:
+            raise ConfigError(
+                f"{what} store must be the {modality} modality, got "
+                f"{sig.modality!r}"
+            )
+        pinned = {name: getattr(sig, name) for name in given}
+        for name, value in given.items():
+            if value is not None and value != pinned[name]:
+                raise ConfigError(
+                    f"{prefix}{name}={value!r} contradicts the {table}'s "
+                    f"sidecar ({name}={pinned[name]!r} at {sig.path})"
+                )
+        sig, given = sig.signatures(), pinned
+    if sig.isStreaming:  # pragma: no cover - contract guard
+        raise ValueError(f"{what} must be a static (batch) table")
+    return sig, given
+
+
+def layout_hash_bits(
+    sig: DataFrame,
+    base: str,
+    what: str,
+    hash_bits: int | None,
+    hint: str,
+    grain: str | None = None,
+) -> int:
+    """The signature width of ``sig``'s own column layout: 64 bits per
+    ``base``-prefixed column.  A table without such columns — or, for
+    a ``grain`` table ("frame-grain", ...), without ``frame_no`` — is
+    refused with ``hint``; a given ``hash_bits`` must match."""
+    sig_like = [c for c in sig.columns if c.startswith(base)]
+    if not sig_like or (grain is not None and "frame_no" not in sig.columns):
+        need = (
+            f"has no {base} columns"
+            if grain is None
+            else f"must be a {grain} table with {base} columns and frame_no"
+        )
+        raise ValueError(f"{what} {need} (got {sig.columns}) — {hint}")
+    inferred = 64 * len(sig_like)
+    if hash_bits is not None and hash_bits != inferred:
+        raise ConfigError(
+            f"hash_bits={hash_bits} contradicts {what}'s "
+            f"{len(sig_like)}-long layout ({inferred}-bit)"
+        )
+    return inferred

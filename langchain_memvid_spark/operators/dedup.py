@@ -20,9 +20,9 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from langchain_memvid_spark.exceptions import ConfigError
-from langchain_memvid_spark.functions.hashing import stable_hash64
-from langchain_memvid_spark.functions.text import fingerprint, tokens, word_shingles
+from langchain_memvid_spark.functions.text import fingerprint
 from langchain_memvid_spark.functions.vector import cosine_sim
+from langchain_memvid_spark.operators.joinopt import pair_join
 from langchain_memvid_spark.session import local_frame, release
 
 # MinHash permutations h_j = (a*(h XOR m) + b) mod P over 60-bit base
@@ -45,49 +45,6 @@ MINHASH_PERMS: tuple[tuple[int, int, int], ...] = (
 )
 MINHASH_P = (1 << 61) - 1
 SIMHASH_BITS = 32
-
-# Band-table self-joins pick their strategy from an EXACT row count
-# (band rows = n_bands x n_docs), not the static planner's default
-# stats for RDD-backed plans: explicit broadcast at or below this many
-# band rows (~30 B/row -> tens of MB serialized, safe in any executor),
-# explicit merge above (a wrongly-broadcast 26 M-row table OOM-killed
-# the sf10 run — SCALE.md).
-_PAIR_BROADCAST_ROW_LIMIT = 1_000_000
-
-# Shuffled-hash middle tier for corpus×corpus pair joins (optimization
-# r14, guide §3.1): between "small enough to broadcast" and "must take
-# the always-safe SMJ" there is a wide band where building a
-# per-partition hash table skips BOTH sort passes — measured 0.85→0.74 s
-# at sf0.1 and 3.99→3.04 s at sf1 on the shingle pair join (min of
-# reps, alternating).  The build side is safe when its PER-PARTITION
-# slice is bounded: rows / shuffle-partitions under this limit keeps
-# the hash table ≈ tens of MB at ~30 B/row.  Above it (or when the
-# exact count is unknown) the pick falls back to SMJ, the only
-# always-safe shape.
-_SHJ_BUILD_ROWS_PER_PARTITION = 2_000_000
-
-
-def _pair_join_left(
-    a: DataFrame, n_rows: int | None, allow_broadcast: bool = True
-) -> DataFrame:
-    """Three-tier side pick for a corpus×corpus equi-join, from an
-    EXACT row count (never planner estimates — the RDD-backed signer
-    plans fool them, see the sf10 broadcast-OOM note above): broadcast
-    under _PAIR_BROADCAST_ROW_LIMIT, shuffled-hash while the
-    per-partition build stays bounded, else merge (SMJ).
-    ``allow_broadcast=False`` skips straight to the shuffled-hash tier
-    — for wide-row sides (the shingle table's 24 B rows measured
-    slower broadcast than SHJ end-to-end in the r14 A/B)."""
-    if n_rows is not None:
-        if allow_broadcast and n_rows <= _PAIR_BROADCAST_ROW_LIMIT:
-            return F.broadcast(a)
-        try:
-            parts = int(a.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-        except Exception:
-            parts = 0
-        if parts > 0 and n_rows / parts <= _SHJ_BUILD_ROWS_PER_PARTITION:
-            return a.hint("shuffle_hash")
-    return a.hint("merge")
 
 # Random-hyperplane LSH for embedding vectors (sign-of-dot-product,
 # Charikar 2002). Weights are small ints from a fixed multiplicative-
@@ -228,17 +185,6 @@ def exact_dedup(documents: DataFrame, text_col: str = "text") -> DataFrame:
     )
 
 
-def shingle_table(documents: DataFrame, k: int = 3, text_col: str = "text") -> DataFrame:
-    """(doc_id, shingle) distinct pairs — the base of Jaccard candidates.
-
-    Dedup happens per-row with array_distinct BEFORE explode — a pure
-    map operation — instead of a post-explode dropDuplicates, which
-    would shuffle the full exploded set (docs × shingles rows)."""
-    return documents.select(
-        "doc_id", F.explode(F.array_distinct(word_shingles(F.col(text_col), k))).alias("sh")
-    )
-
-
 def _shingle_rows(documents: DataFrame, k: int, text_col: str) -> DataFrame:
     """(doc_id, sh, n_sh) — one row per distinct shingle, with the doc's
     set cardinality carried along so Jaccard needs no count-joins later.
@@ -289,12 +235,12 @@ def _pair_overlap_counts(sh: DataFrame) -> DataFrame:
     # nearly broadcast 26 M shingle rows at sf10 — left the always-safe
     # SMJ paying two corpus sorts at every scale.  `sh` is checkpointed
     # by construction, so an EXACT count is one cheap narrow job, and
-    # the three-tier pick (broadcast / shuffled-hash / merge) keeps the
-    # OOM protection while dropping the sorts whenever the build side's
-    # per-partition slice is bounded.
+    # the joinopt.pair_join pick (shuffled-hash / merge; broadcast
+    # measured slower for these wide rows) keeps the OOM protection
+    # while dropping the sorts whenever the build side's per-partition
+    # slice is bounded.
     return (
-        _pair_join_left(a, sh.count(), allow_broadcast=False)
-        .join(b, "shh")
+        pair_join(a, b, "shh", sh.count(), allow_broadcast=False)
         .filter(F.col("a_id") < F.col("b_id"))
         .groupBy("a_id", "b_id")
         .agg(
@@ -803,8 +749,8 @@ def minhash_band_pairs(
     ).cache()
     a = bucketed.select(F.col("doc_id").alias("a_id"), "band", "bucket")
     b = bucketed.select(F.col("doc_id").alias("b_id"), "band", "bucket")
-    # Three-tier pick from an EXACT count (the planner's stats for the
-    # RDD-backed mapInPandas product are unreliable — the sf10
+    # joinopt.pair_join pick from an EXACT count (the planner's stats
+    # for the RDD-backed mapInPandas product are unreliable — the sf10
     # broadcast-OOM hazard): band rows = n_docs × n_bands.  The count
     # is EAGER at plan-build time — pass n_docs to skip it when the
     # input's lineage is expensive to count.  When ``sig`` was given,
@@ -813,8 +759,7 @@ def minhash_band_pairs(
     if n_docs is None:
         n_docs = (sig if given_sig else documents).count()
     return (
-        _pair_join_left(a, n_docs * len(band_structs))
-        .join(b, ["band", "bucket"])
+        pair_join(a, b, ["band", "bucket"], n_docs * len(band_structs))
         .filter(F.col("a_id") < F.col("b_id"))
         .select("a_id", "b_id")
         .dropDuplicates()
@@ -844,8 +789,8 @@ def incremental_near_dup(
     ``filter(~is_dup)``.
 
     The 100 TB plan: both band tables CARRY their signature columns, so
-    with the batch under `_PAIR_BROADCAST_ROW_LIMIT` band rows (exact
-    count, same pick as simhash_near_pairs) the band join AND the
+    with the batch broadcastable (joinopt.pair_join over exact band
+    rows, same pick as simhash_near_pairs) the band join AND the
     scoring are map-side against the broadcast batch — the corpus is
     ONE embarrassingly-parallel scan with ZERO shuffle; the only
     exchange is the final groupBy over the batch's own doc ids.
@@ -858,8 +803,7 @@ def incremental_near_dup(
     signs with here (the signature table fixes its shingle width —
     same caveat as minhash_band_pairs' ``sig``); a mismatch silently
     yields that other configuration's near-dup verdicts. Oversized
-    batches fall back to the only always-safe shape, a sort-merge band
-    join.
+    batches fall back to a shuffled-hash or sort-merge band join.
 
     Like simhash_near_pairs, the strategy count is EAGER at
     plan-build time (a count of the BATCH, not the corpus — cheap by
@@ -908,11 +852,6 @@ def incremental_near_dup(
     if n_new is None:
         n_new = new_docs.count()
     new_banded = banded(sig_new, "new")
-    right = (
-        F.broadcast(new_banded)
-        if n_new * n_bands <= _PAIR_BROADCAST_ROW_LIMIT
-        else new_banded.hint("merge")
-    )
     eq = None
     for j in range(n):
         term = F.when(F.col(f"cmh{j}") == F.col(f"newmh{j}"), 1).otherwise(0)
@@ -922,8 +861,9 @@ def incremental_near_dup(
     # doc ids); filtering c_id != new_id here silently exempted the
     # colliding ids from the gate (caught by the store round-trip test)
     scored = (
-        banded(corpus_sig, "c")
-        .join(right, ["band", "bucket"])
+        pair_join(
+            new_banded, banded(corpus_sig, "c"), ["band", "bucket"], n_new * n_bands
+        )
         .select("new_id", "c_id", (eq.cast("double") / F.lit(float(n))).alias("est"))
         .filter(F.col("est") >= threshold)
     )
@@ -931,13 +871,13 @@ def incremental_near_dup(
         F.min("c_id").alias("dup_of"),
         F.round(F.max("est"), 4).alias("jaccard_max"),
     )
-    # matches ≤ one row per batch doc — always broadcastable when the
-    # band pick above chose broadcast; the batch side then never shuffles
-    if n_new * n_bands <= _PAIR_BROADCAST_ROW_LIMIT:
-        matches = F.broadcast(matches)
+    # matches ≤ one row per batch doc: broadcast at any batch size the
+    # band join broadcast, so the batch side never shuffles
     return (
-        new_docs.select("doc_id")
-        .join(matches, new_docs["doc_id"] == matches["new_id"], "left")
+        pair_join(
+            matches, new_docs.select("doc_id"),
+            new_docs["doc_id"] == matches["new_id"], n_new, how="left",
+        )
         .select(
             "doc_id",
             F.col("dup_of").isNotNull().alias("is_dup"),
@@ -1097,16 +1037,15 @@ def embedding_lsh_candidates(
     # cache: both self-join sides reference the band table — without it
     # the mapInPandas GEMM signer evaluates twice per run (optimization
     # r14, the ADVICE r13 double-signing shape); lazy cache, zero extra
-    # jobs.  Join pick: three-tier from the exact count (band rows =
-    # n × n_bands) instead of the blanket always-safe merge — the count
-    # is EAGER at plan-build when band_bits didn't already pay it.
+    # jobs.  Join pick: joinopt.pair_join from the exact count (band
+    # rows = n × n_bands) instead of the blanket always-safe merge — the
+    # count is EAGER at plan-build when band_bits didn't already pay it.
     a = bands.select(F.col("vid").alias("a_id"), "band", "val")
     b = bands.select(F.col("vid").alias("b_id"), "band", "val")
     if n is None:
         n = embeddings.count()
     return (
-        _pair_join_left(a, n * n_bands)
-        .join(b, ["band", "val"])
+        pair_join(a, b, ["band", "val"], n * n_bands)
         .filter(F.col("a_id") < F.col("b_id"))
         .select("a_id", "b_id")
         .distinct()
@@ -1170,20 +1109,15 @@ def incremental_embedding_dedup(
         .localCheckpoint(),
         "new",
     )
-    right = (
-        F.broadcast(new_banded)
-        if n_new * n_bands <= _PAIR_BROADCAST_ROW_LIMIT
-        else new_banded.hint("merge")
-    )
     sim = cosine_sim(F.col("c_vec"), F.col("new_vec"))
     # no id-equality guard: batch and corpus ids are separate namespaces
     # (see incremental_near_dup)
+    corpus_banded = banded(
+        _rhp_sig_table(corpus_vecs, id_col, vec_col, n_planes, dim, carry_vec=True),
+        "c",
+    )
     scored = (
-        banded(
-            _rhp_sig_table(corpus_vecs, id_col, vec_col, n_planes, dim, carry_vec=True),
-            "c",
-        )
-        .join(right, ["band", "val"])
+        pair_join(new_banded, corpus_banded, ["band", "val"], n_new * n_bands)
         .select("new_id", "c_id", sim.alias("cos"))
         .filter(F.col("cos") >= threshold)
     )
@@ -1191,11 +1125,11 @@ def incremental_embedding_dedup(
         F.min("c_id").alias("dup_of"),
         F.round(F.max("cos"), 4).alias("cos_max"),
     )
-    if n_new * n_bands <= _PAIR_BROADCAST_ROW_LIMIT:
-        matches = F.broadcast(matches)
     return (
-        new_vecs.select(F.col(id_col).alias("vec_id"))
-        .join(matches, F.col("vec_id") == matches["new_id"], "left")
+        pair_join(
+            matches, new_vecs.select(F.col(id_col).alias("vec_id")),
+            F.col("vec_id") == matches["new_id"], n_new, how="left",
+        )
         .select(
             "vec_id",
             F.col("dup_of").isNotNull().alias("is_dup"),
@@ -1474,7 +1408,7 @@ def simhash_near_pairs(
     # n_bands rows per doc, so one cheap count of the input (metadata-
     # only on a parquet scan) picks the strategy precisely instead of
     # trusting the static planner's default stats for the RDD-backed
-    # simhash plan: the three-tier _pair_join_left pick (broadcast /
+    # simhash plan: the joinopt.pair_join pick (broadcast /
     # shuffled-hash / always-safe SMJ, optimization r14).
     # The count is EAGER at plan-build time — pass n_docs when the
     # input is a derived frame whose lineage is expensive to count (or
@@ -1482,8 +1416,7 @@ def simhash_near_pairs(
     if n_docs is None:
         n_docs = documents.count()
     return (
-        _pair_join_left(a, n_docs * n_bands)
-        .join(b, ["band", "val"])
+        pair_join(a, b, ["band", "val"], n_docs * n_bands)
         .filter(F.col("a_id") < F.col("b_id"))
         .select("a_id", "b_id", F.bit_count(F.col("a_sh").bitwiseXOR(F.col("b_sh"))).alias("hamming"))
         .filter(F.col("hamming") <= max_hamming)

@@ -1,9 +1,13 @@
-"""Join strategies for skew and co-location at cluster scale.
+"""Join strategies: the one join-side pick, and skew and co-location
+at cluster scale.
 
 The reference is single-process and joins nothing (SURVEY.md §2b);
 these are the Spark-side techniques a 100 TB deployment of this engine
 leans on when AQE alone isn't enough:
 
+  - pair_join: the physical join of every banded candidate join,
+    probe, lookup and vocabulary join, picked from exact row counts
+    (broadcast, then shuffled hash, then sort-merge).
   - salted_join: pre-split hot build-side keys so one executor doesn't
     receive an entire hot key's rows. Deterministic salt (hash of fact
     columns, not rand()) keeps results reproducible and oracle-safe.
@@ -14,8 +18,71 @@ leans on when AQE alone isn't enough:
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from typing import Callable
+
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+# The join-side policy.  Every join whose small side is derived — band
+# tables, signature sets, query probes, vocabularies — picks its
+# strategy from an EXACT row count, never the static planner's
+# estimate: the RDD-backed signer plans (mapInPandas, checkpoints)
+# carry default stats that fool it.
+#
+# Broadcast at or below _PAIR_BROADCAST_ROW_LIMIT rows (~30 B/row ->
+# tens of MB serialized, safe in any executor).  A wrongly-broadcast
+# 26 M-row band table OOM-killed the sf10 run (SCALE.md).  The other way
+# round, shuffling 25 M token rows against a vocabulary that is tiny at
+# every tested SF made unigram_logprob_scores 46.4x slower at sf10 than
+# at sf0.1; broadcasting the vocabulary cut that to 9.8x (SCALE.md).
+#
+# Above it, a shuffled hash join while the build side's PER-PARTITION
+# slice (rows / shuffle partitions) stays under
+# _SHJ_BUILD_ROWS_PER_PARTITION — a hash table of tens of MB that skips
+# both sort passes: 0.85 -> 0.74 s at sf0.1 and 3.99 -> 3.04 s at sf1 on
+# the shingle pair join (optimization r14, min of alternating reps).
+# Beyond that, sort-merge, the only always-safe shape.
+_PAIR_BROADCAST_ROW_LIMIT = 1_000_000
+_SHJ_BUILD_ROWS_PER_PARTITION = 2_000_000
+
+
+def fits_broadcast(n_rows: int) -> bool:
+    """Whether a side of ``n_rows`` exact rows is small enough to
+    broadcast."""
+    return n_rows <= _PAIR_BROADCAST_ROW_LIMIT
+
+
+def pair_join(
+    a: DataFrame,
+    b: DataFrame,
+    on: str | list[str] | Column,
+    n_a: int,
+    n_b: int | Callable[[], int] | None = None,
+    how: str = "inner",
+    allow_broadcast: bool = True,
+) -> DataFrame:
+    """``b.join(a, on, how)`` with the physical join picked from exact
+    row counts (the policy above), ``a`` being the side to build from:
+
+    1. broadcast ``a`` when ``n_a`` rows fit;
+    2. else, for an inner join, broadcast ``b`` when ``n_b`` fits —
+       an int, or a callable counted only when this tier is reached;
+    3. else a shuffled hash join building ``a``, when ``n_a`` over the
+       shuffle partitions is under _SHJ_BUILD_ROWS_PER_PARTITION;
+    4. else sort-merge.
+
+    ``allow_broadcast=False`` skips tier 1, for wide-row sides that
+    measured slower broadcast than hashed (the shingle table's 24 B
+    rows, r14 A/B).  The build side sits on the right of the join."""
+    if allow_broadcast and fits_broadcast(n_a):
+        return b.join(F.broadcast(a), on, how)
+    if n_b is not None and how == "inner":
+        if fits_broadcast(n_b() if callable(n_b) else n_b):
+            return a.join(F.broadcast(b), on)
+    parts = int(a.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+    if n_a / parts <= _SHJ_BUILD_ROWS_PER_PARTITION:
+        return b.join(a.hint("shuffle_hash"), on, how)
+    return b.join(a.hint("merge"), on, how)
 
 
 def salted_join(

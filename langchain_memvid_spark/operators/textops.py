@@ -16,6 +16,7 @@ from langchain_memvid_spark.functions.text import (
     quality_score_cols,
     token_count,
 )
+from langchain_memvid_spark.operators.joinopt import pair_join
 from langchain_memvid_spark.session import local_frame
 
 
@@ -539,15 +540,6 @@ def seeded_shuffle(documents: DataFrame, seed: int = 42) -> DataFrame:
     return out.select(F.col("pos").cast("long").alias("pos"), "doc_id", "shuffle_key")
 
 
-# Vocabulary tables at or below this many terms broadcast to the
-# scoring join (a unigram vocab is ~50 B/term -> tens of MB); above it
-# the join stays a shuffle equi-join on the term. Same exact-count
-# strategy pick as the simhash band join (dedup.py) — the sf10 ladder
-# measured the blanket shuffle at 46.4x because 25 M token rows were
-# shuffled against a vocabulary that is TINY at every tested SF.
-_VOCAB_BROADCAST_ROW_LIMIT = 1_000_000
-
-
 def bigram_logprob_scores(
     documents: DataFrame, text_col: str = "text", n_bigrams: int | None = None
 ) -> DataFrame:
@@ -561,11 +553,11 @@ def bigram_logprob_scores(
 
     One pass extracts the bigram stream (pure Catalyst slice+zip, no
     UDF), two aggregations build the LM (bigram counts and w₁ context
-    counts), and the scoring joins pick broadcast vs shuffle from an
-    EXACT distinct-bigram count (the unigram scorer's
-    _VOCAB_BROADCAST_ROW_LIMIT protocol — eager at plan-build unless
-    ``n_bigrams`` is passed): at or below the bound the token stream
-    never shuffles.  Documents with fewer than two tokens have no
+    counts), and the scoring joins pick their strategy from an EXACT
+    distinct-bigram count (operators/joinopt.py pair_join, as the
+    unigram scorer — eager at plan-build unless ``n_bigrams`` is
+    passed): at or below the broadcast bound the token stream never
+    shuffles.  Documents with fewer than two tokens have no
     bigrams and drop out (same in the SQL oracle)."""
     from langchain_memvid_spark.functions.text import tokens as _tokens
 
@@ -599,12 +591,11 @@ def bigram_logprob_scores(
     # aggregation of the LM itself (optimization r14 — the same
     # derive-from-the-materialized-reduction remedy as unigram/q11).
     cx = c2.groupBy("w1").agg(F.sum("__c2").alias("__cx"))
-    if n_bigrams <= _VOCAB_BROADCAST_ROW_LIMIT:
-        c2, cx = F.broadcast(c2), F.broadcast(cx)
     p = F.col("__c2").cast("double") / F.col("__cx").cast("double")
+    # cx has at most as many rows as c2: one count picks both joins
+    scored = pair_join(c2, bg, ["w1", "w2"], n_bigrams)
     return (
-        bg.join(c2, ["w1", "w2"])
-        .join(cx, "w1")
+        pair_join(cx, scored, "w1", n_bigrams)
         .groupBy("doc_id")
         .agg(
             F.count("*").alias("n_bigrams"),
@@ -625,11 +616,11 @@ def unigram_logprob_scores(
     grand total turns counts into probabilities, and one join scores
     every token occurrence — all JVM-side. The scoring join picks its
     strategy from an EXACT vocabulary count (the distinct-term count
-    runs EAGERLY at plan-build time unless ``n_terms`` is passed):
-    broadcast at or below _VOCAB_BROADCAST_ROW_LIMIT terms — the token
-    stream never shuffles, the corpus-sized side stays map-side —
-    shuffle equi-join above (web-scale vocabularies, never
-    collected)."""
+    runs EAGERLY at plan-build time unless ``n_terms`` is passed) with
+    operators/joinopt.py pair_join: broadcast at or below its bound —
+    the token stream never shuffles, the corpus-sized side stays
+    map-side — a hashed or sort-merge equi-join above (web-scale
+    vocabularies, never collected)."""
     from langchain_memvid_spark.functions.text import tokens as _tokens
 
     tok = documents.select(
@@ -648,10 +639,8 @@ def unigram_logprob_scores(
         "term",
         (F.col("cnt").cast("double") / F.col("total").cast("double")).alias("p"),
     )
-    if n_terms <= _VOCAB_BROADCAST_ROW_LIMIT:
-        probs = F.broadcast(probs)
     return (
-        tok.join(probs, "term")
+        pair_join(probs, tok, "term", n_terms)
         .groupBy("doc_id")
         .agg(
             F.count("*").alias("n_tokens"),

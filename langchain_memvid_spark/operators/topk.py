@@ -21,6 +21,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from langchain_memvid_spark.functions.vector import cosine_sim, dot, vector_literal
+from langchain_memvid_spark.operators.joinopt import fits_broadcast, pair_join
 from langchain_memvid_spark.session import local_frame
 
 # topk_join's exact-kernel pick: at or below this many scored pairs the
@@ -381,16 +382,11 @@ def topk_join(
     Output: (left_id, right_id, sim, rank), rank 1-based per left id,
     ties broken by right_id.
     """
-    from langchain_memvid_spark.operators.dedup import _PAIR_BROADCAST_ROW_LIMIT
-
     if n_left is None:
         n_left = left.count()
     if n_right is None:
         n_right = right.count()
-    if (
-        n_left <= _PAIR_BROADCAST_ROW_LIMIT
-        and n_left * n_right <= _TOPK_CATALYST_PAIR_LIMIT
-    ):
+    if fits_broadcast(n_left) and n_left * n_right <= _TOPK_CATALYST_PAIR_LIMIT:
         l = left.select(F.col(id_col).alias("left_id"), F.col(vec_col).alias("__lv"))
         scored = (
             right.select(F.col(id_col).alias("right_id"), F.col(vec_col).alias("__rv"))
@@ -508,10 +504,7 @@ def topk_join_lsh(
     Output: (left_id, right_id, sim, rank) — same shape as topk_join,
     so a recall witness can compare the two directly.
     """
-    from langchain_memvid_spark.operators.dedup import (
-        _PAIR_BROADCAST_ROW_LIMIT,
-        _rhp_sig_table,
-    )
+    from langchain_memvid_spark.operators.dedup import _rhp_sig_table
 
     n_bands = n_planes // band_bits
     mask = (1 << band_bits) - 1
@@ -543,15 +536,10 @@ def topk_join_lsh(
 
     if n_left is None:
         n_left = left.count()
-    lb = banded(left, "l")
-    lb = (
-        F.broadcast(lb)
-        if n_left * n_bands <= _PAIR_BROADCAST_ROW_LIMIT
-        else lb.hint("merge")
-    )
     cand = (
-        banded(right, "r")
-        .join(lb, ["band", "val"])
+        pair_join(
+            banded(left, "l"), banded(right, "r"), ["band", "val"], n_left * n_bands
+        )
         .select(
             "l_id", "r_id", cosine_sim(F.col("r_vec"), F.col("l_vec")).alias("__s")
         )

@@ -18,6 +18,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from langchain_memvid_spark.operators.dedup import simhash
+from langchain_memvid_spark.operators.joinopt import pair_join
 from langchain_memvid_spark.session import local_frame
 
 DOCS_SCHEMA = "doc_id LONG, text STRING, lang STRING, source STRING, n_chars LONG"
@@ -301,11 +302,11 @@ def near_dedup_stream_vs_corpus(
     — the streaming analog of incremental_near_dup's corpus_sig):
     re-signing 100 TB of corpus text every microbatch would be absurd.
 
-    The static side's join strategy is picked from an EXACT count, the
-    same `_PAIR_BROADCAST_ROW_LIMIT` rule every batch pair-join uses
-    (operators/dedup.py): under the bound the distinct signature set
+    The static side's join strategy is picked from an EXACT count by
+    the pick every batch pair-join uses (operators/joinopt.py
+    pair_join): under the broadcast bound the distinct signature set
     broadcasts (one tiny hash table, zero stream-side shuffle); above
-    it the join runs UNHINTED — at billions of corpus docs the
+    it the join hashes or sort-merges — at billions of corpus docs the
     distinct signatures saturate the 2^32 space (~34 GB of longs) and
     a forced broadcast would pin that into every executor (VERDICT r7
     What's-wrong #1).  The count runs ONCE at stream setup, not per
@@ -316,14 +317,10 @@ def near_dedup_stream_vs_corpus(
             F.lit(INGEST_EPOCH) + F.pmod(F.col("doc_id"), F.lit(INGEST_SPAN_SECONDS))
         ),
     )
-    from langchain_memvid_spark.operators.dedup import _PAIR_BROADCAST_ROW_LIMIT
-
     sigs = corpus_sigs.select("simhash").distinct()
     if corpus_sigs.isStreaming:  # pragma: no cover - contract guard
         raise ValueError("corpus_sigs must be a static (batch) table")
-    if sigs.count() <= _PAIR_BROADCAST_ROW_LIMIT:
-        sigs = F.broadcast(sigs)
-    novel = signed.join(sigs, "simhash", "left_anti")
+    novel = pair_join(sigs, signed, "simhash", sigs.count(), how="left_anti")
     return (
         novel.withWatermark("ts", watermark)
         .dropDuplicatesWithinWatermark(["simhash"])

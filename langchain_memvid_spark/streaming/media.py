@@ -37,18 +37,20 @@ configuration's verdicts).
 
 from __future__ import annotations
 
-from typing import TYPE_CHECKING, Callable
+from typing import Callable
 
 from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 
 from langchain_memvid_spark.exceptions import ConfigError
 from langchain_memvid_spark.multimodal import binary as mm
+from langchain_memvid_spark.multimodal.sigstore import (
+    MediaSignatureStore,
+    layout_hash_bits,
+    pin_to_store,
+)
 from langchain_memvid_spark.session import local_frame, release
 from langchain_memvid_spark.streaming.documents import _read_table_stream
-
-if TYPE_CHECKING:  # pragma: no cover - typing only
-    from langchain_memvid_spark.multimodal.sigstore import MediaSignatureStore
 
 MEDIA_STREAM_SCHEMA = "media_id LONG, media_type STRING, content BINARY"
 
@@ -72,41 +74,10 @@ _SIG_BASES = {"image": "dhash", "audio": "ahash", "video": "dhash"}
 def _infer_sig_cols(sig: DataFrame, base: str, what: str) -> list:
     """Signature column list from the table's own layout (the same
     width-inference rule the batch operators use)."""
-    sig_like = [c for c in sig.columns if c.startswith(base)]
-    if not sig_like:
-        raise ValueError(
-            f"{what} has no {base} columns (got {sig.columns}) — "
-            "pass a signer output or a MediaSignatureStore"
-        )
-    return mm.sig_col_names(base, 64 * len(sig_like))
-
-
-def _pin_to_store(sig, modality: str | None, what: str, table: str, /, **given):
-    """Resolve a gate's corpus argument ``what`` to (static frame,
-    config).
-
-    A MediaSignatureStore handle must hold ``modality`` (any modality
-    when None), and each ``given`` kwarg that is not None must equal
-    the sidecar's value of the same name; the sidecar's values are
-    returned.  ``table`` names the store's table in the contradiction
-    message.  A loose frame comes back with ``given`` as passed."""
-    if hasattr(sig, "signatures"):
-        if modality is not None and sig.modality != modality:
-            raise ConfigError(
-                f"{what} store must be the {modality} modality, got "
-                f"{sig.modality!r}"
-            )
-        pinned = {name: getattr(sig, name) for name in given}
-        for name, value in given.items():
-            if value is not None and value != pinned[name]:
-                raise ConfigError(
-                    f"gate {name}={value!r} contradicts the {table}'s "
-                    f"sidecar ({name}={pinned[name]!r} at {sig.path})"
-                )
-        sig, given = sig.signatures(), pinned
-    if sig.isStreaming:  # pragma: no cover - contract guard
-        raise ValueError(f"{what} must be a static (batch) table")
-    return sig, given
+    bits = layout_hash_bits(
+        sig, base, what, None, "pass a signer output or a MediaSignatureStore"
+    )
+    return mm.sig_col_names(base, bits)
 
 
 def _run_gate(
@@ -235,11 +206,12 @@ def stream_media_dedup_vs_corpus(
     if store is None and corpus_sig is None:
         raise ConfigError("pass corpus_sig= (loose) or store= (typed)")
     try:
-        corpus_sig, cfg = _pin_to_store(
+        corpus_sig, cfg = pin_to_store(
             corpus_sig if store is None else store,
             None,
             "corpus_sig",
             "signature table",
+            "gate ",
             modality=modality,
             hash_bits=hash_bits,
             every_n=every_n,
@@ -303,8 +275,8 @@ def stream_video_contains_clip(
 
     Returns (video_id, clip_id, offset, clip_frames, max_hamming_seen,
     batch_id)."""
-    clip_sig, cfg = _pin_to_store(
-        clip_sig, "video", "clip_sig", "clip table", every_n=every_n
+    clip_sig, cfg = pin_to_store(
+        clip_sig, "video", "clip_sig", "clip table", "gate ", every_n=every_n
     )
     bind = _counted(
         mm.video_contains_clip_vs_corpus,
@@ -354,8 +326,8 @@ def stream_video_shared_runs(
 
     Returns (video_id, corpus_id, video_start, corpus_start,
     run_frames, max_hamming_seen, batch_id)."""
-    corpus_sig, cfg = _pin_to_store(
-        corpus_sig, "video", "corpus_sig", "corpus table", every_n=every_n
+    corpus_sig, cfg = pin_to_store(
+        corpus_sig, "video", "corpus_sig", "corpus table", "gate ", every_n=every_n
     )
     bind = _counted(
         mm.video_shared_runs_vs_corpus,
@@ -416,11 +388,12 @@ def stream_video_audio_contains_clip(
             "compose under trimming; sign the clip corpus into an "
             "audio_span store or pass envelope_hash_audio_spans output"
         )
-    clip_sig, cfg = _pin_to_store(
+    clip_sig, cfg = pin_to_store(
         clip_sig,
         None,
         "clip_sig",
         "clip span table",
+        "gate ",
         span_samples=span_samples,
         hop_samples=hop_samples,
     )
@@ -470,7 +443,7 @@ def stream_video_contains_image(
     pins the width.
 
     Returns (video_id, frame_no, image_id, hamming, batch_id)."""
-    image_sig, _ = _pin_to_store(image_sig, "image", "image_sig", "image table")
+    image_sig, _ = pin_to_store(image_sig, "image", "image_sig", "image table")
     bind = _counted(
         mm.video_contains_image_pairs,
         image_sig=image_sig,

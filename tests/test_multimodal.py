@@ -2106,7 +2106,7 @@ def test_vs_corpus_broadcasts_small_corpus_when_batch_too_big(spark, tmp_path):
     falling to sort-merge; outputs identical either way.  Forced via
     the n_band_rows kwarg (pretend the batch is huge)."""
     from langchain_memvid_spark.multimodal import sigstore as ss
-    from langchain_memvid_spark.operators.dedup import _PAIR_BROADCAST_ROW_LIMIT
+    from langchain_memvid_spark.operators import joinopt
 
     w, h = 16, 8
     px = [mm.encode_png(w, h, mm._stretch_bytes(b"bc%d" % i, w * h))
@@ -2123,7 +2123,7 @@ def test_vs_corpus_broadcasts_small_corpus_when_batch_too_big(spark, tmp_path):
     store.sign_and_append(clips)
     sig = store.signatures()
 
-    big = _PAIR_BROADCAST_ROW_LIMIT + 1
+    big = joinopt._PAIR_BROADCAST_ROW_LIMIT + 1
     want = sorted(map(tuple, mm.video_contains_clip_vs_corpus(
         arrivals, clip_sig=sig).collect()))
     forced = mm.video_contains_clip_vs_corpus(
@@ -2132,9 +2132,11 @@ def test_vs_corpus_broadcasts_small_corpus_when_batch_too_big(spark, tmp_path):
     assert "BroadcastHashJoin" in plan and "SortMergeJoin" not in plan
     assert sorted(map(tuple, forced.collect())) == want == [(7, 1, 1, 2, 0)]
 
-    # and with BOTH sides over the limit, the always-safe SMJ
+    # and with BOTH sides over the shuffled-hash bound, the always-safe SMJ
+    parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    huge = parts * joinopt._SHJ_BUILD_ROWS_PER_PARTITION + 1
     smj = mm.video_contains_clip_vs_corpus(
-        arrivals, clip_sig=sig, n_band_rows=big, n_corpus_band_rows=big)
+        arrivals, clip_sig=sig, n_band_rows=huge, n_corpus_band_rows=huge)
     assert "SortMergeJoin" in smj._jdf.queryExecution().executedPlan().toString()
     assert sorted(map(tuple, smj.collect())) == want
 

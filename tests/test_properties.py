@@ -12,7 +12,7 @@ from pyspark.sql import functions as F
 
 from langchain_memvid_spark.exceptions import ConfigError
 from langchain_memvid_spark.operators.asof import asof_join
-from langchain_memvid_spark.operators import dedup
+from langchain_memvid_spark.operators import dedup, joinopt
 
 SET = settings(max_examples=6, deadline=None, derandomize=True)
 
@@ -1090,7 +1090,8 @@ def test_band_join_matches_brute_force_hamming(
     all-pairs set with Hamming ≤ 3, for 64-bit (4×16-bit slices) and
     256-bit (4 longs) signatures, in the self-join and batch-vs-corpus
     forms, with and without the frame_no key, on every side pick: A
-    side broadcast, B side broadcast (a lazy count), sort-merge."""
+    side broadcast, B side broadcast (a lazy count), shuffled hash,
+    sort-merge."""
     from langchain_memvid_spark.multimodal import binary as mm
 
     spark = spark_handle
@@ -1133,11 +1134,14 @@ def test_band_join_matches_brute_force_hamming(
         and bin(va ^ vb).count("1") <= 3
     }
     keys = ("frame_no", "band", "val") if framed else ("band", "val")
-    big = dedup._PAIR_BROADCAST_ROW_LIMIT + 1
+    big = joinopt._PAIR_BROADCAST_ROW_LIMIT + 1
+    parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    huge = parts * joinopt._SHJ_BUILD_ROWS_PER_PARTITION + 1
     picks = [
         (4 * len(a_rows), None, "BroadcastHashJoin"),
         (big, lambda: 4 * len(b_rows), "BroadcastHashJoin"),
-        (big, big, "SortMergeJoin"),
+        (big, big, "ShuffledHashJoin"),
+        (huge, huge, "SortMergeJoin"),
     ]
     for n_a, n_b, strategy in picks:
         joined, ham = mm._band_join(

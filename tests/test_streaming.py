@@ -478,9 +478,9 @@ def test_stream_dedup_vs_corpus_strategy_pick(spark, sf_dir, monkeypatch):
     """The static side's broadcast is an exact-count PICK, not a
     blanket hint (VERDICT r7 What's-wrong #1): under the bound the
     analyzed plan carries the broadcast hint; above it (bound forced to
-    0) the join runs unhinted — Spark plans the big static side like
-    any other join input instead of pinning it into every executor."""
-    from langchain_memvid_spark.operators import dedup as dd
+    0) the static side is hashed per shuffle partition instead of being
+    pinned into every executor (operators/joinopt.py pair_join)."""
+    from langchain_memvid_spark.operators import joinopt
     from langchain_memvid_spark.operators.dedup import simhash
     from langchain_memvid_spark.streaming import documents as sd
 
@@ -493,12 +493,11 @@ def test_stream_dedup_vs_corpus_strategy_pick(spark, sf_dir, monkeypatch):
         return df._jdf.queryExecution().analyzed().toString()
 
     hinted = sd.near_dedup_stream_vs_corpus(stream, corpus_sigs)
-    assert "UnresolvedHint" in analyzed(hinted) or "ResolvedHint" in analyzed(hinted)
+    assert "strategy=broadcast" in analyzed(hinted)
 
-    monkeypatch.setattr(dd, "_PAIR_BROADCAST_ROW_LIMIT", 0)
-    unhinted = sd.near_dedup_stream_vs_corpus(stream, corpus_sigs)
-    plan = analyzed(unhinted)
-    assert "UnresolvedHint" not in plan and "ResolvedHint" not in plan
+    monkeypatch.setattr(joinopt, "_PAIR_BROADCAST_ROW_LIMIT", 0)
+    plan = analyzed(sd.near_dedup_stream_vs_corpus(stream, corpus_sigs))
+    assert "strategy=broadcast" not in plan and "strategy=shuffle_hash" in plan
 
 
 def test_stream_media_gate_store_handle_pins_config(spark, tmp_path):

@@ -8,12 +8,15 @@ single bench runs on this rig CANNOT adjudicate a <2x delta; an
 alternating min-of-reps comparison on one rig can.
 
 Usage:
-    python tools/bench_ab.py --base <commit> --queries knn_batch,simhash_near_pairs \
-        [--reps 3] [--sf-dir /root/testdata/sf0.1]
+    python tools/bench_ab.py (--base <commit> | --base-dir DIR) \
+        --queries knn_batch,simhash_near_pairs [--reps 3] [--sf-dir DIR]
 
-The base commit runs from a temporary `git worktree` (read-only; the
-working tree is never touched), each timing sample in a FRESH Spark
-subprocess so JIT/cache state can't leak between sides.
+``--base`` runs the base commit from a temporary `git worktree`
+(read-only; the working tree is never touched); ``--base-dir`` runs an
+existing checkout of the base instead (a `git clone` or `git archive`
+copy), for hosts where a worktree cannot be added.  Each timing sample
+runs in a FRESH Spark subprocess so JIT/cache state can't leak between
+sides.
 """
 
 from __future__ import annotations
@@ -80,18 +83,23 @@ def _sample(tree: str, queries: str, sf_dir: str) -> dict[str, float]:
 
 def main() -> None:
     ap = argparse.ArgumentParser()
-    ap.add_argument("--base", required=True, help="base commit to compare against")
+    base = ap.add_mutually_exclusive_group(required=True)
+    base.add_argument("--base", help="base commit to compare against")
+    base.add_argument("--base-dir", help="existing checkout of the base to compare against")
     ap.add_argument("--queries", required=True, help="comma-separated registry names")
     ap.add_argument("--reps", type=int, default=3)
     ap.add_argument("--sf-dir", default="/root/testdata/sf0.1")
     args = ap.parse_args()
 
     names = args.queries.split(",")
-    base_tree = tempfile.mkdtemp(prefix="bench_ab_base_")
-    subprocess.run(
-        ["git", "worktree", "add", "--detach", base_tree, args.base],
-        cwd=REPO, check=True, capture_output=True,
-    )
+    if args.base_dir:
+        base_tree = os.path.abspath(args.base_dir)
+    else:
+        base_tree = tempfile.mkdtemp(prefix="bench_ab_base_")
+        subprocess.run(
+            ["git", "worktree", "add", "--detach", base_tree, args.base],
+            cwd=REPO, check=True, capture_output=True,
+        )
     try:
         mins: dict[str, dict[str, float]] = {s: {} for s in ("base", "head")}
         for rep in range(args.reps):
@@ -111,12 +119,14 @@ def main() -> None:
             }
             for n in names
         }
-        print(json.dumps({"base": args.base, "reps": args.reps, "queries": report}))
+        base = args.base or base_tree
+        print(json.dumps({"base": base, "reps": args.reps, "queries": report}))
     finally:
-        subprocess.run(
-            ["git", "worktree", "remove", "--force", base_tree],
-            cwd=REPO, capture_output=True,
-        )
+        if not args.base_dir:
+            subprocess.run(
+                ["git", "worktree", "remove", "--force", base_tree],
+                cwd=REPO, capture_output=True,
+            )
 
 
 if __name__ == "__main__":

@@ -10,8 +10,9 @@ ReadSchema, Python-eval nodes).
 
 Streaming queries execute microbatches through run_to_memory before the
 returned batch frame exists, so their "plan" here is the final batch
-frame over the sink table; the interesting plan lives inside the gate
-and is documented by the gate's code and the ladder tools instead.
+frame over the sink table.  The interesting plan lives inside the gate,
+which runs a public multimodal/binary.py kernel on every microbatch
+(streaming/media.py): explain that kernel on a static batch instead.
 """
 
 from __future__ import annotations
