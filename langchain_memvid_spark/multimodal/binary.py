@@ -20,12 +20,13 @@ Codecs come in three tiers:
   - heavy-library paths (cv2/PIL/torchaudio) remain out of scope.
 
 Every image/audio/video near-dup, containment, shared-run and
-incremental kernel finds candidates with one banded-Hamming join,
-``_band_join`` (band the signatures, equi-join on (band, val), verify
-the exact Hamming distance — pigeonhole-complete at max_hamming < 4
-bands).  Its join is picked by operators/joinopt.py pair_join, the
-one join-side policy: broadcast the batch side from its exact band-row
-count, else the corpus side, else a shuffled hash or sort-merge join.
+incremental kernel finds candidates with the banded join every LSH
+family shares, operators/dedup.py ``band_join`` (band the signatures,
+equi-join on (band, val), verify the exact Hamming distance —
+pigeonhole-complete at max_hamming < 4 bands).  Its join is picked by
+operators/joinopt.py pair_join, the one join-side policy: broadcast
+the batch side from its exact band-row count, else the corpus side,
+else a shuffled hash or sort-merge join.
 The post-join steps the kernels share have one body each:
 ``_clip_verdicts`` (containment), ``_shared_runs`` (gaps-and-islands
 runs) and ``_incremental_verdict_tail`` (incremental dedup verdicts).
@@ -37,7 +38,7 @@ import hashlib
 import math
 import struct
 import zlib
-from collections.abc import Callable, Iterator
+from collections.abc import Iterator
 
 import numpy as np
 import pandas as pd
@@ -53,6 +54,12 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from langchain_memvid_spark.operators.dedup import (
+    band_join,
+    check_pigeonhole,
+    hamming_band_table,
+    hamming_distance_col,
+)
 from langchain_memvid_spark.operators.joinopt import pair_join
 
 MEDIA_SCHEMA = StructType(
@@ -1017,51 +1024,6 @@ def _drop_hot_buckets(
     return (out, True) if return_dropped else out
 
 
-def _band_join(
-    a_bands: DataFrame,
-    b_bands: DataFrame,
-    a_cols: dict[str, str | F.Column],
-    b_cols: dict[str, str | F.Column],
-    sig_cols: list[str],
-    n_a_rows: int,
-    n_b_rows: int | Callable[[], int] | None = None,
-    keys: tuple[str, ...] = ("band", "val"),
-) -> tuple[DataFrame, F.Column]:
-    """The banded-Hamming candidate join every media kernel runs
-    (Manku et al., WWW 2007): two band tables (hamming_band_table /
-    banded_signature_table output — a persisted corpus band table
-    passes straight in) equi-join on ``keys``; the caller verifies with
-    the returned exact-Hamming column.  Pigeonhole at max_hamming < 4
-    bands puts every true pair in the join.
-
-    ``a_cols`` / ``b_cols`` map output alias → source column name (or
-    a Column expression over the band table); the signature longs
-    become ``__a{j}`` / ``__b{j}``.  The join is picked from EXACT
-    band-row counts by operators/joinopt.py pair_join: broadcast the A
-    side (the batch, or either side of a self-join) when it fits; else
-    broadcast the B side (the corpus) when ``n_b_rows`` — an int, or a
-    callable counted only when this tier is reached — fits; else a
-    shuffled hash or sort-merge join.  ``n_b_rows=None`` skips the B
-    tier (self-joins, the incremental dedups).
-
-    Returns (joined, hamming Column)."""
-    from langchain_memvid_spark.operators.dedup import hamming_distance_col
-
-    a_sig = [f"__a{j}" for j in range(len(sig_cols))]
-    b_sig = [f"__b{j}" for j in range(len(sig_cols))]
-
-    def side(bands: DataFrame, cols: dict, sig: list[str]) -> DataFrame:
-        return bands.select(
-            *[(F.col(s) if isinstance(s, str) else s).alias(al) for al, s in cols.items()],
-            *[F.col(c).alias(al) for c, al in zip(sig_cols, sig)],
-            *keys,
-        )
-
-    a, b = side(a_bands, a_cols, a_sig), side(b_bands, b_cols, b_sig)
-    joined = pair_join(a, b, list(keys), n_a_rows, n_b_rows)
-    return joined, hamming_distance_col(a_sig, b_sig)
-
-
 def _expand_rep_pairs(
     rep_pairs: DataFrame,
     members: DataFrame,
@@ -1142,8 +1104,6 @@ def _collapsed_near_dup_pairs(
     Output pair set is EXACTLY the hamming-≤max_hamming pair listing
     the pre-collapse plan produced: within-group pairs carry hamming
     0, cross-group pairs the verified signature distance."""
-    from langchain_memvid_spark.operators.dedup import check_pigeonhole
-
     n_bands = 4
     check_pigeonhole(max_hamming, n_bands)
     # .cache() (lazy — localCheckpoint launches a job even with
@@ -1177,11 +1137,9 @@ def _rep_hamming_pairs(
     (hot buckets capped), exact hamming verify, a_id < b_id.  The
     linear-output cluster form — a megacluster contributes its group
     SIZE, never its member pairs."""
-    from langchain_memvid_spark.operators.dedup import hamming_band_table
-
     bands = hamming_band_table(groups, sig_cols, n_bands=4, band_bits=band_bits)
     bands = _drop_hot_buckets(bands, n_media, max_bucket)
-    joined, hamming = _band_join(
+    joined, hamming = band_join(
         bands, bands,
         {"a_id": "rep_id", "a_members": "n_members"},
         {"b_id": "rep_id", "b_members": "n_members"},
@@ -1235,8 +1193,6 @@ def image_near_dup_pairs(
     for the unconditional pigeonhole guarantee.
 
     Returns (a_id, b_id, hamming) with a_id < b_id."""
-    from langchain_memvid_spark.operators.dedup import check_pigeonhole
-
     check_pigeonhole(max_hamming, n_bands=4)
     if n_media is None:
         n_media = media.filter(F.col("media_type") == "image").count()
@@ -1714,8 +1670,6 @@ def banded_signature_table(
     Band width follows the one rule every kernel uses: a single
     64-bit signature long splits 4×16; a wide multi-long hash bands
     one 64-bit long per band."""
-    from langchain_memvid_spark.operators.dedup import hamming_band_table
-
     sig_cols = list(sig_cols)
     band_bits = 16 if len(sig_cols) == 1 else 64
     cols = ["media_id"] + (["frame_no", "n_frames"] if frame_grain else [])
@@ -1882,8 +1836,6 @@ def video_near_dup_pairs(
 
     Returns (a_id, b_id, n_frames, max_hamming_seen) with
     a_id < b_id."""
-    from langchain_memvid_spark.operators.dedup import check_pigeonhole, hamming_distance_col
-
     n_bands = 4
     check_pigeonhole(max_hamming, n_bands)
     if hash_bits is None:
@@ -1918,7 +1870,7 @@ def video_near_dup_pairs(
         bands, n_band_rows // n_bands, max_bucket,
         keys=("frame_no", "band", "val"), return_dropped=True,
     )
-    joined, hamming = _band_join(
+    joined, hamming = band_join(
         bands, bands,
         {
             "a_id": "media_id",
@@ -2066,8 +2018,6 @@ def video_contains_image_pairs(
     lifecycle: width comes from the table's own sidecar, drift
     impossible by construction)."""
     from langchain_memvid_spark.multimodal import sigstore as ss
-    from langchain_memvid_spark.operators.dedup import check_pigeonhole
-
     if image_sig is not None:
         image_sig, _ = ss.pin_to_store(image_sig, "image", "image_sig", "image table")
     if (images is None) == (image_sig is None):
@@ -2100,7 +2050,7 @@ def video_contains_image_pairs(
     # count is of the BLOBS, not the derived signature frame (whose
     # count would run the signer an extra pass); with salvage the blob
     # count upper-bounds the signature count, an always-safe pick.
-    joined, hamming = _band_join(
+    joined, hamming = band_join(
         banded_signature_table(frames, sig_cols, frame_grain=True),
         corpus_bands,
         {"video_id": "media_id", "frame_no": "frame_no"},
@@ -2175,8 +2125,6 @@ def video_contains_clip_pairs(
     Returns (a_id container, b_id clip, offset, clip_frames,
     max_hamming_seen) — one row per (container, clip, matching
     offset)."""
-    from langchain_memvid_spark.operators.dedup import check_pigeonhole
-
     check_pigeonhole(max_hamming, 4)
     if hash_bits is None:
         hash_bits = hash_bits_for_corpus(
@@ -2211,8 +2159,6 @@ def _contains_clip_pairs_from_sigs(
     audio_contains_clip_pairs share: seq_key collapse, (band, val)
     self-join grouped by frame-offset delta, df-cap-gated inline vs
     direct verify, asymmetric member expansion."""
-    from langchain_memvid_spark.operators.dedup import check_pigeonhole, hamming_distance_col
-
     check_pigeonhole(max_hamming, 4)
     members, rep_sigs = _collapse_video_groups(sigs, sig_cols)
     rep_sigs = rep_sigs.cache()
@@ -2224,7 +2170,7 @@ def _contains_clip_pairs_from_sigs(
         bands, n_band_rows // 4, max_bucket,
         keys=("band", "val"), return_dropped=True,
     )
-    joined, hamming = _band_join(
+    joined, hamming = band_join(
         bands, bands,
         {"a_id": "media_id", "a_nf": "n_frames", "a_fno": "frame_no"},
         {"b_id": "media_id", "b_nf": "n_frames", "b_fno": "frame_no"},
@@ -2394,8 +2340,6 @@ def video_contains_clip_vs_corpus(
     max_hamming_seen) — one row per (arrival, corpus clip, matching
     offset)."""
     from langchain_memvid_spark.multimodal import sigstore as ss
-    from langchain_memvid_spark.operators.dedup import check_pigeonhole
-
     check_pigeonhole(max_hamming, n_bands=4)
     if clip_sig is None:
         raise ValueError("pass clip_sig (a signature table or store handle)")
@@ -2433,7 +2377,7 @@ def _contains_clip_vs_corpus_verify(
     video_contains_clip_vs_corpus (dhash frame grain) and
     video_audio_contains_clip_vs_corpus (envelope span grain — VERDICT
     r12 item 3): band both sides, join on (band, val) with the
-    exact-count side pick (_band_join: batch first, then corpus, else
+    exact-count side pick (band_join: batch first, then corpus, else
     SMJ), group candidates by the frame-offset delta, and qualify a
     (video, clip, offset) only when EVERY sampled clip frame verifies
     ≤ max_hamming at clip_frame_no + offset."""
@@ -2448,7 +2392,7 @@ def _contains_clip_vs_corpus_verify(
     # is footer-only on the 8 B/frame signature table (pass
     # ``n_corpus_band_rows`` to skip it — the streaming gate counts its
     # persisted band table once per stream)
-    joined, hamming = _band_join(
+    joined, hamming = band_join(
         banded_signature_table(frames, sig_cols, frame_grain=True),
         corpus_bands,
         {"video_id": "media_id", "a_nf": "n_frames", "a_fno": "frame_no"},
@@ -2500,8 +2444,6 @@ def video_shared_run_pairs(
     Returns (a_id, b_id, a_start, b_start, run_frames,
     max_hamming_seen) — one row per maximal shared run
     (a_start/b_start are the run's first frame_no on each side)."""
-    from langchain_memvid_spark.operators.dedup import check_pigeonhole
-
     n_bands = 4
     check_pigeonhole(max_hamming, n_bands)
     if min_run < 1:
@@ -2536,7 +2478,7 @@ def _shared_run_pairs_from_sigs(
     val) self-join grouped by the frame-offset delta, hamming verify,
     gaps-and-islands maximal runs, canonical a_id < b_id."""
     bands = banded_signature_table(sigs, sig_cols, frame_grain=True)
-    joined, hamming = _band_join(
+    joined, hamming = band_join(
         bands, bands,
         {"a_id": "media_id", "a_fno": "frame_no"},
         {"b_id": "media_id", "b_fno": "frame_no"},
@@ -2622,8 +2564,6 @@ def audio_shared_run_pairs(
 
     Returns (a_id, b_id, a_start, b_start, run_frames,
     max_hamming_seen) — one row per maximal shared run."""
-    from langchain_memvid_spark.operators.dedup import check_pigeonhole
-
     check_pigeonhole(max_hamming, n_bands=4)
     if min_run < 1:
         raise ValueError(f"min_run must be >= 1, got {min_run}")
@@ -2704,8 +2644,6 @@ def video_shared_runs_vs_corpus(
     ≥ ``min_run`` aligned frames (starts are each side's first
     frame_no of the run)."""
     from langchain_memvid_spark.multimodal import sigstore as ss
-    from langchain_memvid_spark.operators.dedup import check_pigeonhole
-
     check_pigeonhole(max_hamming, n_bands=4)
     if min_run < 1:
         raise ValueError(f"min_run must be >= 1, got {min_run}")
@@ -2747,11 +2685,11 @@ def _shared_runs_vs_corpus_from_sigs(
     _shared_runs gaps-and-islands step over an arrivals×corpus band
     join (and therefore no a<b canonicalization: the two sides are
     distinct tables), with the vs-corpus exact-count side pick of
-    _band_join shared with _contains_clip_vs_corpus_verify."""
+    band_join shared with _contains_clip_vs_corpus_verify."""
     if corpus_bands is None:
         corpus_bands = banded_signature_table(corpus_sig, sig_cols, frame_grain=True)
     # else: pre-banded frame-grain corpus persisted by the gate
-    joined, hamming = _band_join(
+    joined, hamming = band_join(
         banded_signature_table(frames, sig_cols, frame_grain=True),
         corpus_bands,
         {"video_id": "media_id", "a_fno": "frame_no"},
@@ -2922,8 +2860,6 @@ def video_audio_contains_clip_vs_corpus(
     Returns (video_id, clip_id, offset, clip_frames,
     max_hamming_seen)."""
     from langchain_memvid_spark.multimodal import sigstore as ss
-    from langchain_memvid_spark.operators.dedup import check_pigeonhole
-
     check_pigeonhole(max_hamming, n_bands=4)
     if clip_sig is None:
         raise ValueError(
@@ -3525,8 +3461,6 @@ def audio_contains_clip_pairs(
     Returns (a_id container, b_id clip, offset, clip_frames,
     max_hamming_seen) — offset and clip_frames counted in spans (hop
     units when ``hop_samples`` is set)."""
-    from langchain_memvid_spark.operators.dedup import check_pigeonhole
-
     check_pigeonhole(max_hamming, n_bands=4)
     sigs0 = None
     if hash_bits is None:
@@ -3666,8 +3600,6 @@ def audio_near_dup_pairs(
     Pass ``n_media`` to skip the eager count.
 
     Returns (a_id, b_id, hamming) with a_id < b_id."""
-    from langchain_memvid_spark.operators.dedup import check_pigeonhole
-
     check_pigeonhole(max_hamming, n_bands=4)
     if n_media is None:
         n_media = media.filter(F.col("media_type") == "audio").count()
@@ -3850,8 +3782,6 @@ def _incremental_hamming_verdicts(
     decoded=false even without salvage — it carries no comparable
     content, so routing it to quarantine/review rather than
     verified-novel is the safe verdict for an ingest gate."""
-    from langchain_memvid_spark.operators.dedup import check_pigeonhole
-
     check_pigeonhole(max_hamming, 4)
     # the batch signature table feeds BOTH the band join and the
     # decoded-ids flag — a lazy .cache() stops the Arrow signer from
@@ -3864,7 +3794,7 @@ def _incremental_hamming_verdicts(
         corpus_bands = banded_signature_table(corpus_sig, sig_cols)
     # else: pre-banded corpus (banded_signature_table output, persisted
     # across microbatches by the streaming gates — VERDICT r11 item 1)
-    joined, hamming = _band_join(
+    joined, hamming = band_join(
         banded_signature_table(new_sig, sig_cols), corpus_bands,
         {"new_id": "media_id"}, {"old_id": "media_id"},
         sig_cols, n_new * 4,
@@ -4017,8 +3947,6 @@ def incremental_video_near_dup(
     design, even without salvage — a structurally valid zero-frame
     container (ADVICE r9: no comparable content, so quarantine beats
     verified-novel at an ingest gate)."""
-    from langchain_memvid_spark.operators.dedup import check_pigeonhole
-
     check_pigeonhole(max_hamming, n_bands=4)
     if (corpus_media is None) == (corpus_sig is None):
         raise ValueError("pass exactly one of corpus_media / corpus_sig")
@@ -4036,7 +3964,7 @@ def incremental_video_near_dup(
         corpus_bands = banded_signature_table(corpus_sig, sig_cols, frame_grain=True)
     # else: pre-banded frame-grain corpus (banded_signature_table with
     # frame_grain=True — VERDICT r11 item 1)
-    joined, hamming = _band_join(
+    joined, hamming = band_join(
         banded_signature_table(new_sig, sig_cols, frame_grain=True),
         corpus_bands,
         {"new_id": "media_id", "new_nf": "n_frames"},

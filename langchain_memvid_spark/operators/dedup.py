@@ -16,6 +16,10 @@ oracle reproduces bit-for-bit, so signatures are correctness-checked.
 
 from __future__ import annotations
 
+import operator
+from collections.abc import Callable
+from functools import reduce
+
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -107,16 +111,21 @@ def hamming_band_table(
     n_bands: int = 4,
     band_bits: int = 16,
 ) -> DataFrame:
-    """The ONE banding kernel behind every hamming-LSH family (VERDICT
-    r8 item 8: simhash_near_pairs, the image/audio/video pair operators
-    and the incremental media kernel all used to inline this select):
+    """The ONE banding kernel behind every bit-signature LSH family:
     explode each input row into ``n_bands`` (band, val) rows so
-    candidates come from an equi-join on (band, val) — never all-pairs.
+    candidates come from an equi-join on (band, val) — never all-pairs
+    — run by :func:`band_join`.  Its callers: simhash_near_pairs, the
+    random-hyperplane kernels (embedding_lsh_candidates,
+    incremental_embedding_dedup, topk.topk_join_lsh) and every
+    image/audio/video kernel through
+    multimodal/binary.banded_signature_table.  MinHash buckets band
+    through `_minhash_band_table` instead.
 
     Two signature layouts:
       - ONE sig column (a ≤64-bit signature in a long):
         val = (sig >> band·band_bits) & mask — 4×16 for the media
-        hashes, 4×8 for the 32-bit SimHash.
+        hashes, 4×8 for the 32-bit SimHash, 4×4, 2×8 or 1×16 for the
+        16-bit random-hyperplane signature.
       - ``n_bands`` sig columns (a WIDE hash packed into several
         longs, e.g. 256-bit dHash as 4 longs): val = sig_cols[band]
         verbatim — 64-bit bands, no slicing.
@@ -164,6 +173,108 @@ def hamming_distance_col(
         term = F.bit_count(F.col(a).bitwiseXOR(F.col(b)))
         dist = term if dist is None else dist + term
     return dist
+
+
+def band_join(
+    a_bands: DataFrame,
+    b_bands: DataFrame,
+    a_cols: dict[str, str | F.Column],
+    b_cols: dict[str, str | F.Column],
+    sig_cols: list[str],
+    n_a_rows: int,
+    n_b_rows: int | Callable[[], int] | None = None,
+    keys: tuple[str, ...] = ("band", "val"),
+) -> tuple[DataFrame, F.Column | None]:
+    """The banded candidate join every LSH family runs (Manku et al.,
+    WWW 2007): two band tables (hamming_band_table,
+    `_minhash_band_table` or multimodal/binary.banded_signature_table
+    output — a persisted corpus band table passes straight in)
+    equi-join on ``keys``; the caller verifies the candidates.  For
+    Hamming signatures, pigeonhole at max_hamming < n_bands puts every
+    true pair in the join.
+
+    ``a_cols`` / ``b_cols`` map output alias → source column name (or
+    a Column expression over the band table); the signature columns
+    ``sig_cols`` become ``__a{j}`` / ``__b{j}`` (empty when the caller
+    verifies something else, or nothing).  The join is picked from
+    EXACT band-row counts by operators/joinopt.py pair_join: broadcast
+    the A side (the batch, or either side of a self-join) when it
+    fits; else broadcast the B side (the corpus) when ``n_b_rows`` — an
+    int, or a callable counted only when this tier is reached — fits;
+    else a shuffled hash or sort-merge join.  ``n_b_rows=None`` skips
+    the B tier (self-joins, the incremental dedups).
+
+    Returns (joined, exact-Hamming Column over the signature columns,
+    None when ``sig_cols`` is empty)."""
+    a_sig = [f"__a{j}" for j in range(len(sig_cols))]
+    b_sig = [f"__b{j}" for j in range(len(sig_cols))]
+
+    def side(bands: DataFrame, cols: dict, sig: list[str]) -> DataFrame:
+        return bands.select(
+            *[(F.col(s) if isinstance(s, str) else s).alias(al) for al, s in cols.items()],
+            *[F.col(c).alias(al) for c, al in zip(sig_cols, sig)],
+            *keys,
+        )
+
+    a, b = side(a_bands, a_cols, a_sig), side(b_bands, b_cols, b_sig)
+    joined = pair_join(a, b, list(keys), n_a_rows, n_b_rows)
+    return joined, hamming_distance_col(a_sig, b_sig)
+
+
+def _minhash_band_table(sig: DataFrame, rows_per_band: int) -> DataFrame:
+    """MinHash's band table: every minhash_signatures row, with all its
+    columns, exploded into one (band INT, bucket STRING) row per band of
+    ``rows_per_band`` signature values.  The bucket is those values
+    joined with "_" (the DuckDB oracle builds the same string), so two
+    docs share (band, bucket) exactly when the band's values are all
+    equal.  One explode of band structs, so the signature projection is
+    computed once per row."""
+    n_bands = len(MINHASH_PERMS) // rows_per_band
+    entries = [
+        F.struct(
+            F.lit(b).alias("band"),
+            F.concat_ws(
+                "_",
+                *[
+                    F.col(f"mh{b * rows_per_band + r}").cast("string")
+                    for r in range(rows_per_band)
+                ],
+            ).alias("bucket"),
+        )
+        for b in range(n_bands)
+    ]
+    return sig.select(*sig.columns, F.inline(F.array(*entries)))
+
+
+def _minhash_est(a_cols: list[str], b_cols: list[str]) -> F.Column:
+    """Estimated Jaccard of two MinHash signatures: the fraction of
+    equal positions."""
+    eq = reduce(
+        operator.add,
+        [F.when(F.col(a) == F.col(b), 1).otherwise(0) for a, b in zip(a_cols, b_cols)],
+    )
+    return eq.cast("double") / F.lit(float(len(a_cols)))
+
+
+def _batch_verdicts(
+    scored: DataFrame, score: str, out: str, batch_ids: DataFrame, n_new: int
+) -> DataFrame:
+    """The batch-vs-corpus verdict of the text and vector incremental
+    dedups: ``scored`` holds (new_id, c_id, ``score``) rows that passed
+    the threshold; each batch id (``batch_ids``' one column) gets
+    is_dup, dup_of = the smallest qualifying corpus id, and ``out`` =
+    the best score rounded to 4 places.  min/max absorb duplicate band
+    hits without a distinct.  The aggregate has at most one row per
+    batch id, so it is joined back with the batch's own count: it
+    broadcasts at any batch size the band join broadcast, and the batch
+    side never shuffles."""
+    id_col = batch_ids.columns[0]
+    matches = scored.groupBy("new_id").agg(
+        F.min("c_id").alias("dup_of"), F.round(F.max(score), 4).alias(out)
+    )
+    return pair_join(
+        matches, batch_ids, F.col(id_col) == matches["new_id"], n_new, how="left"
+    ).select(id_col, F.col("dup_of").isNotNull().alias("is_dup"), "dup_of", out)
 
 
 def _rhp_weight(h: int, d: int) -> int:
@@ -724,32 +835,15 @@ def minhash_band_pairs(
     given_sig = sig is not None
     if sig is None:
         sig = minhash_signatures(documents, k, text_col)
-    n = len(MINHASH_PERMS)
-    # one explode of band structs instead of a per-band union — the
-    # signature projection (sha256 per shingle) is computed ONCE per row
-    band_structs = [
-        F.struct(
-            F.lit(band_id).alias("band"),
-            F.concat_ws(
-                "_",
-                *[
-                    F.col(f"mh{band_id * rows_per_band + r}").cast("string")
-                    for r in range(rows_per_band)
-                ],
-            ).alias("bucket"),
-        )
-        for band_id in range(0, n // rows_per_band)
-    ]
     # cache: both self-join sides reference the bucket table, so
     # without it the mapInPandas minhash signer evaluates twice per
     # run (optimization r14 — the ADVICE r13 double-signing shape);
-    # lazy cache, zero extra jobs
-    bucketed = sig.select("doc_id", F.explode(F.array(*band_structs)).alias("bb")).select(
-        "doc_id", F.col("bb.band").alias("band"), F.col("bb.bucket").alias("bucket")
-    ).cache()
-    a = bucketed.select(F.col("doc_id").alias("a_id"), "band", "bucket")
-    b = bucketed.select(F.col("doc_id").alias("b_id"), "band", "bucket")
-    # joinopt.pair_join pick from an EXACT count (the planner's stats
+    # lazy cache, zero extra jobs.  Only the join columns are cached:
+    # nothing verifies the signature after this join.
+    bucketed = (
+        _minhash_band_table(sig, rows_per_band).select("doc_id", "band", "bucket").cache()
+    )
+    # band_join's pair_join pick from an EXACT count (the planner's stats
     # for the RDD-backed mapInPandas product are unreliable — the sf10
     # broadcast-OOM hazard): band rows = n_docs × n_bands.  The count
     # is EAGER at plan-build time — pass n_docs to skip it when the
@@ -758,9 +852,12 @@ def minhash_band_pairs(
     # (callers checkpoint it, so the count is a cheap narrow job).
     if n_docs is None:
         n_docs = (sig if given_sig else documents).count()
+    joined, _ = band_join(
+        bucketed, bucketed, {"a_id": "doc_id"}, {"b_id": "doc_id"}, [],
+        n_docs * (len(MINHASH_PERMS) // rows_per_band), keys=("band", "bucket"),
+    )
     return (
-        pair_join(a, b, ["band", "bucket"], n_docs * len(band_structs))
-        .filter(F.col("a_id") < F.col("b_id"))
+        joined.filter(F.col("a_id") < F.col("b_id"))
         .select("a_id", "b_id")
         .dropDuplicates()
     )
@@ -788,9 +885,9 @@ def incremental_near_dup(
     threshold, NULL when the doc is novel; callers ingest
     ``filter(~is_dup)``.
 
-    The 100 TB plan: both band tables CARRY their signature columns, so
-    with the batch broadcastable (joinopt.pair_join over exact band
-    rows, same pick as simhash_near_pairs) the band join AND the
+    The 100 TB plan: both band tables (`_minhash_band_table`) CARRY
+    their signature columns, so with the batch broadcastable
+    (:func:`band_join` over exact band rows) the band join AND the
     scoring are map-side against the broadcast batch — the corpus is
     ONE embarrassingly-parallel scan with ZERO shuffle; the only
     exchange is the final groupBy over the batch's own doc ids.
@@ -821,70 +918,22 @@ def incremental_near_dup(
         if new_sig is not None
         else minhash_signatures(new_docs, k, text_col).localCheckpoint()
     )
-    n = len(MINHASH_PERMS)
-    n_bands = n // rows_per_band
-
-    def banded(sig: DataFrame, prefix: str) -> DataFrame:
-        structs = [
-            F.struct(
-                F.lit(band).alias("band"),
-                F.concat_ws(
-                    "_",
-                    *[
-                        F.col(f"mh{band * rows_per_band + r}").cast("string")
-                        for r in range(rows_per_band)
-                    ],
-                ).alias("bucket"),
-            )
-            for band in range(n_bands)
-        ]
-        return sig.select(
-            F.col("doc_id").alias(f"{prefix}_id"),
-            *[F.col(f"mh{j}").alias(f"{prefix}mh{j}") for j in range(n)],
-            F.explode(F.array(*structs)).alias("bb"),
-        ).select(
-            f"{prefix}_id",
-            *[f"{prefix}mh{j}" for j in range(n)],
-            F.col("bb.band").alias("band"),
-            F.col("bb.bucket").alias("bucket"),
-        )
-
     if n_new is None:
         n_new = new_docs.count()
-    new_banded = banded(sig_new, "new")
-    eq = None
-    for j in range(n):
-        term = F.when(F.col(f"cmh{j}") == F.col(f"newmh{j}"), 1).otherwise(0)
-        eq = term if eq is None else eq + term
+    mh = [f"mh{j}" for j in range(len(MINHASH_PERMS))]
+    joined, _ = band_join(
+        _minhash_band_table(sig_new, rows_per_band),
+        _minhash_band_table(corpus_sig, rows_per_band),
+        {"new_id": "doc_id"}, {"c_id": "doc_id"}, mh,
+        n_new * (len(MINHASH_PERMS) // rows_per_band), keys=("band", "bucket"),
+    )
     # NOTE: no id-equality guard — batch and corpus ids are SEPARATE
     # namespaces (a store batch's positions start at 0 just like corpus
     # doc ids); filtering c_id != new_id here silently exempted the
     # colliding ids from the gate (caught by the store round-trip test)
-    scored = (
-        pair_join(
-            new_banded, banded(corpus_sig, "c"), ["band", "bucket"], n_new * n_bands
-        )
-        .select("new_id", "c_id", (eq.cast("double") / F.lit(float(n))).alias("est"))
-        .filter(F.col("est") >= threshold)
-    )
-    matches = scored.groupBy("new_id").agg(
-        F.min("c_id").alias("dup_of"),
-        F.round(F.max("est"), 4).alias("jaccard_max"),
-    )
-    # matches ≤ one row per batch doc: broadcast at any batch size the
-    # band join broadcast, so the batch side never shuffles
-    return (
-        pair_join(
-            matches, new_docs.select("doc_id"),
-            new_docs["doc_id"] == matches["new_id"], n_new, how="left",
-        )
-        .select(
-            "doc_id",
-            F.col("dup_of").isNotNull().alias("is_dup"),
-            "dup_of",
-            "jaccard_max",
-        )
-    )
+    est = _minhash_est([f"__a{j}" for j in range(len(mh))], [f"__b{j}" for j in range(len(mh))])
+    scored = joined.select("new_id", "c_id", est.alias("est")).filter(F.col("est") >= threshold)
+    return _batch_verdicts(scored, "est", "jaccard_max", new_docs.select("doc_id"), n_new)
 
 
 def simhash(documents: DataFrame, text_col: str = "text") -> DataFrame:
@@ -1018,35 +1067,19 @@ def embedding_lsh_candidates(
             n = embeddings.count()
         band_bits = rhp_band_bits_for(n, n_planes)
     n_bands = n_planes // band_bits
-    mask = (1 << band_bits) - 1
     sig_df = _rhp_sig_table(embeddings, id_col, vec_col, n_planes, dim)
-    bands = sig_df.select(
-        "vid",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("band"),
-                        F.shiftright("sig", b * band_bits).bitwiseAND(F.lit(mask)).alias("val"),
-                    )
-                    for b in range(n_bands)
-                ]
-            )
-        ).alias("bv"),
-    ).select("vid", F.col("bv.band").alias("band"), F.col("bv.val").alias("val")).cache()
     # cache: both self-join sides reference the band table — without it
     # the mapInPandas GEMM signer evaluates twice per run (optimization
     # r14, the ADVICE r13 double-signing shape); lazy cache, zero extra
-    # jobs.  Join pick: joinopt.pair_join from the exact count (band
+    # jobs.  Join pick: band_join's pair_join from the exact count (band
     # rows = n × n_bands) instead of the blanket always-safe merge — the
     # count is EAGER at plan-build when band_bits didn't already pay it.
-    a = bands.select(F.col("vid").alias("a_id"), "band", "val")
-    b = bands.select(F.col("vid").alias("b_id"), "band", "val")
+    bands = hamming_band_table(sig_df, ["sig"], n_bands=n_bands, band_bits=band_bits).cache()
     if n is None:
         n = embeddings.count()
+    joined, _ = band_join(bands, bands, {"a_id": "vid"}, {"b_id": "vid"}, [], n * n_bands)
     return (
-        pair_join(a, b, ["band", "val"], n * n_bands)
-        .filter(F.col("a_id") < F.col("b_id"))
+        joined.filter(F.col("a_id") < F.col("b_id"))
         .select("a_id", "b_id")
         .distinct()
     )
@@ -1065,77 +1098,40 @@ def incremental_embedding_dedup(
     n_new: int | None = None,
 ) -> DataFrame:
     """Semantic near-dup of a NEW embedding batch against an EXISTING
-    corpus — incremental_near_dup's plan shape on the embedding side:
-    RHP-LSH bands gate candidates, exact cosine scores them, and both
-    the band join and scoring run map-side against the broadcast batch
-    (the band tables carry their vectors), so the corpus is ONE scan
-    with zero corpus-side shuffle; the only exchange is the
-    batch-sized groupBy. min/max aggregation absorbs duplicate band
-    hits without a distinct. Oversized batches fall back to SMJ via
-    the same exact-count pick (the count is EAGER at plan-build; pass
-    ``n_new`` to skip it).
+    corpus: random-hyperplane signatures band through
+    hamming_band_table, :func:`band_join` gates candidates, exact
+    cosine scores them, and `_batch_verdicts` (shared with
+    incremental_near_dup) gives each batch vector its verdict.  Both
+    band tables carry their vectors, so with the batch broadcast the
+    band join and the scoring run map-side: the corpus is ONE scan
+    with zero corpus-side shuffle, and the only exchange is the
+    batch-sized groupBy. Oversized batches fall back to a
+    shuffled-hash or sort-merge band join under the same exact-count
+    pick (the count is EAGER at plan-build; pass ``n_new`` to skip
+    it).
 
     Returns one row per new vector: (vec_id, is_dup, dup_of, cos_max)
     — dup_of = smallest corpus id with cosine ≥ threshold."""
     n_bands = n_planes // band_bits
-    mask = (1 << band_bits) - 1
 
-    def banded(sig: DataFrame, prefix: str) -> DataFrame:
-        return sig.select(
-            F.col("vid").alias(f"{prefix}_id"),
-            F.col("vec").alias(f"{prefix}_vec"),
-            F.explode(
-                F.array(
-                    *[
-                        F.struct(
-                            F.lit(b).alias("band"),
-                            F.shiftright("sig", b * band_bits)
-                            .bitwiseAND(F.lit(mask))
-                            .alias("val"),
-                        )
-                        for b in range(n_bands)
-                    ]
-                )
-            ).alias("bv"),
-        ).select(
-            f"{prefix}_id", f"{prefix}_vec",
-            F.col("bv.band").alias("band"), F.col("bv.val").alias("val"),
-        )
+    def bands(vecs: DataFrame, checkpoint: bool) -> DataFrame:
+        sig = _rhp_sig_table(vecs, id_col, vec_col, n_planes, dim, carry_vec=True)
+        sig = sig.localCheckpoint() if checkpoint else sig
+        return hamming_band_table(sig, ["sig"], n_bands=n_bands, band_bits=band_bits)
 
     if n_new is None:
         n_new = new_vecs.count()
-    new_banded = banded(
-        _rhp_sig_table(new_vecs, id_col, vec_col, n_planes, dim, carry_vec=True)
-        .localCheckpoint(),
-        "new",
-    )
-    sim = cosine_sim(F.col("c_vec"), F.col("new_vec"))
     # no id-equality guard: batch and corpus ids are separate namespaces
     # (see incremental_near_dup)
-    corpus_banded = banded(
-        _rhp_sig_table(corpus_vecs, id_col, vec_col, n_planes, dim, carry_vec=True),
-        "c",
+    joined, _ = band_join(
+        bands(new_vecs, True), bands(corpus_vecs, False),
+        {"new_id": "vid", "new_vec": "vec"}, {"c_id": "vid", "c_vec": "vec"}, [],
+        n_new * n_bands,
     )
-    scored = (
-        pair_join(new_banded, corpus_banded, ["band", "val"], n_new * n_bands)
-        .select("new_id", "c_id", sim.alias("cos"))
-        .filter(F.col("cos") >= threshold)
-    )
-    matches = scored.groupBy("new_id").agg(
-        F.min("c_id").alias("dup_of"),
-        F.round(F.max("cos"), 4).alias("cos_max"),
-    )
-    return (
-        pair_join(
-            matches, new_vecs.select(F.col(id_col).alias("vec_id")),
-            F.col("vec_id") == matches["new_id"], n_new, how="left",
-        )
-        .select(
-            "vec_id",
-            F.col("dup_of").isNotNull().alias("is_dup"),
-            "dup_of",
-            "cos_max",
-        )
+    sim = cosine_sim(F.col("c_vec"), F.col("new_vec"))
+    scored = joined.select("new_id", "c_id", sim.alias("cos")).filter(F.col("cos") >= threshold)
+    return _batch_verdicts(
+        scored, "cos", "cos_max", new_vecs.select(F.col(id_col).alias("vec_id")), n_new
     )
 
 
@@ -1348,18 +1344,11 @@ def minhash_jaccard_estimates(
     n = len(MINHASH_PERMS)
     a = sig.select(F.col("doc_id").alias("a_id"), *[F.col(f"mh{j}").alias(f"a{j}") for j in range(n)])
     b = sig.select(F.col("doc_id").alias("b_id"), *[F.col(f"mh{j}").alias(f"b{j}") for j in range(n)])
-    eq = None
-    for j in range(n):
-        term = F.when(F.col(f"a{j}") == F.col(f"b{j}"), 1).otherwise(0)
-        eq = term if eq is None else eq + term
+    est = _minhash_est([f"a{j}" for j in range(n)], [f"b{j}" for j in range(n)])
     return (
         cand.join(a, "a_id")
         .join(b, "b_id")
-        .select(
-            "a_id",
-            "b_id",
-            F.round(eq.cast("double") / F.lit(float(n)), 4).alias("jaccard_est"),
-        )
+        .select("a_id", "b_id", F.round(est, 4).alias("jaccard_est"))
     )
 
 
@@ -1395,12 +1384,6 @@ def simhash_near_pairs(
     bands = hamming_band_table(
         sh, ["simhash"], n_bands=n_bands, band_bits=band_bits
     ).cache()
-    a = bands.select(
-        F.col("doc_id").alias("a_id"), F.col("simhash").alias("a_sh"), "band", "val"
-    )
-    b = bands.select(
-        F.col("doc_id").alias("b_id"), F.col("simhash").alias("b_sh"), "band", "val"
-    )
     # Join strategy (r6 A/B adjudication): r5's blanket merge hint fixed
     # the sf10 broadcast-OOM but cost a consistent 1.7x at bench SF,
     # where the band table easily broadcasts (base r4 commit vs head,
@@ -1408,17 +1391,19 @@ def simhash_near_pairs(
     # n_bands rows per doc, so one cheap count of the input (metadata-
     # only on a parquet scan) picks the strategy precisely instead of
     # trusting the static planner's default stats for the RDD-backed
-    # simhash plan: the joinopt.pair_join pick (broadcast /
+    # simhash plan: band_join's joinopt.pair_join pick (broadcast /
     # shuffled-hash / always-safe SMJ, optimization r14).
     # The count is EAGER at plan-build time — pass n_docs when the
     # input is a derived frame whose lineage is expensive to count (or
     # when composing plans without executing them) to skip the job.
     if n_docs is None:
         n_docs = documents.count()
+    joined, hamming = band_join(
+        bands, bands, {"a_id": "doc_id"}, {"b_id": "doc_id"}, ["simhash"], n_docs * n_bands
+    )
     return (
-        pair_join(a, b, ["band", "val"], n_docs * n_bands)
-        .filter(F.col("a_id") < F.col("b_id"))
-        .select("a_id", "b_id", F.bit_count(F.col("a_sh").bitwiseXOR(F.col("b_sh"))).alias("hamming"))
+        joined.filter(F.col("a_id") < F.col("b_id"))
+        .select("a_id", "b_id", hamming.alias("hamming"))
         .filter(F.col("hamming") <= max_hamming)
         .dropDuplicates(["a_id", "b_id"])
     )

@@ -6618,11 +6618,21 @@ _DRIVER_GREEN = {
 # inside the driver's ~50-query budget.  ONLY names whose change has
 # actually landed belongs here.
 _CHANGED_THIS_ROUND = (
+    # the text and vector LSH kernels band through hamming_band_table /
+    # _minhash_band_table and join through operators/dedup.py band_join,
+    # and recall_witness dedupes its witness row with a distinct instead
+    # of a limit: outputs are unchanged, plans are re-shaped
+    "minhash_band_pairs", "minhash_jaccard_estimates", "dedup_clusters",
+    "dedup_clusters_star", "canonical_docs", "simhash_near_pairs",
+    "embedding_candidate_pairs", "embedding_cosine_pairs",
+    "incremental_dedup", "incremental_embedding_dedup",
+    "vs_near_dedup_ingest", "ivf_kmeans_search", "pq_search",
+    "ivfpq_search", "lsh_ann_search",
     # the media kernels' nine inline band joins became one banded-Hamming
-    # join (multimodal/binary.py _band_join) and the containment,
+    # join (now operators/dedup.py band_join) and the containment,
     # shared-run and incremental verdict steps one body each: outputs
     # are unchanged, but every query built on them has a re-shaped plan
-    # (22 changed + 0 pending + 28 rotation = exactly the 50 budget)
+    # (15 + 22 changed + 0 pending + 13 rotation = exactly the 50 budget)
     "image_near_dup",
     "image_near_dup_wide",
     "audio_near_dup",
@@ -6651,25 +6661,18 @@ _CHANGED_THIS_ROUND = (
 # Stale-green rotation: greens whose newest driver row is oldest come
 # first.  After round 13 the newest-signal distribution is 46 queries
 # at r10, then 46 at r11, 47 at r12, 50 at r13 — zero failures as
-# latest state anywhere.  The media queries this round's join change
-# re-greens lead _CHANGED_THIS_ROUND, so the rotation keeps its 28
-# oldest non-media names: 22 changed + 0 pending + 28 rotation =
-# exactly 50 = the budget (checked by _reorder_for_driver).  ZERO
-# headroom: the next added query must trim the rotation tail first.
+# latest state anywhere.  The 37 changed queries lead, so the rotation
+# keeps its 13 oldest names that are not changed: 37 changed + 0
+# pending + 13 rotation = exactly 50 = the budget (checked by
+# _reorder_for_driver).  ZERO headroom: the next added query must trim
+# the rotation tail first.
 _STALE_ROTATION = (
-    # newest signal is r10 — media/vs/stream surface first,
-    # relational queries last
+    # newest signal is r10 — media/vs/stream surface first
     "video_exact_dup_groups", "mmr_search",
     "vs_relevance_scores", "vs_metadata_filter_typed",
     "vs_storage_stats", "knn_topk", "ivf_search",
-    "minhash_signatures", "minhash_band_pairs",
-    "dedup_exact", "ngram_jaccard", "simhash", "simhash_near_pairs",
-    "embedding_cosine_pairs", "embedding_quantization",
-    "text_token_counts", "text_quality", "text_lang_id",
-    "text_fingerprint", "stream_near_dedup",
-    "stream_dedup_within_watermark", "udtf_bigram_counts",
-    "decontaminate", "pretrain_pipeline_v2", "pretrain_pipeline_stats",
-    "events_hourly", "events_json_stats", "events_sessionize",
+    "minhash_signatures", "dedup_exact", "ngram_jaccard", "simhash",
+    "embedding_quantization", "text_token_counts",
 )
 
 

@@ -1015,51 +1015,98 @@ def test_hamming_band_table_pigeonhole_property(spark_handle, sigs, wide):
     """The shared banding kernel (dedup.hamming_band_table): every
     signature explodes into exactly n_bands rows; band values match
     the Python slicing reference bit-exactly; and pigeonhole holds —
-    any pair within hamming ≤ n_bands-1 shares at least one
-    (band, val).  Covers both layouts: 4×16-bit slices of one long,
-    and 4 whole longs (wide)."""
+    any pair within hamming ≤ n_bands-1 over the banded bits shares at
+    least one (band, val).  Covers both layouts: one long sliced
+    n_bands × band_bits — 4×16 (the media hashes), 4×4, 2×8 and 1×16
+    (the random-hyperplane widths), each on every drawn signature set
+    — and 4 whole longs (wide)."""
     spark = spark_handle
     if wide:
         rows = [(i, s, s ^ 1, s ^ (1 << 40), s ^ 3) for i, s in enumerate(sigs)]
         df = spark.createDataFrame(
             rows, "media_id long, s0 long, s1 long, s2 long, s3 long"
         )
-        cols, band_bits = ["s0", "s1", "s2", "s3"], 64
-        py_bands = {r[0]: [r[1], r[2], r[3], r[4]] for r in rows}
+        cases = [(["s0", "s1", "s2", "s3"], 4, 64, {r[0]: list(r[1:]) for r in rows})]
 
         def ham(a, b):
             return sum(bin((x ^ y) & (2**64 - 1)).count("1") for x, y in zip(a, b))
 
     else:
+        # a planted near copy: the first signature with its low bit flipped
+        sigs = sigs + [sigs[0] ^ 1]
         df = spark.createDataFrame(
             [(i, s) for i, s in enumerate(sigs)], "media_id long, sig long"
         )
-        cols, band_bits = ["sig"], 16
-        py_bands = {
-            i: [((s & (2**64 - 1)) >> (16 * b)) & 0xFFFF for b in range(4)]
-            for i, s in enumerate(sigs)
-        }
+        cases = [
+            (
+                ["sig"], n_bands, band_bits,
+                {
+                    i: [
+                        ((s & (2**64 - 1)) >> (band_bits * b)) & (2**band_bits - 1)
+                        for b in range(n_bands)
+                    ]
+                    for i, s in enumerate(sigs)
+                },
+            )
+            for n_bands, band_bits in [(4, 16), (4, 4), (2, 8), (1, 16)]
+        ]
 
         def ham(a, b):
             return sum(bin(x ^ y).count("1") for x, y in zip(a, b))
 
-    banded = dedup.hamming_band_table(df, cols, n_bands=4, band_bits=band_bits)
+    for cols, n_bands, band_bits, py_bands in cases:
+        banded = dedup.hamming_band_table(df, cols, n_bands=n_bands, band_bits=band_bits)
+        got = {}
+        for r in banded.collect():
+            got.setdefault(r["media_id"], {})[r["band"]] = r["val"]
+        assert set(got) == set(py_bands)
+        for i, bands in py_bands.items():
+            assert len(got[i]) == n_bands
+            for b in range(n_bands):
+                assert got[i][b] == bands[b], (i, b, n_bands, band_bits)
+        # pigeonhole: hamming ≤ n_bands-1 ⇒ ≥1 shared (band, val)
+        ids = sorted(py_bands)
+        for ai in ids:
+            for bi in ids:
+                if ai < bi and ham(py_bands[ai], py_bands[bi]) < n_bands:
+                    assert any(got[ai][b] == got[bi][b] for b in range(n_bands)), (ai, bi)
+
+
+@given(
+    docs=st.lists(
+        st.lists(st.integers(0, 3), min_size=8, max_size=8), min_size=2, max_size=12
+    ),
+    rows_per_band=st.sampled_from([1, 2, 4, 8]),
+)
+@SET
+def test_minhash_band_table_matches_python_reference(spark_handle, docs, rows_per_band):
+    """dedup._minhash_band_table, the band table of the MinHash
+    kernels: each signature gives exactly 8/rows_per_band (band,
+    bucket) rows, the bucket is the band's values joined by "_", and
+    two docs share a (band, bucket) exactly when their rows_per_band
+    MinHash values for that band are equal.  Values come from a small
+    range so that equal bands are common."""
+    spark = spark_handle
+    n_bands = 8 // rows_per_band
+    sig = spark.createDataFrame(
+        [(i, *v) for i, v in enumerate(docs)],
+        "doc_id long, " + ", ".join(f"mh{j} long" for j in range(8)),
+    )
     got = {}
-    for r in banded.collect():
-        got.setdefault(r["media_id"], {})[r["band"]] = r["val"]
-    assert set(got) == set(py_bands)
-    for i, bands in py_bands.items():
-        assert len(got[i]) == 4
-        for b in range(4):
-            assert got[i][b] == bands[b], (i, b)
-    # pigeonhole: hamming ≤ 3 ⇒ ≥1 shared (band, val)
-    ids = sorted(py_bands)
-    for ai in ids:
-        for bi in ids:
-            if ai >= bi:
-                continue
-            if ham(py_bands[ai], py_bands[bi]) <= 3:
-                assert any(got[ai][b] == got[bi][b] for b in range(4)), (ai, bi)
+    for r in dedup._minhash_band_table(sig, rows_per_band).collect():
+        assert [r[f"mh{j}"] for j in range(8)] == docs[r["doc_id"]]
+        got.setdefault(r["doc_id"], {})[r["band"]] = r["bucket"]
+    assert set(got) == set(range(len(docs)))
+
+    def band(i, b):
+        return docs[i][b * rows_per_band : (b + 1) * rows_per_band]
+
+    for i in got:
+        assert sorted(got[i]) == list(range(n_bands))
+        for b in range(n_bands):
+            assert got[i][b] == "_".join(str(x) for x in band(i, b))
+            for j in got:
+                assert (got[i][b] == got[j][b]) == (band(i, b) == band(j, b)), (i, j, b)
 
 
 def _signed_longs(v: int, n_longs: int) -> list[int]:
@@ -1085,10 +1132,11 @@ def _signed_longs(v: int, n_longs: int) -> list[int]:
 def test_band_join_matches_brute_force_hamming(
     spark_handle, bases, planted, wide, vs_corpus, framed
 ):
-    """multimodal.binary._band_join — the one media candidate join —
-    returns, after its exact-Hamming verify, exactly the brute-force
-    all-pairs set with Hamming ≤ 3, for 64-bit (4×16-bit slices) and
-    256-bit (4 longs) signatures, in the self-join and batch-vs-corpus
+    """dedup.band_join — the one LSH candidate join, here on media
+    signatures — returns, after its exact-Hamming verify, exactly the
+    brute-force all-pairs set with Hamming ≤ 3, for 64-bit (4×16-bit
+    slices) and 256-bit (4 longs) signatures, in the self-join and
+    batch-vs-corpus
     forms, with and without the frame_no key, on every side pick: A
     side broadcast, B side broadcast (a lazy count), shuffled hash,
     sort-merge."""
@@ -1144,7 +1192,7 @@ def test_band_join_matches_brute_force_hamming(
         (huge, huge, "SortMergeJoin"),
     ]
     for n_a, n_b, strategy in picks:
-        joined, ham = mm._band_join(
+        joined, ham = dedup.band_join(
             bands(a_rows), bands(b_rows),
             {"a_id": "media_id", "a_fno": "frame_no"},
             {"b_id": "media_id", "b_fno": "frame_no"},

@@ -93,12 +93,14 @@ def test_codegen_cache_survives_unrelated_shapes(spark, sf_dir):
     """A registry query compiles nothing on its second run, even after
     more distinct plan shapes than Spark's default cache of 100 holds:
     each of the 150 flood queries inlines its own literal, so each is a
-    class of its own."""
-    query = QUERIES["q1_pricing_summary"].fn
-    first = query(spark, sf_dir).collect()
-    for i in range(150):
-        spark.range(3).selectExpr(f"id + {i} AS x").collect()
-    before = codegen_compiles(spark)
-    again = query(spark, sf_dir).collect()
-    assert codegen_compiles(spark) == before
-    assert again == first
+    class of its own.  ``lsh_ann_search`` is the recall-witness shape:
+    a limit inside a codegen stage would name a new counter per run."""
+    for name in ("q1_pricing_summary", "lsh_ann_search"):
+        query = QUERIES[name].fn
+        first = query(spark, sf_dir).collect()
+        for i in range(150):
+            spark.range(3).selectExpr(f"id + {i} AS x").collect()
+        before = codegen_compiles(spark)
+        again = query(spark, sf_dir).collect()
+        assert codegen_compiles(spark) == before, name
+        assert again == first, name

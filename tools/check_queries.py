@@ -3,9 +3,11 @@
 Runs every registry query on Spark and its oracle on DuckDB at the
 given sf dir, then compares row count, column names, and exact values
 (columns sorted by name, rows sorted) — a stricter stand-in for the
-driver's order-insensitive value hash.  Each line also gives the codegen
-classes its Spark side compiled (``session.codegen_compiles``), and the
-last line the sweep's total.
+driver's order-insensitive value hash.  Each line also gives the
+seconds of each side apart (``spark_s``: build and collect the query;
+``oracle_s``: run its DuckDB SQL) and the codegen classes its Spark side
+compiled (``session.codegen_compiles``); the last line has the sweep's
+total.
 
 Usage: python tools/check_queries.py [sf_dir] [query ...]
 """
@@ -87,21 +89,25 @@ def main() -> int:
             failures.append(name)
             print(f"FAIL  {name}: spark error\n{traceback.format_exc()}")
             continue
+        spark_s = time.time() - t0
         compiles = codegen_compiles(spark) - c0
         if qd.oracle is None:
-            print(f"SKIP  {name}: no oracle ({len(sdf)} rows, {time.time()-t0:.1f}s, {compiles} compiles)")
+            print(f"SKIP  {name}: no oracle ({len(sdf)} rows, spark_s={spark_s:.1f}, {compiles} compiles)")
             continue
+        t1 = time.time()
         try:
             ddf = con.sql(qd.oracle).df()
         except Exception:
             failures.append(name)
             print(f"FAIL  {name}: duckdb error\n{traceback.format_exc()}")
             continue
+        oracle_s = time.time() - t1
         ok, msg = compare(sdf, ddf)
         status = "PASS " if ok else "FAIL "
         if not ok:
             failures.append(name)
-        print(f"{status} {name}: {msg} ({len(sdf)} rows, {time.time()-t0:.1f}s, {compiles} compiles)")
+        print(f"{status} {name}: {msg} ({len(sdf)} rows, spark_s={spark_s:.1f} "
+              f"oracle_s={oracle_s:.1f}, {compiles} compiles)")
     unknown = sorted(only - set(QUERIES))
     for name in unknown:
         print(f"FAIL  {name}: no such query in the registry")
