@@ -20,18 +20,55 @@ explicit order column) and scales linearly.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from decimal import Decimal
+
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
-from pyspark.sql.types import IntegerType, LongType, StructField, StructType
+from pyspark.sql.types import DecimalType, FractionalType, IntegerType, StructField, StructType
 
 from langchain_memvid_spark.session import local_frame
 
-_OFFSETS_SCHEMA = StructType(
-    [
-        StructField("__pid", IntegerType(), nullable=False),
-        StructField("__off", LongType(), nullable=False),
-    ]
-)
+
+def partition_offsets(
+    df: DataFrame, aggs: dict[str, Column], start: int = 0
+) -> tuple[DataFrame, DataFrame, list]:
+    """Pin ``df``'s partitioning and compute, per partition, the
+    exclusive running total of each aggregate in ``aggs`` (offset
+    column → per-partition aggregate, e.g. ``F.count("*")`` for row
+    ordinals), starting at ``start``.
+
+    Returns ``(pinned, offsets, totals)``. ``pinned`` is ``df`` plus
+    ``__pid``, checkpointed so that the caller's per-partition windows
+    and this aggregation see the same partitioning (release it with
+    ``session.release`` once the result is materialized). ``offsets``
+    is a local relation of ``__pid`` and the offset columns, for a
+    broadcast join on ``__pid``; ``totals`` holds each running total
+    after the last partition. Decimal sums widen to DECIMAL(38,6) so
+    the running total cannot overflow.
+
+    Every ``__pid`` that has rows has an offset row, so an inner join
+    loses no row, and a non-nullable aggregate gives a NOT NULL offset
+    column. ``start`` reaches the plan only as offset rows: a literal
+    would be inlined into the generated Java source, and every call
+    with a new start would compile classes of its own.
+    """
+    pinned = df.withColumn("__pid", F.spark_partition_id()).localCheckpoint()
+    agged = pinned.groupBy("__pid").agg(*aggs.values())
+    fields = [StructField("__pid", IntegerType(), nullable=False)]
+    zeros = []
+    for name, f in zip(aggs, agged.schema.fields[1:]):
+        if isinstance(f.dataType, DecimalType):
+            fields.append(StructField(name, DecimalType(38, 6), f.nullable))
+            zeros.append(Decimal(start))
+        else:
+            fields.append(StructField(name, f.dataType, f.nullable))
+            zeros.append(float(start) if isinstance(f.dataType, FractionalType) else start)
+    rows, acc = [], zeros
+    for r in sorted(agged.collect()):
+        rows.append((r[0], *acc))
+        acc = [a + (v or 0) for a, v in zip(acc, r[1:])]
+    offsets = local_frame(df.sparkSession, rows or [(0, *zeros)], StructType(fields))
+    return pinned, offsets, acc
 
 
 def add_sequential_ids(
@@ -70,27 +107,11 @@ def sequential_ids(
     """``add_sequential_ids`` plus the partition pin it checkpointed, so
     a caller that materializes the result can release the pin at once
     (the vector store does, after each committed table version)."""
-    pinned = df.withColumn("__pid", F.spark_partition_id()).localCheckpoint()
+    pinned, offsets, _ = partition_offsets(df, {"__off": F.count("*").alias("cnt")}, start)
     w = Window.partitionBy("__pid").orderBy(order_col if order_col else F.monotonically_increasing_id())
-    with_ord = pinned.withColumn("__ord", F.row_number().over(w) - 1)
-
-    counts = {r["__pid"]: r["cnt"] for r in pinned.groupBy("__pid").agg(F.count("*").alias("cnt")).collect()}
-    offsets, acc = {}, start
-    for pid in sorted(counts):
-        offsets[pid] = acc
-        acc += counts[pid]
-
-    # Every __pid that has rows has an offset, so an inner join loses no
-    # row, and NOT NULL offsets keep the id column NOT NULL.  ``start``
-    # reaches the plan only as offset rows: a literal would be inlined
-    # into the generated Java source, and every call with a new start
-    # would compile classes of its own.
-    offsets_df = local_frame(
-        df.sparkSession,
-        [(pid, off) for pid, off in offsets.items()] or [(0, start)], _OFFSETS_SCHEMA
-    )
     ids = (
-        with_ord.join(F.broadcast(offsets_df), "__pid")
+        pinned.withColumn("__ord", F.row_number().over(w) - 1)
+        .join(F.broadcast(offsets), "__pid")
         .withColumn(id_col, (F.col("__off") + F.col("__ord")).cast("long"))
         .drop("__pid", "__ord", "__off")
     )

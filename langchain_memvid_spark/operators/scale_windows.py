@@ -7,8 +7,8 @@ rows, fatal at 100 TB.  The reference's analogues (global frame
 renumbering, index.py:433-435) are O(N) single-node loops, so a naive
 port inherits the same bottleneck.
 
-This module generalizes the two-phase offset pattern from
-``core/ids.py`` (range-partition → per-partition local window →
+This module applies the two-phase offset pattern of
+``core/ids.py`` ``partition_offsets`` (range-partition → per-partition local window →
 broadcast cumulative per-partition offsets) to the window shapes the
 registry needs:
 
@@ -30,41 +30,11 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from langchain_memvid_spark.session import local_frame
+from langchain_memvid_spark.core.ids import partition_offsets
 
 
 def _num_range_partitions(df: DataFrame) -> int:
     return int(df.sparkSession.conf.get("spark.sql.shuffle.partitions", "200"))
-
-
-def _two_phase_offsets(df: DataFrame, val_col: Column | None):
-    """Materialize df's partitioning and compute exclusive per-partition
-    cumulative offsets of ``val_col`` (row counts when None).
-
-    Returns (pinned_df_with___pid, broadcastable offsets DataFrame with
-    columns ``__pid, __off``).  localCheckpoint pins the physical
-    partitioning so the ordinal window and the offset aggregation can't
-    diverge under recomputation (same rationale as core/ids.py:40-47).
-    """
-    from decimal import Decimal
-
-    pinned = df.withColumn("__pid", F.spark_partition_id()).localCheckpoint()
-    agg = F.count("*") if val_col is None else F.sum(val_col)
-    agged = pinned.groupBy("__pid").agg(agg.alias("__part_total"))
-    sum_type = dict(agged.dtypes)["__part_total"]
-    # widen decimal sums so the running cross-partition total can't overflow
-    off_type = "DECIMAL(38,6)" if sum_type.startswith("decimal") else sum_type
-    totals = {r["__pid"]: r["__part_total"] for r in agged.collect()}
-    sample = next((v for v in totals.values() if v is not None), 0)
-    zero = Decimal(0) if isinstance(sample, Decimal) else type(sample)(0)
-    offsets, acc = [], zero
-    for pid in sorted(totals):
-        offsets.append((pid, acc))
-        acc += totals[pid] or zero
-    offsets_df = local_frame(
-        df.sparkSession, offsets or [(0, zero)], f"__pid INT, __off {off_type}"
-    )
-    return pinned, offsets_df, acc
 
 
 def global_row_number(
@@ -87,7 +57,9 @@ def global_row_number(
     """
     cols = [F.col(c) if isinstance(c, str) else c for c in order_cols]
     ranged = df.repartitionByRange(_num_range_partitions(df), *cols)
-    pinned, offsets_df, total = _two_phase_offsets(ranged, None)
+    pinned, offsets_df, (total,) = partition_offsets(
+        ranged, {"__off": F.count("*").alias("__part_total")}
+    )
     w = Window.partitionBy("__pid").orderBy(*cols)
     out = (
         pinned.withColumn("__ord", F.row_number().over(w))
@@ -163,7 +135,7 @@ def trailing_range_sum(
     u = data.unionByName(probes).repartitionByRange(
         _num_range_partitions(df), F.col("__ts")
     )
-    pinned, offsets_df, _ = _two_phase_offsets(u, F.col("__v"))
+    pinned, offsets_df, _ = partition_offsets(u, {"__off": F.sum("__v").alias("__part_total")})
     w = (
         Window.partitionBy("__pid")
         .orderBy("__ts")

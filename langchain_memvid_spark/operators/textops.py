@@ -17,7 +17,6 @@ from langchain_memvid_spark.functions.text import (
     token_count,
 )
 from langchain_memvid_spark.operators.joinopt import pair_join
-from langchain_memvid_spark.session import local_frame
 
 
 def token_counts(documents: DataFrame, text_col: str = "text") -> DataFrame:
@@ -361,16 +360,14 @@ def sequence_packing(
     prefix (`div`), exact at any corpus size — no doubles."""
     from pyspark.sql import Window
 
-    from langchain_memvid_spark.operators.scale_windows import (
-        _num_range_partitions,
-        _two_phase_offsets,
-    )
+    from langchain_memvid_spark.core.ids import partition_offsets
+    from langchain_memvid_spark.operators.scale_windows import _num_range_partitions
 
     toks = documents.select(
         "doc_id", token_count(F.col(text_col)).alias("n_tokens")
     )
     ranged = toks.repartitionByRange(_num_range_partitions(toks), "doc_id")
-    pinned, offsets_df, _total = _two_phase_offsets(ranged, F.col("n_tokens"))
+    pinned, offsets_df, _ = partition_offsets(ranged, {"__off": F.sum("n_tokens").alias("__part_total")})
     w = Window.partitionBy("__pid").orderBy("doc_id")
     return (
         pinned.withColumn("__local", F.sum("n_tokens").over(w))
@@ -475,6 +472,7 @@ def token_budget_select(
 
     Output: (doc_id, n_tokens, quality_score, sel_rank, cum_tokens)
     for selected documents only."""
+    from langchain_memvid_spark.core.ids import partition_offsets
     from langchain_memvid_spark.functions.text import quality_score_cols
     from langchain_memvid_spark.operators.scale_windows import _num_range_partitions
 
@@ -486,22 +484,8 @@ def token_budget_select(
     )
     key = [F.col("quality_score").desc(), F.col("doc_id").asc()]
     ranged = scored.repartitionByRange(_num_range_partitions(scored), *key)
-    # pin the physical partitioning so the offset aggregation and the
-    # ordinal windows cannot diverge under recomputation (same
-    # rationale as scale_windows._two_phase_offsets)
-    pinned = ranged.withColumn("__pid", F.spark_partition_id()).localCheckpoint()
-    agged = pinned.groupBy("__pid").agg(
-        F.sum("n_tokens").alias("__t"), F.count("*").alias("__c")
-    )
-    totals = {r["__pid"]: (r["__t"] or 0, r["__c"]) for r in agged.collect()}
-    offs, t_acc, c_acc = [], 0, 0
-    for pid in sorted(totals):
-        offs.append((pid, t_acc, c_acc))
-        t_acc += totals[pid][0]
-        c_acc += totals[pid][1]
-    offsets_df = local_frame(
-        documents.sparkSession, offs or [(0, 0, 0)], "__pid INT, __toff LONG, __coff LONG"
-    )
+    pinned, offsets_df, _ = partition_offsets(ranged, {
+        "__toff": F.sum("n_tokens").alias("__t"), "__coff": F.count("*").alias("__c")})
     w = Window.partitionBy("__pid").orderBy(*key)
     return (
         pinned.withColumn("__lt", F.sum("n_tokens").over(w))

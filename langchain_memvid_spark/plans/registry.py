@@ -21,6 +21,7 @@ from pyspark.sql import functions as F
 
 from langchain_memvid_spark.operators import dedup, ranking, relational, textops, topk
 from langchain_memvid_spark.operators.dedup import MINHASH_P, MINHASH_PERMS, SIMHASH_BITS
+from langchain_memvid_spark.plans.driver_order import driver_order
 from langchain_memvid_spark.session import local_frame
 from langchain_memvid_spark.functions.text import LANG_STOPWORDS, STOPWORDS_EN
 
@@ -6492,238 +6493,7 @@ def q_vs_score_threshold(spark, sf_dir):
 # ---------------------------------------------------------------------------
 # Driver-check ordering
 # ---------------------------------------------------------------------------
-# The round-1 driver verified exactly the FIRST 50 registry entries in
-# dict (registration) order — it caps the correctness sweep.  To get hard
-# driver signal for every query across rounds, reorder the registry so
-# queries WITHOUT a green driver row yet come first.  _DRIVER_GREEN is the
-# set of names that fully passed (rows+schema+hash, or the intended
-# rows-only check) in the latest CORRECTNESS_r{N}.json; update it each
-# round.
-
-_DRIVER_GREEN = {
-    # CORRECTNESS_r01.json: 48 full passes + ivf_kmeans_search (rows-only
-    # by design — KMeans is not SQL-expressible; its weaker check ran as
-    # intended).
-    "q1_pricing_summary", "q3_shipping_priority", "q5_regional_revenue",
-    "top_customers_per_nation", "orders_rollup", "running_revenue",
-    "customers_without_orders", "urgent_building_customers",
-    "scalar_showcase", "events_hourly", "events_sessionize",
-    "events_json_stats", "knn_topk", "knn_batch", "ivf_search",
-    "dedup_exact", "ngram_jaccard", "simhash", "embedding_cosine_pairs",
-    "text_token_counts", "text_quality", "text_lang_id",
-    "text_fingerprint", "vs_essential_projection", "vs_delete_renumber",
-    "vs_point_lookup", "vs_semi_join", "vs_storage_stats",
-    "q6_forecast_revenue", "q10_returned_items", "q7_nation_volume",
-    "orders_cube", "customer_quartiles", "order_gaps",
-    "monthly_order_stats", "part_type_stats", "event_type_pivot",
-    "above_avg_customers", "doc_length_histogram", "knn_topk_l2",
-    "ivf_centroid_stats", "purchase_attribution", "price_percentiles",
-    "ivf_kmeans_search", "big_spender_customers",
-    "q4_late_shipment_priority",
-    # CORRECTNESS_r02.json: 47 full passes + 3 rows-only-as-intended
-    # (multimodal_features, lsh_ann_search, approx_distinct_stats).
-    "minhash_signatures", "minhash_band_pairs",
-    "minhash_jaccard_estimates", "dedup_clusters", "canonical_docs",
-    "event_funnel", "value_outliers_iqr", "pretrain_pipeline_v2",
-    "udaf_median_price", "stream_near_dedup", "embedding_candidate_pairs",
-    "embedding_quantization", "knn_topk_quantized",
-    "text_bpe_token_counts", "train_val_split", "text_repetition_stats",
-    "decontaminate", "pii_scrub", "media_header_info",
-    "dedup_clusters_star", "q12_priority_by_returnflag",
-    "q14_promo_revenue_share", "q15_top_suppliers", "q18_large_orders",
-    "q22_idle_rich_customers", "q8_market_share",
-    "q17_small_quantity_revenue", "orders_grouping_sets",
-    "simhash_near_pairs", "stream_tumbling_counts",
-    "stream_session_windows", "stream_user_lifetime", "salted_skew_join",
-    "bucketed_colocated_join", "payload_roundtrip", "distinct_counts",
-    "rolling_30d_revenue", "vocab_top_terms",
-    "stream_click_purchase_join", "stream_sliding_activity",
-    "chunk_documents", "chunk_dedup", "tfidf_top_terms",
-    "q19_disjunctive_revenue", "priority_balance_full_outer",
-    "building_without_urgent_except", "cheapest_parts_per_type",
-    "multimodal_features", "lsh_ann_search", "approx_distinct_stats",
-    # CORRECTNESS_r03.json: 49 full passes (multimodal_features stayed
-    # rows-only).  New greens not already listed above:
-    "knn_topk_requantized", "stream_dedup_within_watermark",
-    "udtf_bigram_counts", "window_function_showcase",
-    "quality_filter_summary", "pretrain_pipeline_stats",
-    "orders_unpivot", "q21_sole_late_supplier", "sql_interface_demo",
-    "dense_hourly_counts", "cohort_retention", "filtered_aggregates",
-    "per_user_zscore", "order_age_buckets", "part_name_string_ops",
-    # CORRECTNESS_r04.json: 46 full passes + 4 rows-only-as-intended
-    # (ivf_kmeans_search, pq_search, ivfpq_search, pq_compression_stats
-    # — trained KMeans/PQ codebooks are not SQL-expressible).  New names
-    # not already listed above:
-    "knn_topk_filtered", "sequence_packing", "domain_weighted_sample",
-    "pq_search", "ivfpq_search", "pq_compression_stats",
-    "q9_product_profit", "q13_customer_distribution",
-    "q16_supplier_counts", "q20_excess_shipments", "image_resize_stats",
-    "video_header_info", "video_frames_extract", "stream_ingest_store",
-    "pretrain_pipeline_v3",
-    # CORRECTNESS_r05.json: 45 full passes + 5 self-asserting
-    # rows-only-by-design (ivf_kmeans_search, pq_search, ivfpq_search,
-    # lsh_ann_search, pq_reconstruction_error — non-empty proves the
-    # in-plan recall/error bound held).  New names not already listed:
-    "bm25_topk", "bm25_batch", "hybrid_rrf_search",
-    "duplicate_span_stats", "dedup_spans_clean", "jaccard_containment",
-    "knn_graph_topk", "stratified_sample_exact",
-    "unigram_logprob_scores", "embedding_quantization_int4",
-    "knn_topk_int4", "pq_reconstruction_error", "pretrain_pipeline_v4",
-    "vs_metadata_filter_range",
-    # CORRECTNESS_r06.json: 50 full hash passes, zero failures. New
-    # names not already listed above:
-    "mmr_search", "vs_relevance_scores", "vs_metadata_filter_typed",
-    "stream_ingest_ivf",
-    # CORRECTNESS_r07.json: 50 full hash passes, zero failures (the
-    # five trained-ANN entries now hash their recall/quality witness
-    # rows).  New names not already listed above:
-    "vs_ivf_search", "vs_similarity_join", "embedding_topk_join",
-    "edit_distance_pairs", "semantic_dedup", "token_budget_select",
-    "corpus_shuffle", "incremental_dedup", "incremental_embedding_dedup",
-    "vs_near_dedup_ingest", "html_extract", "bigram_logprob_scores",
-    "ivf_batch_search", "media_salvage_scan", "metadata_first_match",
-    "video_frame_sample", "vs_score_threshold_search",
-    "stream_dedup_vs_corpus", "stream_similarity_join",
-    # CORRECTNESS_r08.json: 50 full hash passes, zero failures.  New
-    # names not already listed above:
-    "image_near_dup", "video_near_dup", "audio_near_dup",
-    "incremental_image_dedup", "incremental_audio_dedup",
-    "incremental_video_dedup", "q2_min_cost_supplier",
-    "q11_important_stock",
-    # CORRECTNESS_r09.json: 50 full hash passes, zero failures.  New
-    # names not already listed above:
-    "image_near_dup_wide", "audio_near_dup_wide",
-    "image_exact_dup_groups", "audio_exact_dup_groups",
-    "video_exact_dup_groups", "media_signature_store_dedup",
-    "stream_media_ingest_gate",
-    # CORRECTNESS_r10.json: 50 full hash passes, zero failures.  New
-    # names not already listed above:
-    "video_contains_image", "stream_video_contains_image",
-    # CORRECTNESS_r11.json: 50 full hash passes, zero failures.  New
-    # names not already listed above:
-    "video_contains_clip", "audio_contains_clip",
-    "stream_video_contains_clip", "sigstore_takedown",
-    # CORRECTNESS_r12.json: 50 full hash passes, zero failures.  New
-    # names not already listed above:
-    "audio_contains_clip_hop",
-    # CORRECTNESS_r13.json: 50 full hash passes, zero failures.  New
-    # names not already listed above:
-    "video_shared_runs", "audio_shared_runs", "video_audio_contains_clip",
-    "stream_video_audio_contains_clip",
-}
-
-
-# Queries whose OUTPUT, ORACLE, or IMPLEMENTATION changed in round 14:
-# their old driver rows don't reflect current code, so they must land
-# inside the driver's ~50-query budget.  ONLY names whose change has
-# actually landed belongs here.
-_CHANGED_THIS_ROUND = (
-    # the text and vector LSH kernels band through hamming_band_table /
-    # _minhash_band_table and join through operators/dedup.py band_join,
-    # and recall_witness dedupes its witness row with a distinct instead
-    # of a limit: outputs are unchanged, plans are re-shaped
-    "minhash_band_pairs", "minhash_jaccard_estimates", "dedup_clusters",
-    "dedup_clusters_star", "canonical_docs", "simhash_near_pairs",
-    "embedding_candidate_pairs", "embedding_cosine_pairs",
-    "incremental_dedup", "incremental_embedding_dedup",
-    "vs_near_dedup_ingest", "ivf_kmeans_search", "pq_search",
-    "ivfpq_search", "lsh_ann_search",
-    # the media kernels' nine inline band joins became one banded-Hamming
-    # join (now operators/dedup.py band_join) and the containment,
-    # shared-run and incremental verdict steps one body each: outputs
-    # are unchanged, but every query built on them has a re-shaped plan
-    # (15 + 22 changed + 0 pending + 13 rotation = exactly the 50 budget)
-    "image_near_dup",
-    "image_near_dup_wide",
-    "audio_near_dup",
-    "audio_near_dup_wide",
-    "video_near_dup",
-    "incremental_image_dedup",
-    "incremental_audio_dedup",
-    "incremental_video_dedup",
-    "media_signature_store_dedup",
-    "sigstore_takedown",
-    "stream_media_ingest_gate",
-    "video_contains_image",
-    "stream_video_contains_image",
-    "video_contains_clip",
-    "audio_contains_clip",
-    "audio_contains_clip_hop",
-    "video_audio_contains_clip",
-    "stream_video_contains_clip",
-    "stream_video_audio_contains_clip",
-    "video_shared_runs",
-    "audio_shared_runs",
-    "stream_video_shared_runs",
-)
-
-
-# Stale-green rotation: greens whose newest driver row is oldest come
-# first.  After round 13 the newest-signal distribution is 46 queries
-# at r10, then 46 at r11, 47 at r12, 50 at r13 — zero failures as
-# latest state anywhere.  The 37 changed queries lead, so the rotation
-# keeps its 13 oldest names that are not changed: 37 changed + 0
-# pending + 13 rotation = exactly 50 = the budget (checked by
-# _reorder_for_driver).  ZERO headroom: the next added query must trim
-# the rotation tail first.
-_STALE_ROTATION = (
-    # newest signal is r10 — media/vs/stream surface first
-    "video_exact_dup_groups", "mmr_search",
-    "vs_relevance_scores", "vs_metadata_filter_typed",
-    "vs_storage_stats", "knn_topk", "ivf_search",
-    "minhash_signatures", "dedup_exact", "ngram_jaccard", "simhash",
-    "embedding_quantization", "text_token_counts",
-)
-
-
-# The driver's correctness sweep caps at ~this many queries per round;
-# the front block must fit it or the tail silently misses re-greening.
-_DRIVER_QUERY_BUDGET = 50
-
-
-def _reorder_for_driver() -> None:
-    """Stable-partition QUERIES into four tiers for the driver's capped
-    (~50-query) correctness sweep:
-
-    1. changed   — this round's output/impl changes; old rows are stale.
-    2. pending   — never had any driver row (new queries this round).
-    3. rotation  — oldest-signal greens, re-verified this round.
-    4. green     — remaining driver-green entries.
-
-    The front block (changed + pending + rotation) must FIT the
-    driver's ~50-query budget: round 10 silently overflowed by one and
-    cost the oldest-signal query its re-green (ADVICE r10), so the
-    arithmetic is now checked here — an overflow warns loudly at
-    import instead of failing silently at judge time.
-    """
-    global QUERIES
-    changed = {n: QUERIES[n] for n in _CHANGED_THIS_ROUND if n in QUERIES}
-    pending = {
-        n: q for n, q in QUERIES.items() if n not in _DRIVER_GREEN and n not in changed
-    }
-    rotation = {
-        n: QUERIES[n]
-        for n in _STALE_ROTATION
-        if n in QUERIES and n not in changed and n not in pending
-    }
-    front = len(changed) + len(pending) + len(rotation)
-    if front > _DRIVER_QUERY_BUDGET:
-        import warnings
-
-        warnings.warn(
-            f"driver front block is {front} queries "
-            f"({len(changed)} changed + {len(pending)} pending + "
-            f"{len(rotation)} rotation) > the ~{_DRIVER_QUERY_BUDGET} "
-            "budget — the tail of _STALE_ROTATION will miss "
-            "re-verification this round; trim the rotation list",
-            stacklevel=2,
-        )
-    green = {
-        n: q
-        for n, q in QUERIES.items()
-        if n in _DRIVER_GREEN and n not in changed and n not in rotation
-    }
-    QUERIES = {**changed, **pending, **rotation, **green}
-
-
-_reorder_for_driver()
+# The driver's DuckDB oracle checks only the first ~50 entries, so the
+# registry puts first what most needs a fresh check: plans/driver_order.py
+# derives that from the committed CORRECTNESS files and plan fingerprints.
+QUERIES = {n: QUERIES[n] for n in driver_order(QUERIES)}

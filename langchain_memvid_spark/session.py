@@ -40,6 +40,14 @@ from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import DataType, StructType, _make_type_verifier
 
 
+def _default_driver_memory() -> str:
+    """A quarter of the host's physical memory, at most 8g: a sweep of
+    the registry at sf0.001 grows an 8g heap to 6 GB resident, which on
+    a 16 GB host shared with another session got the JVM OOM-killed."""
+    quarter_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 4 // 2**20
+    return f"{min(quarter_mb, 8192)}m"
+
+
 def get_spark(
     app_name: str = "langchain-memvid-spark",
     shuffle_partitions: int | None = None,
@@ -60,7 +68,7 @@ def get_spark(
         # events.parquet stores TIMESTAMP(NANOS); read as long + convert
         # (sources/catalog.py truncates to micros, matching DuckDB)
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
+        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", _default_driver_memory()))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         # static: only a session built here gets it.  A registry sweep

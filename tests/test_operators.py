@@ -1709,30 +1709,58 @@ def test_media_dedup_plan_construction_runs_zero_jobs(spark):
     assert all(p is not None for p in plans)
 
 
-def test_driver_front_block_budget_guard():
-    """ADVICE r10 / VERDICT r10 item 2: the rotation arithmetic is
-    guarded — a front block (changed + pending + rotation) exceeding
-    the driver's ~50-query budget warns loudly at reorder time instead
-    of silently dropping the tail's re-green; the CURRENT tiers fit
-    the budget and reorder silently."""
-    import warnings
+def test_driver_order_from_correctness_files(tmp_path):
+    """plans/driver_order.py: the green rule (three matches, or a
+    rows-only no_oracle check with rows), a failed newest row is
+    pending, changed queries lead oldest green first and the front block
+    is cut at 50, and with no CORRECTNESS files the order stays the
+    registration order."""
+    import json
 
-    from langchain_memvid_spark.plans import registry as reg
+    from langchain_memvid_spark.plans import driver_order as do
 
-    orig_rot, orig_changed = reg._STALE_ROTATION, reg._CHANGED_THIS_ROUND
-    try:
-        with warnings.catch_warnings(record=True) as w:
-            warnings.simplefilter("always")
-            reg._reorder_for_driver()  # real tiers: must be silent
-        assert not [x for x in w if "front block" in str(x.message)]
+    ok = {"rows_match": True, "schema_match": True, "hash_match": True, "spark_rows": 3, "err": None}
+    bad = dict(ok, hash_match=False)
+    rounds = {
+        1: {"a": ok, "b": ok, "d": {"err": "no_oracle", "spark_rows": 5},
+            "e": {"err": "no_oracle", "spark_rows": 0}},
+        2: {"a": ok, "b": bad},
+        3: {},
+    }
+    changed = [f"ch{i:02d}" for i in range(60)]
+    for i, n in enumerate(changed):  # green at round 1 + i % 3, reversed
+        rounds[3 - i % 3][n] = ok
+    for r, rows in rounds.items():
+        (tmp_path / f"CORRECTNESS_r{r:02d}.json").write_text(json.dumps(rows))
+    fps = {n: {"fp": "x", "since": 4} for n in changed}
+    fps["a"] = {"fp": "x", "since": 2}  # fingerprint unchanged since its green row
+    (tmp_path / "fingerprints.json").write_text(json.dumps(fps))
 
-        reg._STALE_ROTATION = tuple(reg.QUERIES)[:60]
-        reg._CHANGED_THIS_ROUND = ()
-        with warnings.catch_warnings(record=True) as w:
-            warnings.simplefilter("always")
-            reg._reorder_for_driver()
-        assert [x for x in w if "front block" in str(x.message)]
-    finally:
-        reg._STALE_ROTATION = orig_rot
-        reg._CHANGED_THIS_ROUND = orig_changed
-        reg._reorder_for_driver()  # restore the shipped tier order
+    names = ["a", "b", "c", "d", "e", *changed]
+    t = do.tiers(names, do.correctness_rounds(str(tmp_path)), do.load_fingerprints(str(tmp_path / "fingerprints.json")))
+    assert t["a"] == ("green", 2) and t["d"] == ("green", 1)
+    assert t["b"] == ("pending", 1) and t["c"] == ("pending", 0) and t["e"] == ("pending", 0)
+    assert all(t[n][0] == "changed" for n in changed)
+
+    order = do.driver_order(names, str(tmp_path), str(tmp_path / "fingerprints.json"))
+    by_round = {r: [n for n in changed if t[n][1] == r] for r in (1, 2, 3)}
+    assert order == [*by_round[1], *by_round[2], *by_round[3], "c", "e", "b", "d", "a"]
+    front = order[: do.FRONT]
+    assert set(front) <= set(changed) and set(by_round[1] + by_round[2]) <= set(front)
+
+    assert do.driver_order(names, str(tmp_path / "none"), str(tmp_path / "none.json")) == names
+
+
+def test_plan_fingerprint_stable_in_one_session(spark, sf_dir):
+    """A query fingerprints the same on a second run in the same session,
+    although its plan holds a fresh mkdtemp path (ivf_batch_search
+    writes its IVF layout to one) and new expression and plan ids."""
+    from langchain_memvid_spark.plans import driver_order as do
+    from langchain_memvid_spark.plans.registry import QUERIES
+
+    fps = []
+    for _ in range(2):
+        mark = do.last_execution_id(spark)
+        QUERIES["ivf_batch_search"].fn(spark, sf_dir).toPandas()
+        fps.append(do.plan_fingerprint(spark, mark))
+    assert fps[0] == fps[1]
