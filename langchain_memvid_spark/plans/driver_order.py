@@ -1,13 +1,13 @@
-"""The order in which the driver checks registry queries, derived from
+"""The order in which the oracle check visits registry queries, derived from
 the committed oracle results and plan fingerprints.
 
-The driver's DuckDB oracle checks only the first ~50 registry entries
+The DuckDB oracle check covers only the first ~50 registry entries
 each round, so the registry puts first what most needs a fresh check.
 ``driver_order`` reads each query's newest green round from the
 ``CORRECTNESS_r*.json`` files at the repo root and sorts once:
 
 1. *changed*: its plan fingerprint moved after its newest green round,
-   so no driver row covers its current code;
+   so no correctness row covers its current code;
 2. *pending*: no row at all, or its newest row failed;
 3. the rest;
 
@@ -37,7 +37,7 @@ import re
 
 _REPO = os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 FINGERPRINTS = os.path.join(os.path.dirname(os.path.abspath(__file__)), "fingerprints.json")
-FRONT = 50  # queries the driver checks per round
+FRONT = 50  # queries the oracle check covers per round
 TIERS = ("changed", "pending", "green")
 
 
@@ -88,7 +88,7 @@ def tiers(names, rounds: dict[int, dict[str, dict]], fingerprints: dict[str, dic
 
 
 def driver_order(names, root: str = _REPO, fingerprints_path: str = FINGERPRINTS) -> list[str]:
-    """``names`` (registration order) in the driver's check order."""
+    """``names`` (registration order) in oracle-check order."""
     names = list(names)
     rounds = correctness_rounds(root)
     if not rounds:

@@ -6491,9 +6491,9 @@ def q_vs_score_threshold(spark, sf_dir):
 
 
 # ---------------------------------------------------------------------------
-# Driver-check ordering
+# Oracle-check ordering
 # ---------------------------------------------------------------------------
-# The driver's DuckDB oracle checks only the first ~50 entries, so the
+# The DuckDB oracle check covers only the first ~50 entries, so the
 # registry puts first what most needs a fresh check: plans/driver_order.py
 # derives that from the committed CORRECTNESS files and plan fingerprints.
 QUERIES = {n: QUERIES[n] for n in driver_order(QUERIES)}

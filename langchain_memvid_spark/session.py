@@ -43,7 +43,7 @@ from pyspark.sql.types import DataType, StructType, _make_type_verifier
 def _default_driver_memory() -> str:
     """A quarter of the host's physical memory, at most 8g: a sweep of
     the registry at sf0.001 grows an 8g heap to 6 GB resident, which on
-    a 16 GB host shared with another session got the JVM OOM-killed."""
+    a 16 GB host running other workloads got the JVM OOM-killed."""
     quarter_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 4 // 2**20
     return f"{min(quarter_mb, 8192)}m"
 
